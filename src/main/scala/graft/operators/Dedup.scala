@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for LLM training-data pipelines. Every
   * near-dup variant is bucketed (band-hash or inverted-index joins),
@@ -488,6 +489,15 @@ object Dedup {
     * The convergence check is one `count` action per round on the
     * changed-label set — driver-side control flow, never driver-side
     * data.
+    *
+    * One-partition finish: when the measured edge count fits ONE
+    * partition by the loop width rule (`Loops.adaptedPartitions` is 1,
+    * ≤ 2,097,152 edge rows at the 64 MB default) and the ids are
+    * integral, no round runs — one Spark task (`coalesce(1)` +
+    * `mapPartitions`) runs an exact union-find. Task memory is ≤ 40 B per
+    * edge row, near the 32 B per row that width rule assumes; nothing
+    * is sent to the driver, and the output rows, names and types are
+    * those of the rounds.
     */
   def duplicateClusters(pairs: DataFrame,
       aCol: String = "a_id", bCol: String = "b_id"): DataFrame = {
@@ -524,6 +534,7 @@ object Dedup {
     // label join aligned — one extra pass over state that is small by
     // construction exactly when the branch fires.
     val nE = edges0.count()
+    if (fitsOneTask(edges0, nE)) return componentsInOneTask(edges0, nE)
     // No mid-loop re-narrowing here (unlike the logN contraction,
     // r18): every fixpoint round shuffles the FULL label set plus the
     // edge-join output regardless of how few labels changed — the
@@ -599,13 +610,20 @@ object Dedup {
     * symmetric-difference job runs only when the counts match
     * (typically just the final round). Control-flow actions only,
     * never data to the driver; exactness decided by the exact diff.
+    *
+    * One-partition finish, as in [[duplicateClusters]]: checked on the
+    * entry count AND after every round's count, so a contracting big
+    * loop runs its small tail as one task instead of ~log(n) more
+    * rounds. Same memory bound (≤ 40 B per live edge in that task),
+    * nothing sent to the driver, same output rows, names and types.
     */
   def duplicateClustersLogN(pairs: DataFrame,
       aCol: String = "a_id", bCol: String = "b_id"): DataFrame =
     duplicateClustersLogNWithRounds(pairs, aCol, bCol)._1
 
   /** [[duplicateClustersLogN]] plus the executed round count, so specs
-    * can assert the O(log n) bound actually holds.
+    * can assert the O(log n) bound actually holds (0 when the entry
+    * edge set already fits the one-partition finish).
     */
   def duplicateClustersLogNWithRounds(pairs: DataFrame,
       aCol: String = "a_id", bCol: String = "b_id",
@@ -623,6 +641,7 @@ object Dedup {
     var nEdges = edges.count()
     var rounds = 0
     var converged = nEdges == 0L
+    var oneTask = fitsOneTask(edges, nEdges)
     // same loop discipline as the fixpoint variant: keep round-to-round
     // partition counts stable so the contraction passes stay aligned —
     // at a width derived from the measured edge cardinality (r17
@@ -642,7 +661,7 @@ object Dedup {
     graft.plans.Loops.withShufflePartitions(pairs.sparkSession,
       graft.plans.Loops.adaptedPartitions(pairs.sparkSession, nEdges)) {
     graft.plans.Loops.withStablePartitioning(pairs.sparkSession) {
-    while (!converged && rounds < maxRounds) {
+    while (!converged && !oneTask && rounds < maxRounds) {
       // LARGE-STAR: around each node u, connect every LARGER neighbor
       // to m(u) = min(N(u) ∪ {u}). Each canonical edge is emitted
       // exactly once (from its smaller endpoint's star), so the pass
@@ -691,7 +710,8 @@ object Dedup {
       edges = small
       nEdges = nSmall
       rounds += 1
-      if (!converged &&
+      oneTask = !converged && fitsOneTask(edges, nEdges)
+      if (!converged && !oneTask &&
         nEdges <= sizedFrom / graft.plans.Loops.RenarrowFactor) {
         graft.plans.Loops.renarrow(pairs.sparkSession, nEdges)
         sizedFrom = nEdges
@@ -699,12 +719,91 @@ object Dedup {
     }
     } // withStablePartitioning
     } // withShufflePartitions
+    if (oneTask) return (componentsInOneTask(edges, nEdges), rounds)
     // At the fixpoint every component is a star rooted at its min:
     // each edge (root, v) labels v; roots label themselves.
     val labels = edges.select(col("b").as("doc_id"), col("a").as("cluster_id"))
       .union(edges.select(col("a").as("doc_id"), col("a").as("cluster_id")))
       .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
     (labels, rounds)
+  }
+
+  /** Whether a CC loop's measured edge set (`rows` rows of two id
+    * columns) finishes in one task: it must fit ONE partition by the
+    * loop width rule, and its ids must be integral, so they widen to
+    * `long` and back losslessly. Other id types keep the rounds.
+    */
+  private def fitsOneTask(edges: DataFrame, rows: Long): Boolean =
+    graft.plans.Loops.adaptedPartitions(edges.sparkSession, rows) == 1 &&
+      edges.schema.fields.forall(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      })
+
+  /** Connected components of a one-partition edge set in ONE Spark
+    * task: `coalesce(1)` + `mapPartitions` over [[minLabels]]. Lazy —
+    * the task runs inside the caller's action, nothing is collected
+    * to the driver. Output is `(doc_id, cluster_id)` in the edge
+    * columns' type: every endpoint labelled with its component's
+    * minimum id, the same rows the distributed rounds produce.
+    */
+  private def componentsInOneTask(edges: DataFrame, rows: Long): DataFrame = {
+    val Seq(a, b) = edges.columns.toSeq
+    val idType = edges.schema(a).dataType
+    // the hint presizes the edge buffer; the width rule keeps it small
+    val hint = math.min(rows, (Int.MaxValue - 8) / 2L).toInt
+    edges.select(col(a).cast("long"), col(b).cast("long"))
+      .coalesce(1)
+      .mapPartitions((it: Iterator[Row]) => minLabels(it, hint))(
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("doc_id", "cluster_id")
+      .select(col("doc_id").cast(idType).as("doc_id"),
+        col("cluster_id").cast(idType).as("cluster_id"))
+  }
+
+  /** Exact union-find over a stream of `(long, long)` edge rows: every
+    * endpoint, labelled with the minimum id of its component, ascending
+    * by id. Primitive arrays only — the endpoints (16 B per edge), their
+    * sorted distinct copy (≤ 16 B per edge) and an `int` parent per
+    * node (≤ 8 B per edge) — so memory is ≤ 40 B per edge row and no
+    * id is boxed. Sorting makes node index order id order, and every
+    * union hangs the larger root under the smaller, so each root is
+    * its component's minimum.
+    */
+  private def minLabels(edges: Iterator[Row], sizeHint: Int): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](math.max(2, 2 * sizeHint))
+    var m = 0
+    while (edges.hasNext) {
+      val r = edges.next()
+      if (m + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, 2 * ends.length)
+      ends(m) = r.getLong(0)
+      ends(m + 1) = r.getLong(1)
+      m += 2
+    }
+    val ids = java.util.Arrays.copyOf(ends, m)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < m) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = new Array[Int](n)
+    i = 0
+    while (i < n) { parent(i) = i; i += 1 }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < m) {
+      val u = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i)))
+      val v = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i + 1)))
+      if (u < v) parent(v) = u else if (v < u) parent(u) = v
+      i += 2
+    }
+    Iterator.tabulate(n)(k => (ids(k), ids(find(k))))
   }
 
   /** Incremental-ingest admission: decide, per NEW-batch document,

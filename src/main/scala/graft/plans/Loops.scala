@@ -60,15 +60,15 @@ object Loops {
     * AQE's tiny-shuffle collapsing — so every round of a contracted
     * loop (CC after a few rounds, a BFS frontier) otherwise runs at
     * the session's full shuffle width in pure per-task overhead. The
-    * loop instead sizes its rounds ONCE from the measured state
-    * cardinality (the fusion count it already paid for):
+    * loop instead sizes its rounds from the measured state count:
     * `ceil(rows·bytesPerRow / targetBytes)`, clamped to
     * [1, session width]. `spark.graft.loop.targetPartitionBytes`
     * (default 64 MB) parameterizes the target — guide §2.2's
-    * 100 MB–1 GB band, kept at the low end because loop state is
-    * deserialized row objects, fatter in memory than on the wire. At
-    * 100 TB the clamp leaves big loops at full width; only genuinely
-    * small state narrows.
+    * 100 MB–1 GB band, kept low: loop state is deserialized rows. At
+    * 100 TB big loops stay at full width; only small state narrows.
+    * A result of 1 also ends the CC loops (`Dedup.duplicateClusters*`):
+    * they finish in ONE task, an exact union-find in ≤ 40 B per edge
+    * row (≤ 2,097,152 rows at 64 MB), sending nothing to the driver.
     */
   def adaptedPartitions(spark: SparkSession, rows: Long,
       bytesPerRow: Int = 32): Int = {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -80,6 +81,26 @@ object SqlQueries {
       |       (n.node_natural_key NOT IN (SELECT parent_natural_key FROM nodes WHERE parent_natural_key IS NOT NULL)) AS is_leaf
       |FROM nodes n""".stripMargin
 
+  /** h5's fixed-dims contract: the anchor is ROOT + regions + nations,
+    * and TPC-H fixes |region| = 5 and |nation| = 25 at every scale.
+    */
+  private[graft] val AnchorMaxRows: Int = 1 + 5 + 25
+
+  /** Collect h5's anchor to the driver, reading at most one row past
+    * [[AnchorMaxRows]] and failing, naming the contract, if it is there.
+    * `coalesce(1)` keeps the limited collect one job: over several
+    * partitions Spark's take runs one job to try the first partition,
+    * then another for the rest.
+    */
+  private[graft] def collectAnchor(anchor: DataFrame): Array[Row] = {
+    val rows = anchor.coalesce(1).limit(AnchorMaxRows + 1).collect()
+    require(rows.length <= AnchorMaxRows,
+      s"h5 fixed-dims contract: the hierarchy anchor (ROOT + regions + " +
+        s"nations) must stay at most $AnchorMaxRows rows to be collected " +
+        "to the driver; got more")
+    rows
+  }
+
   /** The recursive walk over the materialized anchor view
     * `nodes_temp_m` — textually identical to [[sparkDimSql]]'s walk/dim
     * with the sub-CTE reference swapped for the view.
@@ -134,7 +155,7 @@ object SqlQueries {
       // no exchange. The walk stays NATIVE WITH RECURSIVE; the oracle
       // stays the single self-contained recursive statement.
       val anchor = s.sql(sparkNodesTempSql)
-      val rows = anchor.collect() // ≤ |regions|+|nations|+1 rows
+      val rows = collectAnchor(anchor)
       s.createDataFrame(java.util.Arrays.asList(rows: _*), anchor.schema)
         .createOrReplaceTempView("nodes_temp_m")
       s.sql(sparkWalkSql)

@@ -845,7 +845,7 @@ object TextQueries {
     // execution — no rows, no results are retained).
     QueryDef("m11_mp4_header_scan", graft.fixtures.Video.oracleSql) {
       (s, dir) =>
-        graft.sources.SessionCache.getOrElseUpdate(s, "m11:q") {
+        graft.sources.SessionCache.getOrElseUpdate(s, s"m11:$dir") {
           graft.operators.Bmff.triage(graft.fixtures.Video.mp4Payloads(s))
             .where(col("is_bmff"))
             .select("doc_id", "brand", "width", "height", "timescale",
@@ -876,7 +876,7 @@ object TextQueries {
     }) { (s, dir) =>
       // same per-session handle memo as m11: the marker-walk unroll's
       // plan is the cost at this row count, not the bytes
-      graft.sources.SessionCache.getOrElseUpdate(s, "m12:q") {
+      graft.sources.SessionCache.getOrElseUpdate(s, s"m12:$dir") {
         graft.operators.Jpeg.triage(graft.fixtures.Images.jpegPayloads(s))
           .where(col("is_jpeg"))
           .select("doc_id", "precision", "height", "width", "components")

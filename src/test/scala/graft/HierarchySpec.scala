@@ -147,4 +147,15 @@ class HierarchySpec extends AnyFunSuite {
     assert(candy.getAs[Double]("sum_sales") == 23.0)
     assert(candy.getAs[Long]("n_cust") == 3L)
   }
+
+  test("h5 anchor collect is bounded by the fixed-dims contract") {
+    import graft.queries.SqlQueries
+    val max = SqlQueries.AnchorMaxRows
+    assert(max === 31)
+    assert(SqlQueries.collectAnchor(spark.range(max).toDF()).length === max)
+    val e = intercept[IllegalArgumentException] {
+      SqlQueries.collectAnchor(spark.range(10L * max).toDF())
+    }
+    assert(e.getMessage.contains("h5 fixed-dims contract"))
+  }
 }

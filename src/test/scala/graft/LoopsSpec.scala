@@ -105,7 +105,6 @@ class LoopsSpec extends AnyFunSuite {
 
   test("logN CC re-narrows as the edge set contracts and stays exact (large-then-contracting fixture)") {
     import graft.operators.Dedup
-    import spark.implicits._
     // a fixture that CONTRACTS hard ENOUGH to trigger the ≥10× renarrow
     // (Loops.RenarrowFactor): 64 dense cliques of 24 nodes — each
     // clique is 276 edges collapsing to a 23-edge star after round 1,
@@ -113,13 +112,7 @@ class LoopsSpec extends AnyFunSuite {
     // logN edge set converges to the n−1-edge star, never to zero, so
     // only redundancy contracts) — chained into one long component:
     // 17727 initial edges, ~1535 after round 1.
-    val cliques = (0 until 64).flatMap { c =>
-      val base = c * 1000L
-      for (i <- 0 until 24; j <- (i + 1) until 24)
-        yield (base + i, base + j)
-    }
-    val chain = (0 until 63).map(c => (c * 1000L, (c + 1) * 1000L))
-    val pairs = (cliques ++ chain).toDF("a_id", "b_id")
+    val pairs = cliqueChain()
     val key = "spark.graft.loop.targetPartitionBytes"
     // 32 B/row target of 1 KB -> 32 rows/partition: initial width
     // min(session, ceil(4287/32)) is > 1 for any multi-core session,
@@ -164,5 +157,84 @@ class LoopsSpec extends AnyFunSuite {
     val narrow = run() // default 64 MB target -> 1 partition for this input
     assert(wide === narrow)
     assert(narrow(12L) === 1L && narrow(102L) === 100L && narrow(201L) === 200L)
+  }
+
+  /** 64 dense 24-cliques chained into one component: 17727 edges,
+    * ~1535 after the first logN round.
+    */
+  private def cliqueChain(): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val cliques = (0 until 64).flatMap { c =>
+      for (i <- 0 until 24; j <- (i + 1) until 24)
+        yield (c * 1000L + i, c * 1000L + j)
+    }
+    (cliques ++ (0 until 63).map(c => (c * 1000L, (c + 1) * 1000L)))
+      .toDF("a_id", "b_id")
+  }
+
+  test("CC one-task finish (entry and mid-loop) leaves the loop confs unchanged, also when its task throws") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    assume(spark.sessionState.conf.numShufflePartitions > 1,
+      "needs a multi-partition session for the entry width to exceed 1")
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    def confs = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val before = confs
+    // The finish is lazy: its one task runs inside the caller's action.
+    // A throwing projection on its output fails exactly that task.
+    def failTask(df: org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception] {
+        df.select(raise_error(lit("injected finish-task failure"))).collect()
+      }
+      assert(e.getMessage.contains("injected finish-task failure"))
+    }
+    // entry finish, both operators
+    val path = (1L to 11L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val (entry, entryRounds) = Dedup.duplicateClustersLogNWithRounds(path)
+    assert(entryRounds === 0)
+    assert(entry.collect().forall(_.getLong(1) == 1L))
+    assert(confs === before)
+    failTask(entry)
+    assert(confs === before)
+    val fix = Dedup.duplicateClusters(path)
+    assert(fix.count() === 12L)
+    failTask(fix)
+    assert(confs === before)
+    // mid-loop finish: one distributed round, then the one-task tail
+    val key = "spark.graft.loop.targetPartitionBytes"
+    spark.conf.set(key, (4096L * 32).toString)
+    val (mid, midRounds) =
+      try Dedup.duplicateClustersLogNWithRounds(cliqueChain())
+      finally spark.conf.unset(key)
+    assert(midRounds === 1, "the contracted tail must finish in one task")
+    assert(confs === before)
+    val got = mid.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size === 64 * 24 && got.values.forall(_ == 0L))
+    failTask(mid)
+    assert(confs === before)
+  }
+
+  test("CC one-task finish keeps the rounds' column names and types; non-integral ids keep the rounds") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val ints = Seq((3, 1), (1, 2), (7, 8)).toDF("a_id", "b_id")
+    val strs = Seq(("c", "a"), ("a", "b"), ("x", "y")).toDF("a_id", "b_id")
+    val key = "spark.graft.loop.targetPartitionBytes"
+    for (pairs <- Seq(ints, strs)) {
+      val oneTask = Seq(Dedup.duplicateClusters(pairs),
+        Dedup.duplicateClustersLogN(pairs))
+      spark.conf.set(key, "32") // one edge row per partition: the rounds
+      val rounds = try Seq(Dedup.duplicateClusters(pairs),
+        Dedup.duplicateClustersLogN(pairs)).map(df => df.schema -> df.collect().toSet)
+        finally spark.conf.unset(key)
+      for ((df, (schema, rows)) <- oneTask.zip(rounds)) {
+        assert(df.schema.map(f => f.name -> f.dataType) ===
+          schema.map(f => f.name -> f.dataType))
+        assert(df.collect().toSet === rows)
+      }
+    }
+    assert(Dedup.duplicateClustersLogNWithRounds(strs)._2 > 0,
+      "string ids do not widen to long: the rounds run")
   }
 }

@@ -16,18 +16,17 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("duplicateClusters equals driver-side union-find on a random graph") {
-    val rnd = new scala.util.Random(42)
-    val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }
-    val got = Dedup.duplicateClusters(edges.toDF("a_id", "b_id")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    // independent union-find with path compression
+  /** Independent driver-side union-find: every endpoint -> the min
+    * member of its component.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
     }
     edges.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
@@ -35,11 +34,30 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
     }
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     // canonical label = min member of the component
-    val byRoot = nodes.groupBy(find)
-    val expect = byRoot.flatMap { case (_, members) =>
+    nodes.groupBy(find).flatMap { case (_, members) =>
       val m = members.min; members.map(_ -> m)
-    }.toMap
-    assert(got === expect)
+    }
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Run `f` under a loop byte target of `bytes`; "32" is one edge row
+    * per partition, so no CC input here fits the one-task finish and
+    * the distributed rounds run.
+    */
+  private def withLoopTarget[T](bytes: String)(f: => T): T = {
+    val key = "spark.graft.loop.targetPartitionBytes"
+    spark.conf.set(key, bytes)
+    try f finally spark.conf.unset(key)
+  }
+
+  test("duplicateClusters equals driver-side union-find on a random graph") {
+    val rnd = new scala.util.Random(42)
+    val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+      .filter { case (a, b) => a != b }
+    assert(labels(Dedup.duplicateClusters(edges.toDF("a_id", "b_id"))) ===
+      unionFind(edges))
   }
 
   test("saltedDistinct equals plain countDistinct under a skewed key draw") {
@@ -86,16 +104,21 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
   test("duplicateClustersLogN equals the min-label fixpoint on random graphs") {
     // Several seeds: cycles, multiple components, dense cores — the
     // two algorithms share no code path, so agreement is strong
-    // evidence both compute true components.
+    // evidence both compute true components. A one-edge-row target
+    // keeps both on their distributed rounds (at the default target
+    // these inputs take the one-task finish on both sides).
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(250)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
         .filter { case (a, b) => a != b }
       val df = edges.toDF("a_id", "b_id")
-      val fix = Dedup.duplicateClusters(df).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val logn = Dedup.duplicateClustersLogN(df).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (fix, (logn, rounds)) = withLoopTarget("32") {
+        (labels(Dedup.duplicateClusters(df)), {
+          val (l, r) = Dedup.duplicateClustersLogNWithRounds(df)
+          (labels(l), r)
+        })
+      }
+      assert(rounds > 0, s"seed $seed: the distributed rounds must run")
       assert(logn === fix, s"seed $seed")
     }
   }
@@ -105,20 +128,62 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
     // path component (diameter 10k ⇒ the fixpoint loop would need
     // ~10k rounds). Large-star/small-star must collapse it in
     // logarithmic rounds and still label every node with the min (0).
+    // The one-edge-row target keeps the rounds distributed (the path
+    // fits the one-task finish at the default target).
     val n = 10000
     val path = spark.range(0, n - 1)
       .select(col("id").as("a_id"), (col("id") + 1).as("b_id"))
-    val (labels, rounds) =
-      Dedup.duplicateClustersLogNWithRounds(path)
-    assert(rounds <= 2 * (math.log(n.toDouble) / math.log(2)).ceil.toInt + 4,
-      s"took $rounds rounds")
-    val got = labels.agg(
-      count(lit(1)).as("n"),
-      sum(col("cluster_id")).as("s"),
-      countDistinct(col("cluster_id")).as("d")).head()
-    assert(got.getLong(0) === n)
-    assert(got.getLong(1) === 0L, "every node must label to the component min 0")
-    assert(got.getLong(2) === 1L)
+    withLoopTarget("32") {
+      val (labels, rounds) =
+        Dedup.duplicateClustersLogNWithRounds(path)
+      assert(rounds > 0, "the distributed rounds must run")
+      assert(rounds <= 2 * (math.log(n.toDouble) / math.log(2)).ceil.toInt + 4,
+        s"took $rounds rounds")
+      val got = labels.agg(
+        count(lit(1)).as("n"),
+        sum(col("cluster_id")).as("s"),
+        countDistinct(col("cluster_id")).as("d")).head()
+      assert(got.getLong(0) === n)
+      assert(got.getLong(1) === 0L, "every node must label to the component min 0")
+      assert(got.getLong(2) === 1L)
+    }
+  }
+
+  test("one-task CC finish equals both distributed variants and union-find") {
+    // Seeded graphs: random cycles over several disjoint components,
+    // with duplicate and reversed copies of some pairs, then the 10k
+    // path. At the default target every one fits one partition, so
+    // both operators take the one-task finish (0 rounds); under the
+    // one-edge-row target both run distributed rounds. All must equal
+    // the driver-side union-find.
+    val graphs = Seq(7, 8, 9).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val base = (0 until 1 + rnd.nextInt(4)).flatMap { c =>
+        val n = 5 + rnd.nextInt(60)
+        Seq.fill(2 * n)((c * 1000L + rnd.nextInt(n), c * 1000L + rnd.nextInt(n)))
+      }.filter { case (a, b) => a != b }
+      val dups = base.filter(_ => rnd.nextInt(5) == 0)
+      val reversed = base.filter(_ => rnd.nextInt(5) == 0).map(_.swap)
+      s"seed $seed" -> rnd.shuffle(base ++ dups ++ reversed)
+    } :+ ("10k path" -> (0L until 9999L).map(i => (i, i + 1)))
+    for ((name, edges) <- graphs) {
+      val df = edges.toDF("a_id", "b_id")
+      val expect = unionFind(edges)
+      val (oneTask, rounds) = Dedup.duplicateClustersLogNWithRounds(df)
+      assert(rounds === 0, s"$name: the default target takes the one-task finish")
+      assert(labels(oneTask) === expect, s"$name: logN one-task finish")
+      assert(labels(Dedup.duplicateClusters(df)) === expect,
+        s"$name: fixpoint one-task finish")
+      withLoopTarget("32") {
+        val (dist, distRounds) = Dedup.duplicateClustersLogNWithRounds(df)
+        assert(distRounds > 0, s"$name: distributed logN rounds must run")
+        assert(labels(dist) === expect, s"$name: distributed logN")
+        // the 10k path would take ~10k min-label rounds
+        if (name != "10k path")
+          assert(labels(Dedup.duplicateClusters(df)) === expect,
+            s"$name: distributed fixpoint")
+      }
+    }
   }
 
   test("max(dense_rank) identity equals per-key countDistinct on random dups") {
