@@ -39,6 +39,9 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
 
+  /** One timed run of one query and the ledger counts it caused. */
+  private final case class Run(sec: Double, counts: MetricsLedger.Counts)
+
   /** Fixed 40-query comparison core (r14 verdict item 9): the stdout
     * query map ROTATES — it carries the slowest queries that fit a
     * strict line budget, so its membership shifts with relative
@@ -84,70 +87,22 @@ object Bench {
     // in the family reads (measured: 15 queries error). Cross-query
     // reclamation stays with the per-pass GC below; only loop-PRIVATE
     // generations are freed eagerly (inside the operators).
-    // Shuffle/spill ledger (r15 verdict item 9): the scale story has
-    // candidate counts and state bytes but no shuffle-write/spill
-    // bytes — the signal that catches "fits at sf1, dies at sf100"
-    // before it ships. A listener accumulates task metrics; once()
-    // reads the counters around each run, so bench_out.json carries
-    // per-query max-over-runs bytes alongside the times. Queries run
-    // sequentially, but listener events arrive on an ASYNC bus: the
-    // last tasks' metrics can still be in flight when save() returns,
-    // so a raw delta is approximate in BOTH directions (late events
-    // bleed into the next query). once() therefore quiesces — polls
-    // until the counters stop moving, outside the timed span — before
-    // snapshotting; residual stragglers from cancelled stages still
-    // only over-attribute, which max-over-runs tolerates.
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            memSpill.addAndGet(m.memoryBytesSpilled)
-            diskSpill.addAndGet(m.diskBytesSpilled)
-          }
-        }
-      })
-    val bytesLedger = // name -> (maxShuffleWrite, maxMemSpill, maxDiskSpill)
-      scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-    // Drain the async listener bus: poll until the three counters hold
-    // still for one 25 ms beat (bounded at ~0.5 s). Runs OUTSIDE the
-    // timed span, so it costs ledger latency, not measured seconds.
-    def quiesce(): (Long, Long, Long) = {
-      var prev = (shuffleW.get, memSpill.get, diskSpill.get)
-      var tries = 0
-      var stable = false
-      while (!stable && tries < 20) {
-        Thread.sleep(25)
-        val cur = (shuffleW.get, memSpill.get, diskSpill.get)
-        stable = cur == prev
-        prev = cur
-        tries += 1
-      }
-      prev
-    }
-    def once(name: String): Option[Double] = {
-      val (sw0, ms0, ds0) = quiesce()
-      val t0 = System.nanoTime()
+    // Per-run job split from the one metrics listener, drained outside
+    // the timed span; bench_out.json's "ledger" aligns with "runs".
+    val ledger = new MetricsLedger(spark.sparkContext)
+    def once(name: String): Option[Run] =
       try {
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val tQuery = (System.nanoTime() - t0) / 1e9
-        val (sw1, ms1, ds1) = quiesce()
-        val d = (sw1 - sw0, ms1 - ms0, ds1 - ds0)
-        val p = bytesLedger.getOrElse(name, (0L, 0L, 0L))
-        bytesLedger(name) =
-          (math.max(p._1, d._1), math.max(p._2, d._2), math.max(p._3, d._3))
-        Some(tQuery)
+        val (sec, counts) = ledger.measure {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        Some(Run(sec, counts))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
       }
-    }
 
     // Between passes, nudge the collector: a full pass drops ~136
     // queries' worth of localCheckpoint RDD references, but their
@@ -158,20 +113,20 @@ object Bench {
     // isolated cost. One System.gc() per pass bounds the carry-over
     // at a single pass's garbage; in-loop generations are already
     // freed eagerly (Loops.releaseCheckpoint).
-    def pass(): Map[String, Option[Double]] = {
+    def pass(): Map[String, Option[Run]] = {
       val m = names.map(n => n -> once(n)).toMap
       System.gc()
       m
     }
-    val warmup: Map[String, Option[Double]] = pass()
+    val warmup: Map[String, Option[Run]] = pass()
     // Interleaved measured passes: pass p runs every query once.
-    val passes: Seq[Map[String, Option[Double]]] =
+    val passes: Seq[Map[String, Option[Run]]] =
       (1 to runsPerQuery).map(_ => pass())
 
     def medianOf(runs: Seq[Double]): Option[Double] =
       if (runs.isEmpty) None else Some(runs.sorted.apply(runs.size / 2))
 
-    val firstRuns: Map[String, Seq[Double]] =
+    val firstRuns: Map[String, Seq[Run]] =
       names.map(n => n -> passes.flatMap(_(n))).toMap
 
     // Stall suspects: median >> the query's own min. Re-measure with
@@ -188,37 +143,38 @@ object Bench {
     // trigger had nothing fast to compare against — the warmup run is
     // an in-process observation of the same plan and a stall can only
     // ADD time, so a fast warmup is valid proof the median is noise.
-    // The reported median still comes from measured runs only.
-    val suspects = names.filter { n =>
-      val rs = firstRuns(n)
-      rs.size >= 2 && {
-        val (mn, md) = ((rs ++ warmup(n)).min, medianOf(rs).get)
+    // The reported median still comes from measured runs only. Each
+    // suspect records which min fired it: "warmup" when the warmup run
+    // is below every measured run, else "measured".
+    val suspects: Seq[(String, String)] = names.flatMap { n =>
+      val rs = firstRuns(n).map(_.sec)
+      val w = warmup(n).map(_.sec)
+      val fired = rs.size >= 2 && {
+        val (mn, md) = ((rs ++ w).min, medianOf(rs).get)
         md > 3 * mn && md - mn > 1.0
       }
+      Option.when(fired)(n -> (if (w.exists(_ < rs.min)) "warmup" else "measured"))
     }
-    val extraRuns: Map[String, Seq[Double]] =
+    val extraRuns: Map[String, Seq[Run]] =
       if (suspects.isEmpty) Map.empty.withDefaultValue(Nil)
       else {
-        System.err.println(s"[bench] re-measuring stall suspects: ${suspects.mkString(",")}")
-        (1 to 4).flatMap(_ => suspects.map(n => n -> once(n)))
+        System.err.println(s"[bench] re-measuring stall suspects: ${suspects.map(_._1).mkString(",")}")
+        (1 to 4).flatMap(_ => suspects.map { case (n, _) => n -> once(n) })
           .groupMap(_._1)(_._2).map { case (n, rs) => n -> rs.flatten.toSeq }
           .withDefaultValue(Nil)
       }
 
     val results = names.map { n =>
       val runs = firstRuns(n) ++ extraRuns(n)
-      (n, runs, medianOf(runs))
+      (n, runs, medianOf(runs.map(_.sec)))
     }
 
     def fmt(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, _, m) => "\"" + k + "\":" + fmt(m.getOrElse(-1.0)) }
-      .mkString("{", ",", "}")
-    val allRuns = results
-      .map { case (k, rs, _) => "\"" + k + "\":" + rs.map(fmt).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val warmupJson = names
-      .map(n => "\"" + n + "\":" + fmt(warmup(n).getOrElse(-1.0)))
-      .mkString("{", ",", "}")
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, _, m) => k -> fmt(m.getOrElse(-1.0)) })
+    val allRuns = obj(results.map { case (k, rs, _) => k -> rs.map(r => fmt(r.sec)).mkString("[", ",", "]") })
+    val warmupJson = obj(names.map(n => n -> fmt(warmup(n).fold(-1.0)(_.sec))))
     val errors = results.collect { case (k, _, None) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.flatMap(_._3).sum
@@ -252,13 +208,10 @@ object Bench {
     }
     val omitted = results.size - picked.size
     println(s"{$fixed,\"queries\":${picked.mkString("{", ",", "}")},\"queries_omitted\":$omitted}")
-    val bytesJson = names.map { n =>
-      val (sw, ms, ds) = bytesLedger.getOrElse(n, (0L, 0L, 0L))
-      "\"" + n + "\":{\"shuffle_write\":" + sw +
-        ",\"mem_spill\":" + ms + ",\"disk_spill\":" + ds + "}"
-    }.mkString("{", ",", "}")
+    val ledgerJson = obj(results.map { case (k, rs, _) => k -> rs.map(_.counts.json).mkString("[", ",", "]") })
+    val stallJson = obj(suspects.map { case (n, by) => n -> ("\"" + by + "\"") })
     val detailJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","core40":$core40Json,"queries":$qs,"errors":$errors,"sf":"$sfDir","runs":$allRuns,"warmup":$warmupJson,"bytes":$bytesJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","core40":$core40Json,"queries":$qs,"errors":$errors,"sf":"$sfDir","runs":$allRuns,"warmup":$warmupJson,"ledger":$ledgerJson,"stall_min_from":$stallJson}"""
     Files.writeString(Paths.get("bench_out.json"), detailJson)
     // Per-core-count copy (r17 verdict item 2): the driver's 8-core
     // scaling leg runs after the 32-core leg and overwrote the only

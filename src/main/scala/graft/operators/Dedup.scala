@@ -1039,7 +1039,9 @@ object Dedup {
       // least(...)+1 ≥ α = ⌈t(an+bn)/(1+t)⌉ ≥ ⌈2t/(1+t)·an⌉ forces
       // pa ≤ an − ⌈2t/(1+t)·an⌉ + 1 already. Adding it explicitly was
       // measured to cut ZERO of the 133k sf0.1 candidate matches
-      // (tools/ProfileMain "d24" replays the A/B) — do not re-add it.
+      // (OPTIMIZATION_r18.md item 4; the A/B is ProfileMain "d24" in
+      // `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`)
+      // — do not re-add it.
       .select("a_id", "b_id")
     // Verify-side joins BROADCAST the per-doc array tables: at test
     // scale they are MBs; at warehouse scale the per-doc gram table

@@ -643,18 +643,6 @@ object Similarity {
     cents
   }
 
-  /** Serve-side cell assignment against a trained centroid table (the
-    * output of [[kmeansQuantized]], possibly round-tripped through
-    * parquet). Returns (idCol, cell_id). Same packed argmin as
-    * training, so serving assignments replay training exactly.
-    */
-  def assignToCells(emb: DataFrame, cents: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val vq = emb.select(col(idCol), quantArr(vecCol).as("vq"))
-    argminCell(vq, cents, idCol)
-      .select(col(idCol), col("cell").as("cell_id"))
-  }
-
   /** Composed IVF-PQ top-k — the standard billion-vector serving
     * layout (IVF cells bound the candidate set, PQ-ADC scores it
     * without touching raw vectors): probe the `nprobe` cells whose
@@ -911,8 +899,10 @@ object Similarity {
       // A checkpointed LogicalRDD reports defaultSizeInBytes
       // (Long.MaxValue) — not an estimate at all. Trusting it here
       // silently forced the shuffle form for every checkpointed
-      // caller (the d=256 spec fixtures and ProfileMain's crossover
-      // runs), so the published "exact" wall times measured the
+      // caller (the d=256 spec fixtures and the d=256 crossover runs:
+      // BENCHNOTES "r16: d=256 crossover re-measured", ProfileMain
+      // "d256" in `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`),
+      // so the published "exact" wall times measured the
       // ~4x-slower sort-merge shape. When stats are dead, size from
       // counted rows × schema row width like cellTopKNeighbors.
       if (est < BigInt(Long.MaxValue) / 4) est <= BigInt(MaxBroadcastBlockBytes)
@@ -1047,7 +1037,9 @@ object Similarity {
     * drop-in for the [[cellTopKNeighbors]] build side when the
     * assignment pass — not the candidate join — becomes the
     * bottleneck (~sf30+), in the regime where the geometry supports
-    * it; `ProfileMain hier` measures the phase wall at any sf.
+    * it. Phase walls: BENCHNOTES "r16: hierarchical probe assignment"
+    * (measured with ProfileMain "hier", in
+    * `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`).
     */
   def ivfProbeAssignmentsHier(emb: DataFrame, centroidIds: Seq[Long],
       nprobe: Int, coarseProbe: Int = 4,
@@ -1181,7 +1173,9 @@ object Similarity {
     * driver's gaussian-blob embeddings a blob straddling several
     * cells leaves two members' (probe, primary) combinations
     * uncovered — recall 0.46 at nprobe=2 / 0.73 at 4, vs 0.998 for
-    * the symmetric form at 4; tools/CellRecallProbe on sf0.1.) A
+    * the symmetric form at 4, on sf0.1: BENCHNOTES "r15: s17
+    * bounded-cell top-k", measured with CellRecallProbe, in
+    * `git show 78c14b7:src/main/scala/graft/tools/CellRecallProbe.scala`.) A
     * pair can share up to nprobe cells, so the per-vector heap keeps
     * k·nprobe entries and the post-merge dedup slices the true
     * top-k — the [[lshTopKNeighbors]] containment argument verbatim:

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One engine query: a Spark implementation plus (when SQL-expressible)
-  * an equivalent DuckDB oracle over the same parquet tables. The driver
-  * hash-compares the two at sf0.01 (see repo root: BASELINE.json).
+/** One engine query: a Spark implementation plus an equivalent DuckDB
+  * oracle over the same parquet tables. The two are hash-compared at
+  * sf0.01 (see repo root: BASELINE.json).
   *
   * Oracle parity rules used throughout (so value hashes match exactly):
   *  - every computed column aliased identically on both sides;
@@ -18,13 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, Some(oracle))
-
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
+    QueryDef(name, fn, oracle)
 }

@@ -255,11 +255,12 @@ object SimilarityQueries {
     // top-4 cell sets intersect — so total candidate work is
     // n·nprobe²·cell ≈ LINEAR in the corpus, and requireBoundedCells
     // refuses a degenerate assignment. Recall vs exact all-pairs
-    // ground truth is measured in SimilaritySpec and
-    // tools/CellRecallProbe (0.998 at sf0.1, 0.997 at realistic sf1,
-    // the d9 declared-contract discipline); the oracle replays the
-    // ENTIRE deterministic
-    // pipeline — integer argmax cell assignment, probe ranking,
+    // ground truth is measured in SimilaritySpec and in BENCHNOTES
+    // "r15: s17 bounded-cell top-k" (0.998 at sf0.1, 0.997 at
+    // realistic sf1, the d9 declared-contract discipline; probe in
+    // `git show 78c14b7:src/main/scala/graft/tools/CellRecallProbe.scala`);
+    // the oracle replays the ENTIRE deterministic pipeline — integer
+    // argmax cell assignment, probe ranking,
     // distinct probe-intersect candidates, quantized cosine, top-k —
     // so the hash gate checks the real algorithm, not a weaker
     // invariant.

@@ -837,7 +837,9 @@ object TextQueries {
     // Handle MEMOIZED per session (r18, the Tables.load prepared-
     // statement shape): the Bmff walk's named-column unroll is ~40
     // stacked Projects, and rebuilding + re-analyzing that plan cost
-    // 0.38 s of pure driver time per invocation (ProfileMain "m11":
+    // 0.38 s of pure driver time per invocation (OPTIMIZATION_r18.md
+    // item 6, ProfileMain "m11" in
+    // `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`:
     // wall 1.40 s, jobs 0.11 s, gap 1.29 s) — 92% of the query's wall
     // was planning the same constant fixture plan again. The cache
     // holds the LAZY analyzed frame only; every run still encodes the

@@ -1,757 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 import graft.Sessions
-import graft.operators.Graph
-import graft.sources.Tables
 
-/** Ad-hoc stage profiler for perf work (not part of the driver
-  * contract): times each phase of a query under investigation so
-  * optimization targets the measured cost, not a guess. Run:
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ProfileMain g1 /root/testdata/sf0.1"
+/** sf-scaling curve for selected queries (a perf tool, outside the
+  * SparkEntry contract): min-of-N per (query, sf dir) into `curve_new.json`, which
+  * `tools/merge_curve.py` merges into `curve_out.json`. Run:
+  *   SPARK_GRAFT_BENCH_ONLY=g1_pagerank SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ProfileMain curve"
+  * Per-query job splits are Bench's `ledger`; the retired one-off modes
+  * are in `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`
+  * (results in BENCHNOTES.md and OPTIMIZATION_r1*.md).
   */
 object ProfileMain {
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("g1")
-    val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val what = args.headOption.getOrElse("curve")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[profile] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-
     what match {
-      case "g1" =>
-        // replicate g1_pagerank phase by phase, twice (warm second pass)
-        for (pass <- 1 to 2) {
-          println(s"[profile] ---- pass $pass ----")
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          val e = sym.select(col("src").cast("long"), col("dst").cast("long"))
-          val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-          val ewd = timed("ewd checkpoint")(e.join(deg, Seq("src")).localCheckpoint())
-          val nodes = timed("nodes checkpoint")(
-            ewd.select(col("src").as("node"))
-              .union(ewd.select(col("dst").as("node"))).distinct()
-              .localCheckpoint())
-          val n = timed("nodes.count")(nodes.count())
-          val p = Graph.Prepared(ewd, nodes, n)
-          val ranks = timed("3 rounds (lazy build)")(Graph.pageRankPrepared(p, iters = 3))
-          val out = ranks
-            .select(col("node"),
-              floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-            .orderBy(col("rank_bp").desc, col("node"))
-            .limit(50)
-          timed("execute loop+topk (noop)") {
-            out.write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "g1s" =>
-        // the scale-free symmetric path (current g1), phase by phase
-        for (pass <- 1 to 3) {
-          println(s"[profile] ---- pass $pass ----")
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          val e = sym.select(col("src").cast("long"), col("dst").cast("long"))
-          val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-          val ewd = timed("ewd checkpoint")(e.join(deg, Seq("src")).localCheckpoint())
-          val loopOut = timed("3 scaled rounds + ckpt") {
-            graft.plans.Loops.withStablePartitioning(spark) {
-              var s = ewd
-                .select(col("dst").as("node"),
-                  (lit(1.0) / col("outdeg")).cast("decimal(30,15)").as("c"))
-                .groupBy("node").agg(sum("c").as("csum"))
-                .select(col("node"),
-                  (lit(1.0 - 0.85) + lit(0.85) * col("csum").cast("double")).as("s"))
-              for (_ <- 2 to 3) {
-                s = ewd
-                  .join(s.withColumnRenamed("node", "src"), Seq("src"))
-                  .select(col("dst").as("node"),
-                    (col("s") / col("outdeg")).cast("decimal(30,15)").as("c"))
-                  .groupBy("node").agg(sum("c").as("csum"))
-                  .select(col("node"),
-                    (lit(1.0 - 0.85) + lit(0.85) * col("csum").cast("double")).as("s"))
-              }
-              s.localCheckpoint()
-            }
-          }
-          val nRow = ewd.select(col("src")).distinct()
-            .agg(count(lit(1)).cast("double").as("n"))
-          val out = loopOut.crossJoin(broadcast(nRow))
-            .select(col("node"), (col("s") / col("n")).as("r"))
-            .select(col("node"),
-              floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-            .orderBy(col("rank_bp").desc, col("node"))
-            .limit(50)
-          timed("divide+topk (noop)") {
-            out.write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "g1real" =>
-        // the ACTUAL g1 entry (pageRankSymmetric with the folded ÷N):
-        // phase 1 = the single ckpt job (edge build + 3 rounds + ÷N),
-        // phase 2 = the caller's top-k action over the O(nodes) ckpt
-        for (pass <- 1 to 4) {
-          println(s"[profile] ---- pass $pass ----")
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          val ranks = timed("pageRankSymmetric (ckpt job)")(
-            Graph.pageRankSymmetric(sym, iters = 3, damping = 0.85))
-          timed("topk action (noop)") {
-            ranks.select(col("node"),
-                floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-              .orderBy(col("rank_bp").desc, col("node"))
-              .limit(50)
-              .write.format("noop").mode("overwrite").save()
-          }
-          graft.plans.Loops.releaseCheckpoint(ranks)
-        }
-      case "g2real" =>
-        // the ACTUAL g2 entry (scale-free symmetric convergence)
-        for (pass <- 1 to 4) {
-          println(s"[profile] ---- pass $pass ----")
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          val conv = timed("pageRankConverged(sym)")(
-            Graph.pageRankConverged(sym, tol = 0.003, maxIters = 12,
-              damping = 0.85, checkEvery = 3, symmetric = true))
-          timed("topk action (noop)") {
-            conv.select(col("node"),
-                floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"),
-                col("iters_run").cast("int").as("iters_run"))
-              .orderBy(col("rank_bp").desc, col("node"))
-              .limit(50)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "g1plan" =>
-        // executed-plan structure of the 3-round loop job (AQE-final):
-        // the scale contract is 3 exchanges (one agg per round), zero
-        // sorts, zero re-exchanges of the checkpointed edge table
-        val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-          .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct()
-        val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        val e = sym.select(col("src").cast("long"), col("dst").cast("long"))
-        val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        val aqeOff = sys.env.get("GRAFT_CKPT_AQE_OFF").contains("1")
-        val ewd =
-          if (aqeOff) {
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try e.join(deg, Seq("src")).localCheckpoint()
-            finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-          } else e.join(deg, Seq("src")).localCheckpoint()
-        println("[plan] ckpt aqeOff=" + aqeOff + " logical=" +
-          ewd.queryExecution.optimizedPlan.getClass.getSimpleName)
-        graft.plans.Loops.withStablePartitioning(spark) {
-          var s = ewd
-            .select(col("dst").as("node"),
-              (lit(1.0) / col("outdeg")).cast("decimal(30,15)").as("c"))
-            .groupBy("node").agg(sum("c").as("csum"))
-            .select(col("node"),
-              (lit(1.0 - 0.85) + lit(0.85) * col("csum").cast("double")).as("s"))
-          for (_ <- 2 to 3) {
-            s = ewd
-              .join(s.withColumnRenamed("node", "src"), Seq("src"))
-              .select(col("dst").as("node"),
-                (col("s") / col("outdeg")).cast("decimal(30,15)").as("c"))
-              .groupBy("node").agg(sum("c").as("csum"))
-              .select(col("node"),
-                (lit(1.0 - 0.85) + lit(0.85) * col("csum").cast("double")).as("s"))
-          }
-          s.write.format("noop").mode("overwrite").save()
-          val plan = s.queryExecution.executedPlan.toString
-          println("[plan] ===== loop executed plan =====")
-          plan.linesIterator.foreach(l => println("[plan] " + l))
-          println("[plan] exchanges=" +
-            "Exchange hashpartitioning".r.findAllIn(plan).size +
-            " sorts=" + "(?m)^\\s*[+:*-]*\\s*Sort ".r.findAllIn(plan).size)
-        }
-      case "p20" =>
-        // p20 phase split: explode+mask agg vs the KMV signature agg
-        import graft.operators.TextOps
-        for (pass <- 1 to 3) {
-          println(s"[profile] ---- pass $pass ----")
-          val docs = Tables.documents(spark, dir)
-          import spark.implicits._
-          val names = timed("collect sources")(
-            docs.select(col("source").cast("string"))
-              .distinct().as[String].collect().sorted)
-          val srcs = broadcast(names.zipWithIndex.toSeq.toDF("source", "sid")
-            .select(col("source"), col("sid").cast("int").as("sid")))
-          val masked = docs.select(col("source").cast("string").as("source"),
-              explode(TextOps.shingles("text")).as("g"))
-            .join(srcs, Seq("source"))
-            .groupBy("g")
-            .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), sid % 64)")).as("mask_0"))
-          timed("explode+mask agg only") {
-            masked.write.format("noop").mode("overwrite").save()
-          }
-          val sids = expr("transform(filter(sequence(0, 63), b -> (shiftright(mask_0, b) & 1) = 1), b -> 0 + b)")
-          timed("…+ sids+count (no kmv)") {
-            masked.select(xxhash64(col("g")).as("h"), sids.as("sids"))
-              .groupBy("sids").agg(count(lit(1)).as("cnt"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed("…+ kmv signature agg") {
-            masked.select(xxhash64(col("g")).as("h"), sids.as("sids"))
-              .groupBy("sids").agg(count(lit(1)).as("cnt"),
-                graft.functions.KmvSketch.signature(512)(col("h")).as("sig"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed("full operator") {
-            graft.operators.Overlap.sourceOverlapExact(docs,
-              graft.operators.TextOps.shingles("text"), k = 512)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      case "g1b" =>
-        // variant: explode-based symmetrization (single e0 subtree) and
-        // AQE toggled off around the fixed-shape loop
-        for (pass <- 1 to 2; aqe <- Seq(true, false)) {
-          println(s"[profile] ---- pass $pass aqe=$aqe ----")
-          spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.select(explode(array(
-              struct(col("src"), col("dst")),
-              struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-            .select(col("e.src"), col("e.dst"))
-          val p = timed("prepare (explode sym)")(Graph.prepare(sym))
-          val out = Graph.pageRankPrepared(p, iters = 3)
-            .select(col("node"),
-              floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-            .orderBy(col("rank_bp").desc, col("node"))
-            .limit(50)
-          timed("execute loop+topk (noop)") {
-            out.write.format("noop").mode("overwrite").save()
-          }
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
-        }
-      case "g1c" =>
-        // which AQE feature costs: broadcast-flip vs coalescing
-        val variants = Seq(
-          "baseline" -> Seq(),
-          "nobcast" -> Seq("spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"),
-          "nocoalesce" -> Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
-          "neither" -> Seq(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-            "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
-        for (pass <- 1 to 2; (vname, confs) <- variants) {
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          val e0 = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-            .join(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey")),
-              col("l_orderkey") === col("o_orderkey"))
-            .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-            .distinct()
-          val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-          val p = Graph.prepare(sym)
-          val out = Graph.pageRankPrepared(p, iters = 3)
-            .select(col("node"),
-              floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-            .orderBy(col("rank_bp").desc, col("node"))
-            .limit(50)
-          timed(s"pass$pass $vname loop+topk") {
-            out.write.format("noop").mode("overwrite").save()
-          }
-          confs.foreach { case (k, _) => spark.conf.unset(k) }
-        }
-      case "d8" =>
-        // d8_simhash_pairs phase split: signature build+export vs the
-        // band-blocked pair join over the read-back parquet.
-        for (pass <- 1 to 2) {
-          graft.sources.SessionCache.clear()
-          val sh = timed(s"pass$pass simhash build+export") {
-            graft.sources.Warehouse.simhashExport(spark, dir)
-          }
-          timed(s"pass$pass pair join") {
-            graft.operators.Dedup.simhashPairsFrom(sh, maxHamming = 4)
-              .orderBy("a_id", "b_id")
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-
-      case "d3" =>
-        // d3_text_stats cost split: which projection dominates —
-        // scan-only, +n_spaces (replace), +n_tokens (regexp array),
-        // +punct_bp (regexp_replace)?
-        val docs = graft.sources.Tables.documents(spark, dir)
-        for (pass <- 1 to 2) {
-          timed(s"pass$pass scan+len") {
-            docs.select(col("doc_id"), length(col("text")))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed(s"pass$pass +n_spaces(regexp)") {
-            docs.select(col("doc_id"),
-              (length(col("text")) - length(regexp_replace(col("text"), " ", ""))))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed(s"pass$pass +n_spaces(replace)") {
-            docs.select(col("doc_id"),
-              (length(col("text")) - length(expr("replace(text, ' ', '')"))))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed(s"pass$pass +n_tokens") {
-            docs.select(col("doc_id"),
-              graft.operators.TextOps.tokenCount("text"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed(s"pass$pass +punct_bp") {
-            docs.select(col("doc_id"),
-              expr("length(regexp_replace(text, '[^A-Za-z0-9 ]', ''))"))
-              .write.format("noop").mode("overwrite").save()
-          }
-          timed(s"pass$pass full d3") {
-            graft.SparkEntry.queries("d3_text_stats")(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-
-      case "s17" =>
-        // phase decomposition of cellTopKNeighbors at the given dir:
-        // assignment cost, candidate volume, cell skew, join+heap cost.
-        // SPARK_GRAFT_PAIRS_PER_TASK overrides the pair-volume
-        // partitioning knob for the r18 width A/B (a huge value forces
-        // the pre-r18 session-constant floor).
-        import graft.operators.Similarity
-        sys.env.get("SPARK_GRAFT_PAIRS_PER_TASK").foreach(v =>
-          spark.conf.set("spark.graft.cell.pairsPerTask", v))
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-        val kCells = math.max(8L, n / 500L).toInt
-        val cents = (0 until kCells).map(i => i.toLong * (n / kCells))
-        val emb = Tables.embeddings(spark, dir)
-        for (pass <- 1 to 2) {
-          println(s"[profile] ---- pass $pass (n=$n K=$kCells) ----")
-          val probes = timed("probe assignments + ckpt")(
-            Similarity.ivfProbeAssignments(emb, cents, 4)
-              .localCheckpoint(true))
-          val hist = timed("cell histogram")(
-            probes.groupBy("cell_id").agg(count(lit(1)).as("m"))
-              .agg(sum(expr("m * (m - 1)")), max(col("m")), sum(expr("m * m"))).collect()(0))
-          println(s"[profile] candPairs=${hist.getLong(0)} maxCellMembers=${hist.getLong(1)} " +
-            s"pairVolume=${hist.getLong(2)} memPartitions=" +
-            Similarity.pairVolumePartitions(spark, hist.getLong(2)))
-          timed("full s17 (noop write)")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4)
-              .write.format("noop").mode("overwrite").save())
-          timed("s17 broadcast form")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4,
-              broadcastMembers = Some(true))
-              .write.format("noop").mode("overwrite").save())
-          timed("s17 shuffle-hash form")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4,
-              broadcastMembers = Some(false))
-              .write.format("noop").mode("overwrite").save())
-        }
-
-      case "d256" =>
-        // d=256 LSH re-entry crossover (r14 verdict item 2): wall time
-        // + candidate volume of the exact label-blocked form vs
-        // selective LSH on the bounded-cluster d=256 fixture (the
-        // SimilaritySpec regime test's fixture, scaled by arg 2)
-        import graft.operators.Similarity
-        import spark.implicits._
-        val nVec = args.lift(1).map(_.toInt).getOrElse(9600)
-        val rnd = new scala.util.Random(777)
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Array[Float], Int)]()
-        var cluster = 0
-        while (out.size < nVec) {
-          val size = 6 + rnd.nextInt(19)
-          val c = Array.fill(256)(rnd.nextGaussian())
-          val cn = math.sqrt(c.map(x => x * x).sum)
-          val sigma = math.sqrt(0.15 / 256)
-          for (_ <- 0 until size if out.size < nVec) {
-            val v = c.map(x => (x / cn + rnd.nextGaussian() * sigma).toFloat)
-            out += ((out.size.toLong, v, cluster % 4))
-          }
-          cluster += 1
-        }
-        val df = out.toSeq.toDF("vec_id", "embedding", "label")
-          .localCheckpoint(true)
-        val brutePairs = df.groupBy("label").count()
-          .agg(sum(expr("count * (count - 1)"))).collect()(0).getLong(0)
-        val lshPairs = Similarity.lshBucketCounts(df, planes = 8,
-            tables = 32, dims = 256)
-          .agg(sum(expr("n * (n - 1)"))).collect()(0).getLong(0)
-        println(s"[d256] n=$nVec brutePairs=$brutePairs lshPairs=$lshPairs ratio=${brutePairs.toDouble / lshPairs}")
-        for (pass <- 1 to 2) {
-          timed(s"pass$pass exact blockTopKNeighbors")(
-            Similarity.blockTopKNeighbors(df, k = 3, minCosBp = 2000)
-              .write.format("noop").mode("overwrite").save())
-          timed(s"pass$pass lshTopKNeighbors p8 t32")(
-            Similarity.lshTopKNeighbors(df, k = 3, minCosBp = 2000,
-              planes = 8, tables = 32, dims = 256)
-              .write.format("noop").mode("overwrite").save())
-        }
-
-      case "s17plan" =>
-        import graft.operators.Similarity
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-        val kCells = math.max(8L, n / 500L).toInt
-        val cents = (0 until kCells).map(i => i.toLong * (n / kCells))
-        val df = Similarity.cellTopKNeighbors(Tables.embeddings(spark, dir),
-          k = 3, minCosBp = 2000, centroidIds = cents, nprobe = 4)
-        val plan = df.queryExecution.executedPlan.toString
-        println(s"[profile] n=$n K=$kCells BroadcastHashJoin=${plan.contains("BroadcastHashJoin")} SortMergeJoin=${plan.contains("SortMergeJoin")} ShuffledHashJoin=${plan.contains("ShuffledHashJoin")}")
-
-      case "s17hier" =>
-        // end-to-end s17 (cellTopKNeighbors) with the flat assignment
-        // vs the hierarchical knob at production coarseProbe=4 — the
-        // serving-path decade row for the ~sf30 assignment scale path
-        // (the `hier` case below isolates the assignment phase only)
-        import graft.operators.Similarity
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-        val kCells = math.max(8L, n / 500L).toInt
-        val cents = (0 until kCells).map(i => i.toLong * (n / kCells))
-        val nG = math.max(1, math.round(math.sqrt(kCells.toDouble)).toInt)
-        val cp = math.min(4, nG)
-        val emb = Tables.embeddings(spark, dir).localCheckpoint(true)
-        println(s"[profile] n=$n K=$kCells nG=$nG coarseProbe=$cp")
-        for (pass <- 1 to 2) {
-          timed(s"pass$pass s17 flat (end-to-end)")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4)
-              .write.format("noop").mode("overwrite").save())
-          timed(s"pass$pass s17 hier cp=$cp (end-to-end)")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4,
-              hierCoarseProbe = Some(cp))
-              .write.format("noop").mode("overwrite").save())
-        }
-
-      case "s17int8" =>
-        // int8-membership A/B (r16 verdict stretch item): same query,
-        // float vs int8-packed build side, both FORCED forms — the
-        // broadcast-regime extension is the point (the int8 pack cuts
-        // the counted build bytes ~(80+4d)/(80+d), pushing the 512 MB
-        // gate ~3-4× further out in corpus size), so measure both the
-        // broadcast wall AND the neighbor-set agreement vs the float
-        // grid at this sf.
-        import graft.operators.Similarity
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-        val kCells = math.max(8L, n / 500L).toInt
-        val cents = (0 until kCells).map(i => i.toLong * (n / kCells))
-        val emb = Tables.embeddings(spark, dir).localCheckpoint(true)
-        val d = emb.select(size(col("embedding"))).first().getInt(0)
-        val members = n * 4L // nprobe rows per vector
-        println(s"[profile] n=$n K=$kCells d=$d est build bytes: " +
-          s"float=${members * (80L + 4L * d)} int8=${members * (80L + d)}")
-        for (pass <- 1 to 2) {
-          timed(s"pass$pass s17 float broadcast")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4, broadcastMembers = Some(true))
-              .write.format("noop").mode("overwrite").save())
-          timed(s"pass$pass s17 int8 broadcast")(
-            Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-              centroidIds = cents, nprobe = 4, broadcastMembers = Some(true),
-              int8Members = true)
-              .write.format("noop").mode("overwrite").save())
-        }
-        // neighbor-set agreement (rank-insensitive): fraction of
-        // (a_id, b_id) top-k edges preserved across the grid change
-        val f = Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-          centroidIds = cents, nprobe = 4)
-          .select(col("a_id"), col("b_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val q8 = Similarity.cellTopKNeighbors(emb, k = 3, minCosBp = 2000,
-          centroidIds = cents, nprobe = 4, int8Members = true)
-          .select(col("a_id"), col("b_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        println(f"[profile] edge agreement: |float|=${f.size} |int8|=${q8.size} " +
-          f"jaccard=${(f & q8).size.toDouble / math.max(1, (f | q8).size)}%.4f")
-
-      case "hier" =>
-        // assignment-phase wall: flat n×K scoring vs hierarchical
-        // √K-pruned scoring on the dir's embeddings (recall regime
-        // caveat lives in SimilaritySpec — this measures the
-        // arithmetic, which is geometry-independent)
-        import graft.operators.Similarity
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-        val kCells = math.max(8L, n / 500L).toInt
-        val cents = (0 until kCells).map(i => i.toLong * (n / kCells))
-        val emb = Tables.embeddings(spark, dir).localCheckpoint(true)
-        for (pass <- 1 to 2) {
-          timed(s"pass$pass flat ivfProbeAssignments (K=$kCells)")(
-            Similarity.ivfProbeAssignments(emb, cents, 4)
-              .write.format("noop").mode("overwrite").save())
-          timed(s"pass$pass hier (sqrtK groups, coarseProbe=4)")(
-            Similarity.ivfProbeAssignmentsHier(emb, cents, 4)
-              .write.format("noop").mode("overwrite").save())
-        }
-
-      case "bpe" =>
-        // merge-round cost curve (r16 verdict item 6): wall + fertility
-        // trajectory for rounds far past the declared 8, on the dir's
-        // real vocabulary. trainDriver is the production shape (the
-        // inherently sequential merge loop over vocab-sized control-
-        // plane state); what this measures is where its cost actually
-        // grows — per-round pair counting is O(total positions), and
-        // positions SHRINK as merges consume pairs, so the honest
-        // question is whether wall grows linearly in rounds or slower.
-        val vocab = Tables.documents(spark, dir)
-          .select(explode(expr(
-            "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
-        val nWords = vocab.count()
-        val nPos = vocab.agg(sum(length(col("w")))).collect()(0).getLong(0)
-        println(s"[bpe] vocab=$nWords words, $nPos char positions")
-        for (rounds <- Seq(8, 64, 256, 1024)) {
-          val t0 = System.nanoTime()
-          val trained = graft.operators.Bpe.trainDriver(vocab, rounds)
-          val wall = (System.nanoTime() - t0) / 1e9
-          val row = trained.vocabSeg
-            .agg(sum(expr("c * n_sub")), sum("c"), sum("n_sub")).collect()(0)
-          val fert = row.getLong(0).toDouble / row.getLong(1)
-          println(f"[bpe] rounds=$rounds%-5d effective=${trained.merges.size}%-5d " +
-            f"wall=$wall%8.2f s fertility=$fert%.4f tok/word " +
-            f"vocabSubPos=${row.getLong(2)}")
-        }
-
-      case "paircount" =>
-        // output-volume growth check for the embedding pair family
-        // (s4/d12/d17 super-linear wall-clock at sf10 — is it the
-        // PLAN or the DATA?): count the true above-threshold pair
-        // volume per decade. Dirs via SPARK_GRAFT_CURVE_SFS.
-        val sfs = sys.env.get("SPARK_GRAFT_CURVE_SFS")
-          .map(_.split(",").toSeq)
-          .getOrElse(Seq("/root/testdata/sf0.1", "/tmp/sf1_graft"))
-        for (sf <- sfs) {
-          graft.sources.SessionCache.clear()
-          val n = Tables.embeddings(spark, sf).count()
-          val pairs = graft.operators.Similarity
-            .lshCosinePairsMulti(Tables.embeddings(spark, sf),
-              minCosBp = 2000, planes = 2, tables = 32).count()
-          val edges3k = graft.operators.Similarity
-            .lshCosinePairsMulti(Tables.embeddings(spark, sf),
-              minCosBp = 3000, planes = 2, tables = 32).count()
-          println(s"""[paircount] {"sf":"${sf.split('/').last}","vecs":$n,"pairs_2000bp":$pairs,"pairs_3000bp":$edges3k}""")
-        }
-
-      case "d24" =>
-        // Candidate-volume A/B for the PPJoin indexing-prefix filter
-        // (r18): replicate ppjoinPairs' candidate generation with and
-        // without the index-prefix predicate and count the pairs that
-        // reach phase-1 verification, plus the verified output of the
-        // real operator both ways (the oracle re-proves completeness
-        // on every run; this measures the cut).
-        import graft.operators.{Curation, Dedup}
-        val minBp = 6000L
-        val docs = Tables.documents(spark, dir)
-        val grams = array_distinct(
-          Curation.wordGrams(Curation.tokens(col("text")), 3))
-        val arrs = docs.where(size(Curation.tokens(col("text"))) >= 3)
-          .select(col("doc_id"), grams.as("arr"))
-        val hsorted = arrs
-          .select(col("doc_id"), explode(col("arr")).as("g0"))
-          .select(col("doc_id"), xxhash64(col("g0")).as("h"))
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(col("h"))).as("harr"),
-            count(lit(1)).cast("long").as("n"))
-          .localCheckpoint()
-        val prefix = hsorted.select(col("doc_id"), col("n"),
-            posexplode(slice(col("harr"), lit(1),
-              expr(s"CAST(n - ($minBp * n + 9999) div 10000 + 1 AS INT)"))))
-          .select(col("doc_id"), col("n"), col("col").as("g"),
-            (col("pos") + 1).as("p"))
-        val joined = prefix.select(col("doc_id").as("a_id"), col("n").as("an"),
-            col("g"), col("p").as("pa"))
-          .join(prefix.select(col("doc_id").as("b_id"), col("n").as("bn"),
-            col("g"), col("p").as("pb")), Seq("g"))
-          .where(col("a_id") < col("b_id"))
-          .where(expr(s"10000 * bn >= $minBp * an") &&
-            expr(s"10000 * an >= $minBp * bn"))
-          .where(expr(s"least(an - pa, bn - pb) + 1 >= " +
-            s"($minBp * (an + bn) + ${10000 + minBp} - 1) div ${10000 + minBp}"))
-        val idxFiltered = joined.where(expr(
-          s"CASE WHEN an <= bn THEN pa <= an - " +
-            s"(2 * $minBp * an + ${10000 + minBp} - 1) div ${10000 + minBp} + 1 " +
-            s"ELSE pb <= bn - " +
-            s"(2 * $minBp * bn + ${10000 + minBp} - 1) div ${10000 + minBp} + 1 END"))
-        val base = joined.select("a_id", "b_id")
-        val cut = idxFiltered.select("a_id", "b_id")
-        println(s"[d24] candidate MATCHES  without idx-prefix: ${base.count()}")
-        println(s"[d24] candidate MATCHES  with    idx-prefix: ${cut.count()}")
-        println(s"[d24] distinct candidates without idx-prefix: ${base.distinct().count()}")
-        println(s"[d24] distinct candidates with    idx-prefix: ${cut.distinct().count()}")
-        for (pass <- 1 to 3)
-          timed(s"pass$pass ppjoinPairs end-to-end")(
-            Dedup.ppjoinPairs(docs, minJaccardBp = 6000)
-              .orderBy("a_id", "b_id")
-              .write.format("noop").mode("overwrite").save())
-
-      case "renarrow" =>
-        // Per-stage task-count trace of the logN CC loop on a
-        // large-then-contracting fixture (64 24-cliques chained: 17727
-        // edges -> ~1535 after round 1, a 12x drop — past the >=10x
-        // renarrow trigger), with the loop byte-target scaled down
-        // (4 KB = 128 rows/part) so the widths are visible at fixture
-        // scale: entry width = min(session, ceil(17727/128)) = 32 and
-        // the re-narrow drops the later rounds' stages to
-        // ceil(1535/128) = 12 tasks. Evidence for the r18 mid-loop
-        // re-narrowing (r17 verdict item 5).
-        import spark.implicits._
-        spark.conf.set("spark.graft.loop.targetPartitionBytes", "4096")
-        val trace = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-              trace.add((e.stageInfo.stageId, e.stageInfo.numTasks,
-                e.stageInfo.taskMetrics.executorRunTime))
-          })
-        val cliques = (0 until 64).flatMap { c =>
-          val base = c * 1000L
-          for (i <- 0 until 24; j <- (i + 1) until 24)
-            yield (base + i, base + j)
-        }
-        val chain = (0 until 63).map(c => (c * 1000L, (c + 1) * 1000L))
-        val pairs = (cliques ++ chain).toDF("a_id", "b_id")
-          .localCheckpoint(true)
-        trace.clear()
-        val (labels, rounds) =
-          graft.operators.Dedup.duplicateClustersLogNWithRounds(pairs)
-        labels.write.format("noop").mode("overwrite").save()
-        Thread.sleep(300)
-        import scala.jdk.CollectionConverters._
-        val rows = trace.asScala.toSeq.sortBy(_._1)
-        println(s"[renarrow] rounds=$rounds  stages (id:tasks:taskMs): " +
-          rows.map { case (id, n, ms) => s"$id:$n:$ms" }.mkString(" "))
-        println(s"[renarrow] task-count sequence: " +
-          rows.map(_._2).mkString(","))
-        spark.conf.unset("spark.graft.loop.targetPartitionBytes")
-
-      case "m11" =>
-        // Driver-side decomposition of the Bmff walk's 1.3 s job gap:
-        // analysis (DataFrame build) vs optimization+physical planning
-        // vs execution. Three passes, warm JIT by pass 2.
-        for (pass <- 1 to 3) {
-          val df = timed(s"pass$pass build+analyze")(
-            graft.operators.Bmff.triage(graft.fixtures.Video.mp4Payloads(spark))
-              .where(col("is_bmff"))
-              .select("doc_id", "brand", "width", "height", "timescale",
-                "duration", "duration_ms")
-              .orderBy("doc_id"))
-          timed(s"pass$pass optimize+plan")(df.queryExecution.executedPlan)
-          timed(s"pass$pass save (noop)")(
-            df.write.format("noop").mode("overwrite").save())
-        }
-
-      case "jobs" =>
-        // Per-query JOB decomposition (optimization round: the sf0.1
-        // board is floor-dominated, and the floor is #jobs × per-job
-        // latency + driver gaps — this mode shows which). For each
-        // query in SPARK_GRAFT_BENCH_ONLY: one untimed warmup, then
-        // one instrumented run recording every job's wall span and
-        // the driver-only gaps between jobs (planning, collect()s,
-        // checkpoint bookkeeping). Printed per query:
-        //   wall        total noop-save wall
-        //   jobs        job count
-        //   jobWall     Σ per-job (end − start)
-        //   gap         wall − jobWall (driver planning/gaps)
-        //   taskSum     Σ task run time (executor compute)
-        val qnames = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .getOrElse(Seq("g1_pagerank"))
-        val sf = dir
-        val jobSpans =
-          new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-        // jobId -> call site (what ACTION spawned this job) so the
-        // per-query job inventory names the fixed costs, not just
-        // counts them
-        val jobSites =
-          new java.util.concurrent.ConcurrentHashMap[Int, String]()
-        val taskNanos = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobSpans.put(j.jobId, (j.time, -1L))
-              jobSites.put(j.jobId,
-                j.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n'))
-                  .getOrElse("?"))
-            }
-            override def onJobEnd(
-                j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-              val s = jobSpans.getOrDefault(j.jobId, (j.time, -1L))
-              jobSpans.put(j.jobId, (s._1, j.time))
-            }
-            override def onTaskEnd(
-                t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-              if (t.taskMetrics != null)
-                taskNanos.addAndGet(t.taskMetrics.executorRunTime * 1000000L)
-          })
-        for (q <- qnames) {
-          graft.sources.SessionCache.clear()
-          // clear() drops the cached frames' strong refs but their
-          // checkpoint BLOCKS survive until a JVM GC lets the
-          // ContextCleaner collect them (the exact block-accumulation
-          // trap Bench's per-pass System.gc() documents) — without
-          // this, queries late in the list measure 2-5x their
-          // isolated cost under storage-memory pressure.
-          System.gc()
-          graft.SparkEntry.queries(q)(spark, sf)
-            .write.format("noop").mode("overwrite").save() // warmup
-          Thread.sleep(300) // let the async bus drain
-          jobSpans.clear(); taskNanos.set(0)
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(q)(spark, sf)
-            .write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
-          import scala.jdk.CollectionConverters._
-          val spans = jobSpans.asScala.toSeq.sortBy(_._1)
-            .map { case (id, (s, e)) => (id, s, if (e < 0) s else e) }
-          val jobWall = spans.map { case (_, s, e) => (e - s) / 1e3 }.sum
-          val detail = spans.map { case (id, s, e) =>
-            f"j$id:${(e - s) / 1e3}%.2fs@${jobSites.getOrDefault(id, "?")}"
-          }.mkString(" ")
-          println(f"[jobs] $q%-34s wall ${wall}%7.3f  jobs ${spans.size}%3d  " +
-            f"jobWall ${jobWall}%7.3f  gap ${wall - jobWall}%7.3f  " +
-            f"taskSum ${taskNanos.get / 1e9}%8.3f   $detail")
-        }
-
       case "curve" =>
-        // sf-scaling curve for selected queries: min-of-N per (query,
-        // sf) — the minimum is the principled statistic on a host with
-        // documented multi-second freeze windows (a stall can only ADD
-        // time), and the curve's shape separates flat stage latency
-        // from data-proportional cost. Queries via SPARK_GRAFT_BENCH_ONLY
+        // min-of-N per (query, sf): a host stall can only ADD time, and
+        // the curve's shape separates flat stage latency from
+        // data-proportional cost. Queries via SPARK_GRAFT_BENCH_ONLY
         // (default g1), N via SPARK_GRAFT_BENCH_RUNS (default 5).
         val qnames = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -764,14 +32,11 @@ object ProfileMain {
           .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
             "/root/testdata/sf0.1"))
         val rows = for (q <- qnames; sf <- sfs) yield {
-          // Per-(query, sf) cache reset + one untimed warmup: queries
-          // with a warehouse export at a STATIC path (d8's signature
-          // table) overwrite it per sf dir, so a session-cached frame
-          // from another sf points at deleted part files (the
-          // documented single-process caveat in Warehouse). Clearing
-          // then warming re-pays JIT/codegen AND rebuilds this dir's
-          // caches untimed — the timed runs below then measure the
-          // same warm-engine protocol as the official bench.
+          // Per-(query, sf) cache reset + one untimed warmup: a frame
+          // cached for another sf can point at part files a static-path
+          // warehouse export (d8) has since overwritten (Warehouse's
+          // single-process caveat); the timed runs then measure Bench's
+          // warm-engine protocol.
           graft.sources.SessionCache.clear()
           graft.SparkEntry.queries(q)(spark, sf)
             .write.format("noop").mode("overwrite").save()
@@ -785,11 +50,8 @@ object ProfileMain {
           println(s"[curve] $line")
           line
         }
-        // Write the fresh rows to curve_new.json; the (q, sf)-keyed
-        // merge into the curve_out.json ledger is done by
-        // tools/merge_curve.py — the r11 d24 corruption (a hand-merge
-        // duplicating an sf1 row as sf0.1) is exactly what ad-hoc
-        // ledger editing produces, so the merge is now a tool.
+        // Fresh rows only; tools/merge_curve.py does the (q, sf)-keyed
+        // merge into curve_out.json (hand merges corrupted it in r11).
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("curve_new.json"),
           rows.mkString("[", ",\n", "]"))

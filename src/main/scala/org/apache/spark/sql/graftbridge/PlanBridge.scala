@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
 
-/** Minimal bridge into Spark's `private[sql]` surface, used by
+/** Minimal bridge into Spark's package-private surface, used by
   * graft.plans.TopKRewrite to build a replacement logical plan with
   * the public Dataset API from inside an analyzer rule. Spark 4 keeps
   * plan construction helpers package-private; a subpackage of
@@ -45,4 +46,9 @@ object PlanBridge {
     classic.sparkSession.internalCreateDataFrame(
       classic.queryExecution.toRdd, classic.schema, isStreaming = true)
   }
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (Spark's 10 s timeout applies). Used by graft.MetricsLedger.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

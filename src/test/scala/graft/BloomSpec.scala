@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,31 +66,12 @@ class BloomSpec extends AnyFunSuite {
   }
 
   /** Total shuffle bytes written by every task that completes while
-    * `body` runs. Task-end events arrive asynchronously on the
-    * listener bus, so after the action returns we poll until the
-    * counter is stable (3 consecutive unchanged reads, 50 ms apart).
+    * `body` runs, read from the metrics ledger (which drains the async
+    * listener bus before reading).
     */
-  private def measuredShuffleWrite(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1L; var stable = 0; var iters = 0
-      while (stable < 3 && iters < 100) {
-        Thread.sleep(50)
-        val cur = acc.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        iters += 1
-      }
-      acc.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def measuredShuffleWrite(body: => Unit): Long =
+    scala.util.Using.resource(new MetricsLedger(spark.sparkContext))(
+      _.measure(body)._2.shuffleWrite)
 
   test("q47 bloom prune cuts measured shuffle write bytes, not just rows-on-paper") {
     // The at-scale claim behind q47 is that the scan-side bloom probe

@@ -10,10 +10,11 @@ import graft.operators.Skew
   * the uniform driver testdata proves them result-preserving (the
   * oracle gate), this proves them NECESSARY: on a 90%-hot key the
   * salted plans bound per-reducer load where the plain plans serialize
-  * the hot key onto one task. Timing evidence lives in the SkewBench
-  * harness (tools/gen_skew.py + graft.tools.SkewBench, BENCHNOTES);
-  * this spec pins the structural bounds that make the timings hold at
-  * any scale.
+  * the hot key onto one task. Timing evidence is in BENCHNOTES "r13:
+  * skew-stress evidence for the salting family", measured with the
+  * SkewBench harness (`git show 78c14b7:src/main/scala/graft/tools/SkewBench.scala`
+  * on `git show 78c14b7:tools/gen_skew.py` output); this spec pins the
+  * structural bounds that make the timings hold at any scale.
   */
 class SkewStressSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
