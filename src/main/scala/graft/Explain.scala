@@ -43,11 +43,26 @@ object Explain {
         |generation per round carrying the improved flag; early exit reads the
         |materialized blocks.""".stripMargin,
     "h4_closure_report" ->
-      """The closure fan-out join is a BroadcastHashJoin (closure dim built once,
-        |broadcast to the fact side); the only exchanges are the aggregation
-        |shuffle on the ancestor key (with partial_* map-side aggregation before
-        |it) and the final dim-sized sort. countDistinct adds its expand step.
-        |At 100 TB only the fact scan and one shuffle grow.""".stripMargin,
+      """Orders are pre-aggregated to customer grain before anything fans out:
+        |partial/final HashAggregate on o_custkey (exact decimal sum + count)
+        |around one hash exchange on o_custkey. The customer join and the
+        |closure fan-out join are both BroadcastHashJoins on that customer-grain
+        |stream (closure dim built once), so the ×depth fan-out multiplies one
+        |row per customer, not per order. The o_custkey partitioning already
+        |satisfies countDistinct's (ancestor, o_custkey) dedup aggregate, so it
+        |runs without a shuffle of its own; the remaining exchanges are the
+        |ancestor-keyed aggregation (partial_* map-side before it) and the
+        |final dim-sized sort. At 100 TB the scan and the o_custkey shuffle grow
+        |with orders; the fan-out shuffle grows with customers × depth.""".stripMargin,
+    "h3_rollup_report" ->
+      """Same customer-grain facts as h4 (one o_custkey pre-aggregate). The
+        |reporting dim is broadcast into the leaf-key join; Expand then emits
+        |the ROLLUP's levels+1 grouping sets per customer row. Expand drops the
+        |o_custkey partitioning, so countDistinct keeps both of its exchanges:
+        |the dedup on (level keys, grouping id, o_custkey), then the merge on
+        |(level keys, grouping id), each after map-side partials. The join back
+        |to the dim for names is a second broadcast; the final sort is
+        |dim-sized.""".stripMargin,
     "q01_pricing_summary" ->
       """PushedFilters shows the ship-date predicate reaching the parquet scan
         |(raw-column comparison; a to_date() wrapper would block pushdown), and

@@ -64,6 +64,14 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // "WindowExec: No Partition Defined for Window operation!" fires on
+    // every execution of an un-partitioned window. The engine's are
+    // dim-sized or declared global (PLANAUDIT.md reviews the
+    // single-partition exchanges they plan), so the warning only
+    // floods test and bench logs.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     // Engine-wide native expressions (ascii_token_count /
     // ascii_clean_count ride in TextOps helpers that have no session
     // in scope, so the factory registers them once for every consumer

@@ -176,6 +176,14 @@ object Hierarchy {
     * pre-aliased aggregate columns; their aliases are preserved in the
     * output. The dim side is broadcast (dims ≪ facts); the single
     * shuffle is the ROLLUP aggregation exchange.
+    *
+    * Input contract (shared with `closureReport`): `facts` may come at
+    * any grain that keeps `factKey` and every column a distinct count
+    * reads — e.g. pre-aggregated per distinct key, so the ×levels
+    * fan-out multiplies fewer rows. Additive measures are then passed
+    * as re-aggregations of their partials (`sum(p_sum)`, `sum(p_cnt)`
+    * for a count); distinct counts stay `countDistinct` over the kept
+    * key, recomputed per node and never summed from children.
     */
   def rollupReport(facts: DataFrame, dim: DataFrame, factKey: Column,
       namedAggs: Seq[(String, Column)], levels: Int): DataFrame = {
@@ -221,7 +229,10 @@ object Hierarchy {
     * descendant key, then one plain GROUP BY per ancestor recomputes
     * every aggregate (distinct counts included) at every level.
     * The closure is broadcast; fact rows fan out ×depth on the map
-    * side, then one aggregation shuffle on the ancestor key.
+    * side, then one aggregation shuffle on the ancestor key. `facts`
+    * follow `rollupReport`'s input contract: any grain that keeps
+    * `factKey` and the distinct-count columns, with additive measures
+    * passed as re-aggregations of their partials.
     */
   def closureReport(facts: DataFrame, closure: DataFrame, factKey: Column,
       namedAggs: Seq[(String, Column)]): DataFrame = {

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Hierarchy
 import graft.sources.Tables
@@ -25,10 +24,12 @@ import graft.sources.Tables
   * aggregate upward).
   *
   * Scale posture: identical to h3/h4 — the dim is broadcast-sized by
-  * definition at any depth (nodes ≪ facts), the rollup report is one
-  * fact-side broadcast join + one ROLLUP exchange, the closure report
-  * one broadcast fan-out (×depth) + one ancestor-keyed aggregation;
-  * depth enters as a column-count/fan-out constant, never a join round.
+  * definition at any depth (nodes ≪ facts), the facts are one
+  * o_custkey pre-aggregation, the rollup report is one fact-side
+  * broadcast join + one ROLLUP exchange, the closure report one
+  * broadcast fan-out (×depth, over customer-grain rows) + one
+  * ancestor-keyed aggregation; depth enters as a column-count/fan-out
+  * constant, never a join round.
   */
 object DeepHierarchyQueries {
 
@@ -38,8 +39,8 @@ object DeepHierarchyQueries {
   /** (fanout^d − 1)/(fanout − 1): nodes in a complete tree of `d` levels. */
   private def treeSize(d: Int): Long =
     (Seq.fill(d)(fanout.toLong).product - 1L) / (fanout - 1L)
-  private val nNodes = treeSize(depth)            // 1365 at 4/6
-  private val leafStart = treeSize(depth - 1) + 1 // 342 at 4/6
+  private[graft] val nNodes = treeSize(depth)            // 1365 at 4/6
+  private[graft] val leafStart = treeSize(depth - 1) + 1 // 342 at 4/6
 
   /** First heap index at level i (1-based): treeSize(i−1)+1. */
   private def levelStart(i: Int): Long = treeSize(i - 1) + 1
@@ -67,26 +68,25 @@ object DeepHierarchyQueries {
         .as("parent_node_id"))
   }
 
-  private def reportingDim(s: SparkSession, dir: String): DataFrame =
+  private[graft] def reportingDim(s: SparkSession, dir: String): DataFrame =
     graft.sources.SessionCache.getOrElseUpdate(s, s"deep_reporting:$dir")(
       Hierarchy.buildReportingDim(deepNodes(s, dir), levels = depth)
         .localCheckpoint(true))
 
-  private def closureDim(s: SparkSession, dir: String): DataFrame =
+  private[graft] def closureDim(s: SparkSession, dir: String): DataFrame =
     graft.sources.SessionCache.getOrElseUpdate(s, s"deep_closure:$dir")(
       Hierarchy.buildClosureDim(reportingDim(s, dir)).localCheckpoint(true))
 
-  /** Facts keyed at the leaf stratum (custkeys in the deepest level). */
+  /** Facts keyed at the leaf stratum (custkeys in the deepest level),
+    * pre-aggregated to customer grain before the key is derived (see
+    * HierarchyQueries.facts): the ×depth fan-out multiplies one row per
+    * leaf customer, not one per order.
+    */
   private def facts(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .where(col("o_custkey").between(leafStart, nNodes))
+    HierarchyQueries.customerPartials(Tables.orders(s, dir)
+        .where(col("o_custkey").between(leafStart, nNodes)))
       .select(natKey(col("o_custkey")).as("fact_key"),
-        col("o_custkey"), col("o_totalprice"))
-
-  private def reportAggs: Seq[(String, Column)] = Seq(
-    "sum_total_price" -> sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double"),
-    "distinct_customer_count" -> countDistinct(col("o_custkey")),
-    "count_of_fact_records" -> count(lit(1)))
+        col("o_custkey"), col("p_sum"), col("p_cnt"))
 
   // ---- oracle SQL, generated from the same constants ----
 
@@ -189,7 +189,7 @@ object DeepHierarchyQueries {
            | ORDER BY d.node_sort_order""".stripMargin
     }) { (s, dir) =>
       Hierarchy.rollupReport(facts(s, dir), reportingDim(s, dir),
-        col("fact_key"), reportAggs, levels = depth)
+        col("fact_key"), HierarchyQueries.reportAggs, levels = depth)
     },
 
     QueryDef("h13_deep_closure",
@@ -203,6 +203,6 @@ object DeepHierarchyQueries {
            | GROUP BY c.ancestor_node_name, c.ancestor_level_name, c.ancestor_level_number, c.ancestor_node_sort_order
            | ORDER BY c.ancestor_node_sort_order""".stripMargin) { (s, dir) =>
       Hierarchy.closureReport(facts(s, dir), closureDim(s, dir),
-        col("fact_key"), reportAggs)
+        col("fact_key"), HierarchyQueries.reportAggs)
     })
 }

@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.Tutorial
 import graft.operators.Hierarchy
+import graft.queries.{DeepHierarchyQueries, HierarchyQueries}
+import graft.sources.Tables
 
 /** Golden tests against the reference tutorial dataset
   * (reference: aggregation_example.sql; expected values derived from
@@ -157,5 +161,89 @@ class HierarchySpec extends AnyFunSuite {
       SqlQueries.collectAnchor(spark.range(10L * max).toDF())
     }
     assert(e.getMessage.contains("h5 fixed-dims contract"))
+  }
+
+  /** The per-order report measures that customer-grain facts replace:
+    * the reference each pre-aggregated report must reproduce exactly. */
+  private def rowGrainAggs: Seq[(String, Column)] = Seq(
+    "sum_total_price" -> sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double"),
+    "distinct_customer_count" -> countDistinct(col("o_custkey")),
+    "count_of_fact_records" -> count(lit(1)))
+
+  private def assertSameRows(what: String, got: DataFrame, want: DataFrame): Unit = {
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g.nonEmpty && g == w, s"$what:\ngot  $g\nwant $w")
+  }
+
+  test("customer-grain h3/h4/h12/h13/h14 equal row-grain references built from orders") {
+    val small = "/root/testdata/sf0.001"
+    val rowFacts = Tables.orders(spark, small)
+      .join(broadcast(Tables.customer(spark, small)), col("o_custkey") === col("c_custkey"))
+      .select(concat(lit("N"), lpad(col("c_nationkey").cast("string"), 3, "0")).as("fact_key"),
+        col("o_custkey"), col("o_totalprice"))
+    val h = HierarchyQueries
+    assertSameRows("h3", SparkEntry.queries("h3_rollup_report")(spark, small),
+      Hierarchy.rollupReport(rowFacts, h.reportingDim(spark, small), col("fact_key"),
+        rowGrainAggs, levels = 3))
+    assertSameRows("h4", SparkEntry.queries("h4_closure_report")(spark, small),
+      Hierarchy.closureReport(rowFacts, h.closureDim(spark, small), col("fact_key"),
+        rowGrainAggs))
+    // h14's shares are a function of its per-node cents; pin those
+    // against the per-order cents summed over the same closure
+    assertSameRows("h14",
+      SparkEntry.queries("h14_share_of_parent")(spark, small).select("sort_order", "cents"),
+      Hierarchy.closureReport(rowFacts, h.closureDim(spark, small), col("fact_key"),
+        Seq("cents" -> sum(expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))))
+        .select("ancestor_node_sort_order", "cents"))
+
+    // sf0.001 has no customer in the deep tree's leaf stratum (its
+    // leaves start at custkey 342), so h12/h13 are checked at sf0.01
+    val mid = "/root/testdata/sf0.01"
+    val d = DeepHierarchyQueries
+    val deepFacts = Tables.orders(spark, mid)
+      .where(col("o_custkey").between(d.leafStart, d.nNodes))
+      .select(concat(lit("D"), lpad(col("o_custkey").cast("string"), 5, "0")).as("fact_key"),
+        col("o_custkey"), col("o_totalprice"))
+    val deepDim = d.reportingDim(spark, mid)
+    val depth = deepDim.columns.count(_.matches("level_\\d+_node_natural_key"))
+    assertSameRows("h12", SparkEntry.queries("h12_deep_rollup")(spark, mid),
+      Hierarchy.rollupReport(deepFacts, deepDim, col("fact_key"), rowGrainAggs, depth))
+    assertSameRows("h13", SparkEntry.queries("h13_deep_closure")(spark, mid),
+      Hierarchy.closureReport(deepFacts, d.closureDim(spark, mid), col("fact_key"),
+        rowGrainAggs))
+  }
+
+  test("pre-aggregated facts recompute distinct counts: a key under several fact keys, null measures") {
+    import spark.implicits._
+    // tutorial leaves; most customers land under several of them, some
+    // rows carry no price and a few no customer at all
+    val leaves = Seq(101, 102, 201, 202)
+    val rnd = new scala.util.Random(20261017L)
+    val rows = (1 to 80).map { _ =>
+      (leaves(rnd.nextInt(leaves.size)),
+        if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(12).toLong),
+        if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(1000000) / 1000.0))
+    }
+    val facts = rows.toDF("fact_key", "o_custkey", "o_totalprice")
+    val partials = HierarchyQueries.partialAggs
+    val preAgg = facts.groupBy("fact_key", "o_custkey")
+      .agg(partials.head, partials.tail: _*)
+    val keysUnderSeveralLeaves = rows.collect { case (l, Some(k), _) => k -> l }
+      .groupBy(_._1).count(_._2.map(_._2).distinct.size > 1)
+    assert(keysUnderSeveralLeaves >= 5)
+
+    assertSameRows("rollup",
+      Hierarchy.rollupReport(preAgg, dim, col("fact_key"), HierarchyQueries.reportAggs, 3),
+      Hierarchy.rollupReport(facts, dim, col("fact_key"), rowGrainAggs, 3))
+    val closureRows = Hierarchy.closureReport(preAgg, closure, col("fact_key"),
+      HierarchyQueries.reportAggs)
+    assertSameRows("closure", closureRows,
+      Hierarchy.closureReport(facts, closure, col("fact_key"), rowGrainAggs))
+    // the root's distinct count is below the sum of its children's:
+    // a summed distinct count could not pass the checks above
+    val dc = closureRows.collect().map(r =>
+      r.getAs[String]("product_node_name").dropWhile(_ == '-') ->
+        r.getAs[Long]("distinct_customer_count")).toMap
+    assert(dc("All Products") < dc("Produce") + dc("Candy"), dc)
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +12,7 @@ import graft.queries.HierarchyQueries
 /** Physical-plan hygiene: the properties that keep these operators
   * viable at 100 TB, asserted on the actual executed plans.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -20,6 +24,29 @@ class PlanSpec extends AnyFunSuite {
       Seq("n" -> count(lit(1))))
     val plan = rep.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
+  }
+
+  test("h3/h4 fan out customer-grain facts: the hierarchy join streams an o_custkey HashAggregate") {
+    // (query, the dim key its fan-out join builds on)
+    Seq("h3_rollup_report" -> "node_natural_key",
+      "h4_closure_report" -> "descendant_node_natural_key").foreach { case (q, dimKey) =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      // executed plan after AQE; the helper's collect/find walk into
+      // query stages
+      val fanOut = collect(plan) {
+        case j: BroadcastHashJoinExec if j.buildSide == BuildRight &&
+            j.rightKeys.flatMap(_.references.map(_.name)) == Seq(dimKey) => j
+      }
+      assert(fanOut.size == 1, s"$q: expected one fan-out join built on $dimKey:\n$plan")
+      val preAgg = find(fanOut.head.left) {
+        case a: HashAggregateExec => a.groupingExpressions.map(_.name) == Seq("o_custkey")
+        case _ => false
+      }
+      assert(preAgg.isDefined,
+        s"$q: the fan-out must stream the o_custkey pre-aggregate:\n$plan")
+    }
   }
 
   test("minhash pair generation is a bucket equi-join, never cartesian") {
