@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.Recursion
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.plans.{Loops, Recursion}
 
 /** Hierarchical-dimension builders and reports — the reference's core
   * capability (reference: aggregation_example.sql), re-expressed
@@ -53,58 +55,72 @@ object Hierarchy {
       .drop("p_id")
   }
 
+  private val baseCols = Seq("node_id", "node_natural_key", "node_name", "level_name",
+    "parent_node_id", "is_root", "is_leaf")
+
+  // Path entries mirror the reference's node_json_path element shape
+  // (aggregation_example.sql:111-128): full node record + its level.
+  private def pathEntry(prefix: String, levelNumber: Column): Column = struct(
+    (baseCols.map(n => col(s"$prefix$n").as(n)) :+ levelNumber.as("level_number")): _*)
+
+  /** Level 1 of the walk: the roots, each with its path key and a
+    * one-entry path.
+    */
+  private def anchorOf(nodes: DataFrame): DataFrame =
+    nodes.filter(col("parent_node_id").isNull).select(baseCols.map(col) ++ Seq(
+      lit(1).as("level_number"),
+      lpadKey(col("node_natural_key")).as("path_key"),
+      array(pathEntry("", lit(1))).as("path")): _*)
+
+  /** One level of the walk: the children of `frontier` among `nodes`,
+    * their path keys and paths extended by one entry.
+    */
+  private def childrenOf(nodes: DataFrame)(frontier: DataFrame): DataFrame = {
+    val c = nodes.as("c")
+    val p = frontier.as("p")
+    c.join(p, col("c.parent_node_id") === col("p.node_id"))
+      .select(
+        baseCols.map(n => col(s"c.$n")) ++ Seq(
+          (col("p.level_number") + 1).as("level_number"),
+          concat(col("p.path_key"), lit("/"),
+            lpadKey(col("c.node_natural_key"))).as("path_key"),
+          array_append(col("p.path"),
+            pathEntry("c.", col("p.level_number") + 1)).as("path")): _*)
+  }
+
   /** Build the flattened reporting dimension: one row per node with
     * `level_number`, deterministic `node_sort_order`, and
     * `level_1..levels` ancestor columns
     * (reference: aggregation_example.sql:86-204).
     *
-    * The un-partitioned `row_number` window is a single-partition
-    * exchange — acceptable because dimensions are small by definition
-    * (≪ facts); never apply to fact-sized data.
+    * Two walks emit the same rows, names and types:
+    *  - One task, when the node count fits one partition by the loop
+    *    width rule (`Loops.adaptedPartitions` is 1 at a row width of
+    *    the node schema × (2·levels + 2), ≤ 83,886 nodes of five
+    *    strings at 3 levels and the 64 MB default) and both id columns
+    *    are strings or integral, whose JVM equality is Spark's join
+    *    equality. After one count job, one lazy task (`coalesce(1)` +
+    *    `mapPartitions`) holds the nodes and walks the parent pointers
+    *    from the roots level by level; nothing is sent to the driver.
+    *    The task holds the node rows plus one path entry and a few
+    *    words per walked node, below the output width the gate sizes.
+    *    `node_sort_order` is computed in the task in `path_key` order
+    *    (UTF-8 bytes, nulls first), the order of the window below.
+    *  - Otherwise `Recursion.expand`: one distributed join per level,
+    *    and `node_sort_order` from an un-partitioned `row_number`
+    *    window, a single-partition exchange — acceptable because
+    *    dimensions are small by definition (≪ facts); never apply to
+    *    fact-sized data.
+    *
+    * A node deeper than `levels` (or a cycle reachable from a root,
+    * through duplicate `node_id`s) throws the `IllegalStateException`
+    * of `Recursion.depthExceeded` on both walks; the one-task walk
+    * throws it from its task, inside the caller's first action.
     */
   def buildReportingDim(nodesRaw: DataFrame, levels: Int): DataFrame = {
-    // localCheckpoint stabilizes non-deterministic columns (uuid()
-    // defaults, SURVEY P9) before the self-joins below re-evaluate them.
-    val nodes = deriveAttrs(nodesRaw).localCheckpoint(true)
-
-    // Path entries mirror the reference's node_json_path element shape
-    // (aggregation_example.sql:111-128): full node record + its level.
-    def pathEntry(prefix: String, levelNumber: Column): Column = struct(
-      col(s"${prefix}node_id").as("node_id"),
-      col(s"${prefix}node_natural_key").as("node_natural_key"),
-      col(s"${prefix}node_name").as("node_name"),
-      col(s"${prefix}level_name").as("level_name"),
-      col(s"${prefix}parent_node_id").as("parent_node_id"),
-      col(s"${prefix}is_root").as("is_root"),
-      col(s"${prefix}is_leaf").as("is_leaf"),
-      levelNumber.as("level_number"))
-
-    val baseCols = Seq("node_id", "node_natural_key", "node_name", "level_name",
-      "parent_node_id", "is_root", "is_leaf")
-
-    val anchor = nodes
-      .filter(col("parent_node_id").isNull)
-      .withColumn("level_number", lit(1))
-      .withColumn("path_key", lpadKey(col("node_natural_key")))
-      .withColumn("path", array(pathEntry("", lit(1))))
-
-    def step(frontier: DataFrame): DataFrame = {
-      val c = nodes.as("c")
-      val p = frontier.as("p")
-      c.join(p, col("c.parent_node_id") === col("p.node_id"))
-        .select(
-          baseCols.map(n => col(s"c.$n")) ++ Seq(
-            (col("p.level_number") + 1).as("level_number"),
-            concat(col("p.path_key"), lit("/"),
-              lpadKey(col("c.node_natural_key"))).as("path_key"),
-            array_append(col("p.path"),
-              pathEntry("c.", col("p.level_number") + 1)).as("path")): _*)
-    }
-
-    val walked = Recursion.expand(anchor, step, maxDepth = levels + 1)
-
-    // Global DFS order (dim-sized data only — see scaladoc).
-    val order = Window.orderBy(col("path_key").asc)
+    val walked = oneTaskKeyType(nodesRaw, levels)
+      .map(walkInOneTask(nodesRaw, _, levels))
+      .getOrElse(walkInRounds(nodesRaw, levels))
     val levelCols = (1 to levels).flatMap { i =>
       val e = try_element_at(col("path"), lit(i))
       Seq(
@@ -113,7 +129,6 @@ object Hierarchy {
         e.getField("level_name").as(s"level_${i}_level_name"))
     }
     walked
-      .withColumn("node_sort_order", row_number().over(order).cast("long"))
       // Reference-parity struct columns (aggregation_example.sql:176-184):
       // node_json = the node's full record incl. its final sort order;
       // node_json_path = root→node list of per-level records.
@@ -125,7 +140,120 @@ object Hierarchy {
         Seq(col("level_number"), col("path_key"), col("node_sort_order"),
           col("node_json"), col("node_json_path")) ++
         levelCols: _*)
-      .orderBy("node_sort_order")
+      // Both walks end in one partition (the task, or the window's
+      // exchange), so sorting within it is the global order; a global
+      // sort would add a range exchange that runs the walk twice more.
+      .sortWithinPartitions("node_sort_order")
+  }
+
+  /** The walk's rows (anchor schema + `node_sort_order`) from
+    * `Recursion.expand`: one join per level, then a global window.
+    */
+  private def walkInRounds(nodesRaw: DataFrame, levels: Int): DataFrame = {
+    // localCheckpoint stabilizes non-deterministic columns (uuid()
+    // defaults, SURVEY P9) before the self-joins below re-evaluate them.
+    val nodes = deriveAttrs(nodesRaw).localCheckpoint(true)
+    Recursion.expand(anchorOf(nodes), childrenOf(nodes), maxDepth = levels + 1)
+      // Global DFS order (dim-sized data only — see scaladoc).
+      .withColumn("node_sort_order",
+        row_number().over(Window.orderBy(col("path_key").asc)).cast("long"))
+  }
+
+  /** The type the one-task walk matches parent pointers on — `long`
+    * for integral ids, the binary-collated string for string ids — if
+    * the node set fits one partition (one count job). Other id types
+    * (decimals, doubles, collated strings, mixed) have a join equality
+    * that JVM equality does not reproduce, so they keep the rounds.
+    */
+  private def oneTaskKeyType(nodes: DataFrame, levels: Int): Option[DataType] = {
+    val ids = Seq("node_id", "parent_node_id").map(nodes.schema(_).dataType)
+    val keyType =
+      if (ids.forall(_ == StringType)) Some(StringType)
+      else if (ids.forall {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }) Some(LongType)
+      else None
+    // each output row carries its node twice (columns, node_json) and
+    // up to `levels` ancestors twice (node_json_path, level columns)
+    val bytesPerRow = math.min(Int.MaxValue.toLong,
+      nodes.schema.defaultSize.toLong * (2L * levels + 2)).toInt
+    keyType.filter(_ =>
+      Loops.adaptedPartitions(nodes.sparkSession, nodes.count(), bytesPerRow) == 1)
+  }
+
+  /** The walk's rows in one lazy task: `coalesce(1)` + `mapPartitions`
+    * over [[walkParents]]. The row schema is that of the rounds' union
+    * of levels (anchor ∪ one level, analysed without a job) plus
+    * `node_sort_order`. Path-key parts come from [[lpadKey]] in the
+    * projection, so Spark's cast and pad apply.
+    */
+  private def walkInOneTask(nodes: DataFrame, keyType: DataType,
+      levels: Int): DataFrame = {
+    val attrs = deriveAttrs(nodes)
+    val anchor = anchorOf(attrs)
+    val schema = anchor.union(childrenOf(attrs)(anchor)).schema
+      .add("node_sort_order", LongType, nullable = false)
+    nodes.select(baseCols.take(5).map(col) ++ Seq(
+        col("node_id").cast(keyType), col("parent_node_id").cast(keyType),
+        lpadKey(col("node_natural_key"))): _*)
+      .coalesce(1)
+      .mapPartitions((it: Iterator[Row]) => walkParents(it, levels))(
+        Encoders.row(schema))
+  }
+
+  private val PathSep = UTF8String.fromString("/")
+
+  /** Walk one partition of node rows (the five input columns, id key,
+    * parent key, path-key part) from the roots, level by level, and
+    * emit every walked node in `path_key` order: the base columns with
+    * `is_root`/`is_leaf`, `level_number`, `path_key`, the root→node
+    * path and `node_sort_order`. A child is walked once per walked
+    * row whose id key equals its parent key, as the rounds' join does.
+    * Memory is the node rows plus a few words and one path entry per
+    * walked node; paths are assembled per emitted row.
+    */
+  private def walkParents(in: Iterator[Row], levels: Int): Iterator[Row] = {
+    val nodes = in.toArray
+    val children = nodes.indices.filter(i => !nodes(i).isNullAt(6))
+      .groupBy(i => nodes(i).get(6))
+    def isLeaf(i: Int) = nodes(i).isNullAt(5) || !children.contains(nodes(i).get(5))
+    // walked node w: its input row, the walked index of its parent
+    // (-1 for a root), its level and its path key
+    val node, up, level = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val key = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    def visit(i: Int, parent: Int, lvl: Int, k: UTF8String): Unit = {
+      if (lvl > levels) throw Recursion.depthExceeded(levels + 1)
+      node += i; up += parent; level += lvl; key += k
+    }
+    def part(i: Int) = UTF8String.fromString(nodes(i).getString(7))
+    nodes.indices.filter(nodes(_).isNullAt(4)).foreach(i => visit(i, -1, 1, part(i)))
+    var from = 0
+    while (from < node.length) {
+      val end = node.length
+      for (w <- from until end; c <- children.getOrElse(nodes(node(w)).get(5), Nil))
+        visit(c, w, level(w) + 1, UTF8String.concat(key(w), PathSep, part(c)))
+      from = end
+    }
+    val entries = node.indices.map { w =>
+      val r = nodes(node(w))
+      Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4),
+        r.isNullAt(4), isLeaf(node(w)), level(w))
+    }
+    def path(w: Int): List[Row] =
+      Iterator.iterate(w)(up(_)).takeWhile(_ >= 0).foldLeft(List.empty[Row])(
+        (p, a) => entries(a) :: p)
+    val byKey: Ordering[Int] = (a, b) => (key(a), key(b)) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x, y) => x.binaryCompare(y)
+    }
+    node.indices.sorted(byKey).iterator.zipWithIndex.map { case (w, i) =>
+      val e = entries(w)
+      Row.fromSeq(e.toSeq ++ Seq(Option(key(w)).map(_.toString).orNull,
+        path(w), i + 1L))
+    }
   }
 
   private val nodeAttrs = Seq("node_natural_key", "node_name", "level_name",
@@ -133,35 +261,31 @@ object Hierarchy {
 
   /** Build the exploded ancestor–descendant closure dimension
     * (reference: aggregation_example.sql:351-425): one row per
-    * (ancestor, descendant) pair including self-pairs — the anchor is
-    * *every* node, unfiltered (reference comment near :382). Joining
-    * facts on the descendant key then fans out each fact to all its
-    * ancestors, which is what makes non-additive aggregates
-    * (COUNT DISTINCT) correct at every level in one plain GROUP BY.
+    * (ancestor, descendant) pair including self-pairs — every node is
+    * its own ancestor (reference comment near :382). Joining facts on
+    * the descendant key then fans out each fact to all its ancestors,
+    * which is what makes non-additive aggregates (COUNT DISTINCT)
+    * correct at every level in one plain GROUP BY.
+    *
+    * Derived from the dim's paths, with no recursion: each row's
+    * `node_json_path` already lists its ancestors root→self, so one
+    * explode plus one broadcast join back to the dim on `node_id`
+    * (the reference's primary key) yields every pair with the
+    * ancestor's own columns, `node_sort_order` included.
     * Depth-independent — the shape that scales (SURVEY.md §0).
     */
   def buildClosureDim(reportingDim: DataFrame): DataFrame = {
-    val d = reportingDim.localCheckpoint(true)
-
-    val anchor = d.select(
-      nodeAttrs.map(n => col(n).as(s"ancestor_$n")) ++
-        nodeAttrs.map(n => col(n).as(s"descendant_$n")) :+
-        col("node_id").as("descendant_node_id"): _*)
-
-    def step(frontier: DataFrame): DataFrame = {
-      val c = d.as("c")
-      val p = frontier.as("p")
-      c.join(p, col("c.parent_node_id") === col("p.descendant_node_id"))
-        .select(
-          nodeAttrs.map(n => col(s"p.ancestor_$n")) ++
-            nodeAttrs.map(n => col(s"c.$n").as(s"descendant_$n")) :+
-            col("c.node_id").as("descendant_node_id"): _*)
-    }
-
-    Recursion.expand(anchor, step)
+    val ancestors = broadcast(reportingDim.select(
+      col("node_id").as("ancestor_node_id") +:
+        nodeAttrs.map(n => col(n).as(s"ancestor_$n")): _*))
+    reportingDim
+      .select(explode(col("node_json_path.node_id")).as("ancestor_node_id") +:
+        nodeAttrs.map(n => col(n).as(s"descendant_$n")): _*)
+      .join(ancestors, "ancestor_node_id")
+      .select(nodeAttrs.map(n => col(s"ancestor_$n")) ++
+        nodeAttrs.map(n => col(s"descendant_$n")): _*)
       .withColumn("net_level",
         col("descendant_level_number") - col("ancestor_level_number"))
-      .drop("descendant_node_id")
   }
 
   /** `LPAD`-indented display name (reference: aggregation_example.sql:334-337).

@@ -21,6 +21,11 @@ import org.apache.spark.sql.DataFrame
   * compute-each-level-exactly-once semantics on expensive steps. The
   * sequential loop is driver-side control flow only; the data-parallel
   * work inside each step scales with the cluster.
+  *
+  * Its one caller in the engine is `Hierarchy.buildReportingDim` for
+  * node sets wider than one partition (or with ids JVM equality cannot
+  * match); smaller dims are walked in one task, and the closure is
+  * derived from the dim's paths without recursion.
   */
 object Recursion {
 
@@ -39,9 +44,7 @@ object Recursion {
     var depth = 1
     var done = frontier.isEmpty
     while (!done) {
-      if (depth >= maxDepth)
-        throw new IllegalStateException(
-          s"Recursion.expand exceeded maxDepth=$maxDepth — cycle in hierarchy?")
+      if (depth >= maxDepth) throw depthExceeded(maxDepth)
       // Checkpoint every `checkpointInterval` levels: bounds lineage for
       // deep recursions without paying a materialization job per level
       // on the common shallow (≤8-deep) hierarchy.
@@ -58,4 +61,11 @@ object Recursion {
     }
     levels.reduce(_.union(_))
   }
+
+  /** The depth guard's error: a walk reached level `maxDepth`. Shared
+    * with the one-task hierarchy walk, which bounds depth the same way.
+    */
+  def depthExceeded(maxDepth: Int): IllegalStateException =
+    new IllegalStateException(
+      s"Recursion.expand exceeded maxDepth=$maxDepth — cycle in hierarchy?")
 }

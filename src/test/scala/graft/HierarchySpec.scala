@@ -246,4 +246,180 @@ class HierarchySpec extends AnyFunSuite {
         r.getAs[Long]("distinct_customer_count")).toMap
     assert(dc("All Products") < dc("Produce") + dc("Candy"), dc)
   }
+
+  // ---- one-task walk vs Recursion.expand rounds, on seeded random forests ----
+
+  /** Build under a one-byte loop target: every node set is then wider
+    * than one partition, so the dim builds take `Recursion.expand`. */
+  private def inRounds[T](f: => T): T = {
+    val key = "spark.graft.loop.targetPartitionBytes"
+    spark.conf.set(key, "1")
+    try f finally spark.conf.unset(key)
+  }
+
+  private def isOneTask(dim: DataFrame): Boolean = dim.queryExecution.analyzed
+    .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions])
+    .isDefined
+
+  /** Parent index per node of a seeded random forest: `roots` roots,
+    * one chain under root 0 reaching exactly `depth` levels, the rest
+    * hung under random nodes above `depth`; then three orphans whose
+    * parent index is absent, each with two children. */
+  private def forest(seed: Long, n: Int, roots: Int, depth: Int): IndexedSeq[Option[Int]] = {
+    val rnd = new scala.util.Random(seed)
+    val parent = scala.collection.mutable.ArrayBuffer.fill[Option[Int]](roots)(None)
+    val level = scala.collection.mutable.ArrayBuffer.fill(roots)(1)
+    (2 to depth).foreach { l =>
+      parent += Some(if (l == 2) 0 else parent.length - 1); level += l
+    }
+    while (parent.length < n) {
+      val p = rnd.nextInt(parent.length)
+      if (level(p) < depth) { parent += Some(p); level += level(p) + 1 }
+    }
+    (0 until 3).foreach { k =>
+      parent += Some(n + 1000 + k)
+      val o = parent.length - 1
+      parent += Some(o); parent += Some(o)
+    }
+    parent.toIndexedSeq
+  }
+
+  /** Node frames of the forests the property tests share: int ids and
+    * keys (negative keys too), string ids with string keys (≥ 12-char
+    * keys that `lpadKey` passes through, non-ASCII keys whose UTF-8
+    * order differs from their UTF-16 order, one null key on a leaf),
+    * and long ids with 12-digit keys. */
+  private lazy val forests: Seq[(String, DataFrame)] = {
+    import spark.implicits._
+    def perm(seed: Long, n: Int) = new scala.util.Random(seed).shuffle((0 until n).toVector)
+    val ints = {
+      val f = forest(1L, 120, 3, 64)
+      val key = perm(11L, f.size)
+      f.indices.map(i => (i * 7 + 3, key(i) - 40, s"n$i", s"L$i", f(i).map(_ * 7 + 3)))
+        .toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    }
+    val strings = {
+      val f = forest(2L, 150, 4, 9)
+      val key = perm(12L, f.size)
+      val leaf = (0 until 150).reverse.find(i => !f.contains(Some(i))).get
+      val heads = Seq("a", "B", "é", "Ａ", "😀", "Zz")
+      f.indices.map { i =>
+        val k = heads(key(i) % heads.size) + key(i) + (if (key(i) % 3 == 0) "-long-natural" else "")
+        (s"id$i", if (i == leaf) null else k, s"n$i", s"L$i", f(i).map(p => s"id$p").orNull)
+      }.toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    }
+    val longs = {
+      val f = forest(3L, 100, 2, 20)
+      val key = perm(13L, f.size)
+      f.indices.map { i =>
+        (10000000000L + i, (if (i % 2 == 0) 100000000000L else 0L) + key(i),
+          s"n$i", s"L$i", f(i).map(10000000000L + _))
+      }.toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    }
+    Seq("int" -> ints, "string" -> strings, "long" -> longs)
+  }
+
+  private val forestLevels = 64
+
+  /** The reporting dim of each forest from both walks. */
+  private lazy val forestDims: Seq[(String, DataFrame, DataFrame)] = forests.map { case (what, nodes) =>
+    (what, Hierarchy.buildReportingDim(nodes, forestLevels).localCheckpoint(true),
+      inRounds(Hierarchy.buildReportingDim(nodes, forestLevels).localCheckpoint(true)))
+  }
+
+  /** `f`'s failure carries the depth guard's IllegalStateException:
+    * thrown directly by the rounds, or as the cause of the one-task
+    * walk's failed task. */
+  private def assertDepthGuard(f: => Any): Unit = {
+    val e = intercept[Exception](f)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains("exceeded maxDepth=")), e)
+  }
+
+  test("one-task reporting dim equals the Recursion.expand dim on random forests") {
+    forests.zip(forestDims).foreach { case ((what, nodes), (_, one, rounds)) =>
+      assert(isOneTask(Hierarchy.buildReportingDim(nodes, forestLevels)), what)
+      assert(!inRounds(isOneTask(Hierarchy.buildReportingDim(nodes, forestLevels))), what)
+      assert(one.schema === rounds.schema, what)
+      val (o, r) = (one.collect().toSeq, rounds.collect().toSeq)
+      assert(o.nonEmpty && o == r, s"$what:\none    $o\nrounds $r")
+      // orphans and their children are walked by neither
+      assert(o.size === nodes.count() - 9, what)
+    }
+    val deepest = forestDims.map(_._2.agg(max("level_number")).head.getInt(0))
+    assert(deepest.head === forestLevels)
+  }
+
+  test("one-task and rounds reporting dims throw the depth guard on a too-deep tree and a duplicate-id cycle") {
+    import spark.implicits._
+    val chain = (1 to 6).map(i => (i, i, s"n$i", s"L$i", if (i == 1) None else Some(i - 1)))
+      .toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    // "b" has two rows: the second is its own child, a cycle under root "a"
+    val cycle = Seq(("a", "k1", "root", "L1", null), ("b", "k2", "x", "L2", "a"),
+        ("b", "k3", "y", "L3", "b"))
+      .toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    for ((nodes, levels) <- Seq(chain -> 5, cycle -> 8)) {
+      assert(isOneTask(Hierarchy.buildReportingDim(nodes, levels + 1)))
+      assertDepthGuard(Hierarchy.buildReportingDim(nodes, levels).collect())
+      assertDepthGuard(inRounds(Hierarchy.buildReportingDim(nodes, levels)).collect())
+    }
+    // exactly `levels` deep is within bounds on both walks
+    assert(Hierarchy.buildReportingDim(chain, 6).count() === 6L)
+    assert(inRounds(Hierarchy.buildReportingDim(chain, 6)).count() === 6L)
+  }
+
+  /** The closure by recursion over the parent edges, as it was built
+    * before the dim's paths were used: the self pairs, then one join
+    * per level from each pair's descendant to that node's children. */
+  private def closureByRounds(dim: DataFrame): DataFrame = {
+    val attrs = Seq("node_natural_key", "node_name", "level_name",
+      "level_number", "is_root", "is_leaf", "node_sort_order")
+    val anchor = dim.select(attrs.map(n => col(n).as(s"ancestor_$n")) ++
+      attrs.map(n => col(n).as(s"descendant_$n")) :+ col("node_id").as("d_id"): _*)
+    graft.plans.Recursion.expand(anchor, fr =>
+      dim.as("c").join(fr.as("p"), col("c.parent_node_id") === col("p.d_id"))
+        .select(attrs.map(n => col(s"p.ancestor_$n")) ++
+          attrs.map(n => col(s"c.$n").as(s"descendant_$n")) :+
+          col("c.node_id").as("d_id"): _*),
+      maxDepth = forestLevels + 1)
+      .withColumn("net_level",
+        col("descendant_level_number") - col("ancestor_level_number"))
+      .drop("d_id")
+  }
+
+  private def assertSameClosure(what: String, got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema === want.schema, what)
+    def rows(df: DataFrame) =
+      df.orderBy("ancestor_node_sort_order", "descendant_node_sort_order").collect().toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g.nonEmpty && g == w, s"$what:\ngot  $g\nwant $w")
+  }
+
+  test("path-derived closure equals the recursive closure on random forests, from both dim walks") {
+    forestDims.foreach { case (what, one, rounds) =>
+      assertSameClosure(what, Hierarchy.buildClosureDim(one), closureByRounds(one))
+    }
+    // the rounds' dim feeds the path-derived closure the same way
+    val (what, _, rounds) = forestDims(1)
+    assertSameClosure(s"$what (rounds dim)", Hierarchy.buildClosureDim(rounds),
+      closureByRounds(rounds))
+  }
+
+  test("a one-task walk that throws leaves the loop confs and the session cache clean") {
+    import spark.implicits._
+    import graft.sources.SessionCache
+    val chain = (1 to 6).map(i => (s"c$i", i, s"n$i", s"L$i", if (i == 1) None else Some(s"c${i - 1}")))
+      .toDF("node_id", "node_natural_key", "node_name", "level_name", "parent_node_id")
+    assert(isOneTask(Hierarchy.buildReportingDim(chain, 5)))
+    val before = TestSpark.loopConfs()
+    val key = "hierarchy-spec:too-deep"
+    assertDepthGuard(SessionCache.getOrElseUpdate(spark, key)(
+      Hierarchy.buildReportingDim(chain, 5).localCheckpoint(true)))
+    assert(TestSpark.loopConfs() === before)
+    // no entry was left for the key: the next lookup builds
+    var built = false
+    SessionCache.getOrElseUpdate(spark, key) { built = true; spark.range(1).toDF() }
+    assert(built)
+  }
 }

@@ -177,9 +177,7 @@ class LoopsSpec extends AnyFunSuite {
     import spark.implicits._
     assume(spark.sessionState.conf.numShufflePartitions > 1,
       "needs a multi-partition session for the entry width to exceed 1")
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    def confs = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    def confs = TestSpark.loopConfs()
     val before = confs
     // The finish is lazy: its one task runs inside the caller's action.
     // A throwing projection on its output fails exactly that task.
