@@ -75,7 +75,7 @@ object Sessions {
     // Engine-wide native expressions (ascii_token_count /
     // ascii_clean_count ride in TextOps helpers that have no session
     // in scope, so the factory registers them once for every consumer
-    // — mains, specs, streaming).
+    // — mains and specs).
     graft.functions.AsciiCount.register(spark)
     spark
   }

@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,13 +8,10 @@ import org.apache.spark.sql.types._
   * (reference: aggregation_example.sql:18-53 nodes, :220-298 facts).
   *
   * Parent links are seeded by *name* and resolved to generated node
-  * ids via a lookup join — the Spark-side equivalent of the
-  * reference's scalar subqueries in INSERT…VALUES (SURVEY.md J5,
-  * reference :23-25 etc.). Node ids are `uuid()` per the reference's
-  * column DEFAULT (reference :3); uuid() is non-deterministic, so the
-  * seed DataFrame is localCheckpoint'ed before self-joining — without
-  * it each join branch would re-evaluate uuid() and parent links would
-  * dangle (SURVEY.md P9).
+  * ids — the equivalent of the reference's scalar subqueries in
+  * INSERT…VALUES (SURVEY.md J5, reference :23-25 etc.). Node ids are
+  * random UUIDs per the reference's `uuid()` column DEFAULT
+  * (reference :3).
   */
 object Tutorial {
 
@@ -42,22 +39,28 @@ object Tutorial {
     ("Spinach", "Lottie", "2022-01-04", "1", "0.50"),
     ("Spinach", "Phil", "2022-01-05", "2", "2.00"))
 
+  private val nodeSchema = StructType(Seq(
+    StructField("node_id", StringType, nullable = false),
+    StructField("node_natural_key", IntegerType, nullable = false),
+    StructField("node_name", StringType),
+    StructField("level_name", StringType),
+    StructField("parent_node_id", StringType)))
+
   /** `product_nodes` with uuid ids and resolved parent ids
-    * (reference DDL :1-14). DuckDB `NUMERIC` ⇒ DecimalType(18,3)
-    * equivalence is handled on the facts side.
+    * (reference DDL :1-14), as a local relation: building and
+    * collecting it runs no Spark job. The ids are drawn once on the
+    * driver, so they are fixed data — every read and every self-join
+    * of the returned DataFrame sees the same ids and the parent links
+    * cannot dangle (the SURVEY.md P9 hazard of re-evaluating `uuid()`
+    * per join branch does not arise). DuckDB `NUMERIC` ⇒
+    * DecimalType(18,3) equivalence is handled on the facts side.
     */
   def productNodes(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val base = nodeSeed
-      .toDF("node_natural_key", "node_name", "level_name", "parent_name")
-      .withColumn("node_id", expr("uuid()"))
-      .localCheckpoint(true) // stabilize uuid() before the self-join
-    val parents = base.select(col("node_name").as("p_name"),
-      col("node_id").as("p_id"))
-    base.join(broadcast(parents), col("parent_name") === col("p_name"), "left")
-      .select(col("node_id"), col("node_natural_key"), col("node_name"),
-        col("level_name"), col("p_id").as("parent_node_id"))
-      .localCheckpoint(true)
+    val idOf = nodeSeed.map { case (_, name, _, _) =>
+      name -> java.util.UUID.randomUUID().toString }.toMap
+    val rows = nodeSeed.map { case (key, name, level, parent) =>
+      Row(idOf(name), key, name, level, parent.map(idOf).orNull) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), nodeSchema)
   }
 
   /** `sales_facts` (reference DDL :211-218) with product ids resolved

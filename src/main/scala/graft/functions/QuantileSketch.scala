@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions.udaf
   * is conserved exactly (2·k·2^l =
   * k·2^(l+1)), so Σ weights = n bit-exactly at all times — asserted
   * in the property spec AND in the declared query's result (n_match),
-  * where it proves no micro-batch was dropped or double-merged.
+  * where it proves no partial sketch was dropped or double-merged.
   *
   * Error model (why a tolerance contract, not equality): each
   * collapse shifts a value's implied rank by at most half its weight

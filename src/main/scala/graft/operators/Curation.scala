@@ -128,17 +128,14 @@ object Curation {
   val PhoneRe = "\\d{3}-\\d{3}-\\d{4}"
 
   /** The scrub expression itself: emails then phones replaced by typed
-    * placeholder tags. Shared by the batch audit query (d15) and the
-    * streaming ingest feed (DocStream.cleanFeed).
+    * placeholder tags (the d15 audit's `redacted` text).
     */
   def redact(raw: Column): Column =
     regexp_replace(regexp_replace(raw, lit(EmailRe), lit("<EMAIL>")),
       lit(PhoneRe), lit("<PHONE>"))
 
   /** Distinct word n-grams of a benchmark corpus — the static side of
-    * decontamination (batch d14 builds it inline; the streaming feed
-    * takes it pre-built, since eval suites change rarely and the gram
-    * set is re-broadcast per microbatch anyway).
+    * decontamination (d14).
     */
   def benchGramSet(benchDocs: DataFrame, n: Int = 4): DataFrame =
     benchDocs

@@ -56,6 +56,15 @@ object Dedup {
     * measured ~10× slower), and the aggregation's map-side partial min
     * shrinks the shuffle to `perms` longs per doc — the shape that
     * holds at 100 TB.
+    *
+    * Band sizing: with bands of r rows, a pair sharing estimated
+    * Jaccard s collides on a band with probability s^r. The corpus here
+    * has high *background* similarity (shared vocabulary), so r must be
+    * large enough that random pairs (s≈0.3-0.5) almost never collide
+    * while near-dups (s≥0.8) almost always do: r=8 ⇒ 0.4^8≈7e-4 vs
+    * 0.9^8≈0.43 per band (×8 bands ⇒ 99% recall). r=4 was measured to
+    * generate ~40% of ALL pairs as candidates on this corpus — an
+    * accidental all-pairs.
     */
   def minhashSignatures(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", perms: Int = 64, shingleK: Int = 7,
@@ -75,56 +84,6 @@ object Dedup {
     * sharing at least one band hash); the estimated similarity is then
     * exact arithmetic on the signatures (k agreeing / perms).
     */
-  /** Band sizing note: with bands of r rows, a pair sharing estimated
-    * Jaccard s collides on a band with probability s^r. The corpus here
-    * has high *background* similarity (shared vocabulary), so r must be
-    * large enough that random pairs (s≈0.3-0.5) almost never collide
-    * while near-dups (s≥0.8) almost always do: r=8 ⇒ 0.4^8≈7e-4 vs
-    * 0.9^8≈0.43 per band (×8 bands ⇒ 99% recall). r=4 was measured to
-    * generate ~40% of ALL pairs as candidates on this corpus — an
-    * accidental all-pairs.
-    */
-  /** One point of the LSH S-curve: the probability that a pair with
-    * Jaccard `s` collides in at least one of `b` bands of `r` rows,
-    * 1 − (1 − s^r)^b (Mining of Massive Datasets §3.4).
-    */
-  def lshCollisionProb(s: Double, bands: Int, rows: Int): Double =
-    1.0 - math.pow(1.0 - math.pow(s, rows), bands)
-
-  /** Auto-tune the (bands, rows) factorization of a `perms`-hash
-    * signature for a target Jaccard `threshold` — the band-sizing
-    * reasoning above as an algorithm instead of a hand calculation.
-    * Enumerates every b·r = perms and picks the plan minimizing the
-    * integrated S-curve error against the ideal step at `threshold`:
-    * the false-positive area ∫₀ᵗ p(s)ds (random pairs that collide —
-    * the "accidental all-pairs" failure mode) plus the false-negative
-    * area ∫ₜ¹ (1 − p(s))ds (near-dups missed), FP side scaled by
-    * `fpWeight` (default 1 — the symmetric integrated error; raise it
-    * when the corpus pair count makes candidate volume the binding
-    * cost, which slides the plan toward more rows per band).
-    * Driver-side closed-form math over ≤ d(perms) plans — control
-    * plane; the resulting plan feeds [[minhashSignatures]] unchanged.
-    * For perms = 64 at threshold 0.7 this recovers the measured-good
-    * r = 8, b = 8 split documented above (its S-curve midpoint
-    * (1/8)^(1/8) ≈ 0.77).
-    */
-  def lshPlan(perms: Int, threshold: Double,
-      fpWeight: Double = 1.0): (Int, Int) = {
-    require(perms > 0 && threshold > 0 && threshold < 1)
-    val plans = (1 to perms).filter(perms % _ == 0)
-      .map(r => (perms / r, r)) // (bands, rows)
-    def err(b: Int, r: Int): Double = {
-      val n = 1000
-      val h = 1.0 / n
-      (0 until n).map { i =>
-        val s = (i + 0.5) * h
-        val p = lshCollisionProb(s, b, r)
-        if (s < threshold) fpWeight * p * h else (1.0 - p) * h
-      }.sum
-    }
-    plans.minBy { case (b, r) => err(b, r) }
-  }
-
   def minhashPairs(docs: DataFrame, minEst: Double = 0.5,
       textCol: String = "text", idCol: String = "doc_id",
       perms: Int = 64): DataFrame = {
@@ -148,60 +107,6 @@ object Dedup {
       .withColumn("est_jaccard", TextOps.estJaccard("a_sig", "b_sig", perms))
       .where(col("est_jaccard") >= minEst)
       .select("a_id", "b_id", "est_jaccard")
-  }
-
-  /** Signature-estimated CONTAINMENT pairs — the batch mirror of
-    * `DocStream.containmentCandidates` (StreamingSpec pins stream ==
-    * batch within one horizon). Same band-bucket candidate join as
-    * [[minhashPairs]], but the final ratio is Broder's containment
-    * estimated from the signature Jaccard plus exact distinct-shingle
-    * sizes via |A∩B| = J·(|A|+|B|)/(1+J):
-    *
-    *   ĉ = Ĵ·(a_sz + b_sz) / ((1 + Ĵ)·min(a_sz, b_sz))
-    *
-    * The sizes ride the SAME groupBy that builds the signatures
-    * ([[TextOps.shingles]] is distinct-by-construction, so the plain
-    * group count IS the distinct-shingle size) — no extra shuffle over
-    * [[minhashPairs]]. Recall caveat (same as the stream): banding
-    * recalls pairs by their JACCARD, so this covers the
-    * moderate-asymmetry containment regime (J ≳ 0.7); extreme subset
-    * pairs (J ≈ 0) need the exact inverted-index path
-    * ([[containmentPairs]], d18). Exact-path parity: on A ⊆ B pairs
-    * the estimator is exact when Ĵ = J, since
-    * J(a+b)/((1+J)·a) = 1 for J = a/b.
-    */
-  def minhashContainmentPairs(docs: DataFrame, minEst: Double = 0.9,
-      minSize: Int = 16, textCol: String = "text", idCol: String = "doc_id",
-      perms: Int = 64, shingleK: Int = 7, bands: Int = 8): DataFrame = {
-    val exploded = docs.select(col(idCol),
-      explode(TextOps.shingles(textCol, shingleK)).as("g"))
-    val mins = (0 until perms).map(j => min(xxhash64(col("g"), lit(j))).as(s"mh_$j"))
-    val aggs = mins :+ count(lit(1)).as("sz")
-    val sigs = exploded.groupBy(col(idCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("sig", array((0 until perms).map(j => col(s"mh_$j")): _*))
-      .withColumn("bands", TextOps.bandKeys("sig", bands, perms / bands))
-      .select(col(idCol), col("sig"), col("sz"), col("bands"))
-      .localCheckpoint(true)
-    val banded = sigs
-      .select(col(idCol), col("sig"), col("sz"), explode(col("bands")).as("b"))
-      .select(col(idCol), col("sig"), col("sz"),
-        col("b.band").as("band"), col("b.bh").as("bh"))
-    val a = banded.select(col(idCol).as("a_id"), col("sig").as("a_sig"),
-      col("sz").as("a_sz"), col("band"), col("bh"))
-    val b = banded.select(col(idCol).as("b_id"), col("sig").as("b_sig"),
-      col("sz").as("b_sz"), col("band"), col("bh"))
-    a.join(b, Seq("band", "bh"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_sig", "b_sig", "a_sz", "b_sz")
-      .dropDuplicates("a_id", "b_id")
-      .withColumn("est_jaccard", TextOps.estJaccard("a_sig", "b_sig", perms))
-      .withColumn("est_containment", least(lit(1.0),
-        col("est_jaccard") * (col("a_sz") + col("b_sz")) /
-          ((lit(1.0) + col("est_jaccard")) * least(col("a_sz"), col("b_sz")))))
-      .where(col("est_containment") >= minEst &&
-        least(col("a_sz"), col("b_sz")) >= minSize)
-      .select("a_id", "b_id", "a_sz", "b_sz", "est_containment")
   }
 
   /** Recall audit of the MinHash/LSH candidate generator against the
@@ -439,16 +344,10 @@ object Dedup {
     * and the same bucketed-index reuse applies at scale. `minSize`
     * guards the trivial end (a 1-shingle doc is "contained" in
     * anything sharing that shingle).
-    */
-  def containmentPairs(docs: DataFrame, minContainment: Double = 0.9,
-      maxDf: Int = 50, minSize: Int = 16, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    containmentPairsFromKept(keptShingles(docs, maxDf, textCol, idCol),
-      minContainment, minSize, idCol)
-
-  /** Containment pairs over a PRE-BUILT kept-shingle index — the same
-    * split as [[ngramJaccardPairsFromKept]], so a session-materialized
-    * (or warehouse-bucketed) index serves the Jaccard AND containment
+    *
+    * Takes a PRE-BUILT kept-shingle index — the same split as
+    * [[ngramJaccardPairsFromKept]], so a session-materialized (or
+    * warehouse-bucketed) index serves the Jaccard AND containment
     * predicates from one build; at 100 TB the index is the expensive
     * artifact and every consumer must share it.
     */

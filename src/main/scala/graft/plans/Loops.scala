@@ -34,9 +34,9 @@ object Loops {
     * CONCURRENCY CONTRACT: the toggle mutates the SESSION's SQL conf,
     * so two loops interleaving on the SAME SparkSession object could
     * observe (and on unwind, restore) each other's setting. Every
-    * driver in this library (Bench, Verify, the streaming batch
-    * drivers) runs loops one at a time per session; a multi-tenant
-    * driver must give each thread its own `spark.newSession()` —
+    * driver in this library (Bench, Verify) runs loops one at a time
+    * per session; a multi-tenant driver must give each thread its own
+    * `spark.newSession()` —
     * sessions share the catalog and cached data but have independent
     * SQL confs, which scopes this toggle per thread. That is the
     * standard Spark answer for per-workload conf isolation; a

@@ -11,10 +11,6 @@ import graft.sources.Tables
   * under nanosAsLong; DuckDB reads the same parquet as TIMESTAMP, so
   * oracle arithmetic goes through epoch_ns — hour-level buckets are
   * unaffected by DuckDB's ns→µs truncation).
-  *
-  * Batch shapes here; the same aggregations run incrementally in
-  * Structured Streaming via graft.streaming.EventStream (tested with
-  * MemoryStream — no oracle, streaming is out of DuckDB's scope).
   */
 object EventQueries {
 
@@ -852,7 +848,7 @@ object EventQueries {
         |  CAST(MIN(age_days) AS BIGINT) AS last_age_days
         |FROM e GROUP BY user_id
         |ORDER BY decay_q DESC, user_id LIMIT 50""".stripMargin) { (s, dir) =>
-      // age clamped at 0 like the streaming twin: a post-anchor event
+      // age clamped at 0: a post-anchor event
       // counts undecayed instead of hitting shiftright's masked (n&63)
       // negative-shift garbage (fixture events are all pre-anchor, so
       // this is contract hardening, not a result change)

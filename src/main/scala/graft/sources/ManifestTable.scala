@@ -67,11 +67,11 @@ object ManifestTable {
   def files(spark: SparkSession, path: String, v: Long): Seq[String] =
     readManifest(spark, path, v)._1
 
-  /** (file names, txn id if the version was an idempotent commit,
-    * physical→logical column renames — see [[renameColumn]]).
+  /** (file names, physical→logical column renames — see
+    * [[renameColumn]]).
     */
   def readManifest(spark: SparkSession, path: String,
-      v: Long): (Seq[String], Option[Long], Map[String, String]) = {
+      v: Long): (Seq[String], Map[String, String]) = {
     val fs = fsFor(spark, path)
     val mp = manifestPath(path, v)
     require(fs.exists(mp), s"version $v is not committed under $path")
@@ -82,37 +82,30 @@ object ManifestTable {
   }
 
   // single-purpose JSON (de)serialization — the names are our own
-  // (`v<k>_part-*.parquet`, no quotes/escapes), the txn is a long and
-  // the rename map's keys/values are column identifiers, so a strict
-  // parser beats dragging in a JSON library. Three forms: a bare name
-  // array (plain commits), `{"txn":N,"files":[...]}` (idempotent
-  // commits), and either with a `"renames":{"phys":"logical",...}`
-  // field (column mapping). Parsing is strict by ROUND-TRIP: the
-  // extracted fields must re-render to the exact input byte string.
-  private def renderManifest(names: Seq[String], txn: Option[Long],
-      renames: Map[String, String] = Map.empty): String = {
+  // (`v<k>_part-*.parquet`, no quotes/escapes) and the rename map's
+  // keys/values are column identifiers, so a strict parser beats
+  // dragging in a JSON library. Two forms: a bare name array (plain
+  // commits) and `{"files":[...],"renames":{"phys":"logical",...}}`
+  // (column mapping). Parsing is strict by ROUND-TRIP: the extracted
+  // fields must re-render to the exact input byte string, so a
+  // manifest carrying any other field is refused, not misread.
+  private def renderManifest(names: Seq[String],
+      renames: Map[String, String]): String = {
     val arr = names.map(n => "\"" + n + "\"").mkString("[", ",", "]")
-    if (txn.isEmpty && renames.isEmpty) arr
-    else {
-      val fields = txn.map(t => s""""txn":$t""").toSeq ++
-        Seq(s""""files":$arr""") ++
-        (if (renames.isEmpty) Seq.empty
-         else Seq(renames.toSeq.sorted
-           .map { case (p, l) => s""""$p":"$l"""" }
-           .mkString("\"renames\":{", ",", "}")))
-      fields.mkString("{", ",", "}")
-    }
+    if (renames.isEmpty) arr
+    else renames.toSeq.sorted
+      .map { case (p, l) => s""""$p":"$l"""" }
+      .mkString(s"""{"files":$arr,"renames":{""", ",", "}}")
   }
 
   private def parseManifest(
-      body: String): (Seq[String], Option[Long], Map[String, String]) = {
+      body: String): (Seq[String], Map[String, String]) = {
     val t = body.trim
-    if (!t.startsWith("{")) return (parseNameArray(t), None, Map.empty)
+    if (!t.startsWith("{")) return (parseNameArray(t), Map.empty)
     val files = "\"files\":(\\[[^\\]]*\\])".r.findFirstMatchIn(t)
       .map(m => parseNameArray(m.group(1)))
       .getOrElse(throw new IllegalArgumentException(
         s"malformed manifest object: $t"))
-    val txn = "\"txn\":(-?\\d+)".r.findFirstMatchIn(t).map(_.group(1).toLong)
     val kv = "\"([A-Za-z0-9_]+)\":\"([A-Za-z0-9_]+)\"".r
     val renames = "\"renames\":\\{([^}]*)\\}".r.findFirstMatchIn(t)
       .map(_.group(1).trim).filter(_.nonEmpty)
@@ -123,9 +116,9 @@ object ManifestTable {
             s"malformed rename entry: $other")
         }
       }.toMap).getOrElse(Map.empty[String, String])
-    require(renderManifest(files, txn, renames) == t,
+    require(renderManifest(files, renames) == t,
       s"malformed manifest object (round-trip mismatch): $t")
-    (files, txn, renames)
+    (files, renames)
   }
 
   private def parseNameArray(body: String): Seq[String] = {
@@ -171,12 +164,11 @@ object ManifestTable {
     * [[vacuum]].
     */
   private def publish(spark: SparkSession, path: String, v: Long,
-      names: Seq[String], txn: Option[Long] = None,
-      renames: Map[String, String] = Map.empty): Boolean = {
+      names: Seq[String], renames: Map[String, String]): Boolean = {
     val fs = fsFor(spark, path)
     val tmp = new Path(path, s"_manifest_tmp_v${v}_${names.hashCode.abs}")
     val out = fs.create(tmp, false)
-    try out.write(renderManifest(names, txn, renames).getBytes("UTF-8"))
+    try out.write(renderManifest(names, renames).getBytes("UTF-8"))
     finally out.close()
     if (fs.exists(manifestPath(path, v))) { fs.delete(tmp, false); false }
     else {
@@ -196,7 +188,7 @@ object ManifestTable {
 
   /** Version `v`'s physical→logical column map (empty = no renames). */
   def renamesOf(spark: SparkSession, path: String, v: Long)
-      : Map[String, String] = readManifest(spark, path, v)._3
+      : Map[String, String] = readManifest(spark, path, v)._2
 
   private def toLogical(df: DataFrame, renames: Map[String, String])
       : DataFrame =
@@ -241,8 +233,7 @@ object ManifestTable {
     val next =
       if (phys == to) renames - phys else renames + (phys -> to)
     val nv = v + 1
-    require(publish(spark, path, nv, files(spark, path, v),
-        readManifest(spark, path, v)._2, next),
+    require(publish(spark, path, nv, files(spark, path, v), next),
       s"ManifestTable.renameColumn: version $nv raced a concurrent commit")
     nv
   }
@@ -264,7 +255,7 @@ object ManifestTable {
     while (!publish(spark, path, v,
         (if (v == 1) Seq.empty
          else files(spark, path, v - 1)) ++ names,
-        None, renames)) {
+        renames)) {
       v += 1 // a concurrent writer took this version; re-point at the
       // new parent's list (our pool files are version-named but names
       // only need uniqueness, not version agreement)
@@ -290,54 +281,6 @@ object ManifestTable {
         "commit refused")
     commitAppend(df, path)
   }
-
-  /** Idempotent append for exactly-once sinks (Delta's txnAppId/
-    * txnVersion dedup, same mechanism): `txnId` names the logical
-    * transaction — for a streaming sink, the micro-batch id. The txn
-    * id is recorded INSIDE the manifest, so the one atomic manifest
-    * rename commits the data AND the dedup record together — there is
-    * no ordering window where a crash could double-append (marker
-    * after data) or lose a batch (marker before data). A retry first
-    * scans committed manifests for the txn (driver-side,
-    * version-count-sized) and no-ops to the original version; its
-    * half-written pool files are vacuum-able orphans.
-    */
-  def commitAppendOnce(df: DataFrame, path: String, txnId: Long): Long = {
-    val spark = df.sparkSession
-    versionOfTxn(spark, path, txnId) match {
-      case Some(v) => v
-      case None =>
-        var v = committedVersions(spark, path).sorted.lastOption
-          .getOrElse(0L) + 1
-        var renames =
-          if (v == 1) Map.empty[String, String]
-          else renamesOf(spark, path, v - 1)
-        val names = writeParts(toPhysical(df, renames), path, v)
-        var done = false
-        while (!done) {
-          // a concurrent commit (or a concurrent retry of THIS txn)
-          // may land while we prepare — re-check the txn each lap
-          versionOfTxn(spark, path, txnId) match {
-            case Some(w) => return w
-            case None =>
-              done = publish(spark, path, v,
-                (if (v == 1) Seq.empty else files(spark, path, v - 1)) ++
-                  names, Some(txnId), renames)
-              if (!done) {
-                v += 1
-                renames = renamesOf(spark, path, v - 1)
-              }
-          }
-        }
-        v
-    }
-  }
-
-  /** The committed version carrying `txnId`, if any. */
-  def versionOfTxn(spark: SparkSession, path: String,
-      txnId: Long): Option[Long] =
-    committedVersions(spark, path).sorted
-      .find(v => readManifest(spark, path, v)._2.contains(txnId))
 
   /** Read version `v`: schedule exactly its manifest's pool files,
     * aliased to `v`'s LOGICAL column names (see [[renameColumn]]).
@@ -434,7 +377,7 @@ object ManifestTable {
     val nv = v + 1
     val names = writeParts(
       readVersionPhysical(spark, path, v).coalesce(targetFiles), path, nv)
-    require(publish(spark, path, nv, names, None, renamesOf(spark, path, v)),
+    require(publish(spark, path, nv, names, renamesOf(spark, path, v)),
       s"ManifestTable.compact: version $nv raced a concurrent commit")
     nv
   }
@@ -464,7 +407,7 @@ object ManifestTable {
       .sortWithinPartitions("__z")
       .drop("__z")
     val names = writeParts(clustered, path, nv)
-    require(publish(spark, path, nv, names, None, renames),
+    require(publish(spark, path, nv, names, renames),
       s"ManifestTable.compactZorder: version $nv raced a concurrent commit")
     nv
   }
@@ -585,7 +528,7 @@ object ManifestTable {
       .where(!(col(phys) >= lo && col(phys) <= hi))
       .coalesce(touched.size)
     val newNames = writeParts(survivors, path, nv)
-    require(publish(spark, path, nv, untouched ++ newNames, None, renames),
+    require(publish(spark, path, nv, untouched ++ newNames, renames),
       s"ManifestTable.deleteWhere: version $nv raced a concurrent commit")
     nv
   }
@@ -743,7 +686,7 @@ object ManifestTable {
         if (inserts.isEmpty) Seq.empty
         else writeParts(inserts.coalesce(1), path, nv)
       require(publish(spark, path, nv,
-          untouched ++ rewrittenNames ++ insertNames, None, renames),
+          untouched ++ rewrittenNames ++ insertNames, renames),
         s"ManifestTable.mergeInto: version $nv raced a concurrent commit")
       nv
     } finally src.unpersist()

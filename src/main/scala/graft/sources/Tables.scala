@@ -91,18 +91,6 @@ object Tables {
     }
   }
 
-  /** Streaming source over an events parquet directory with the same
-    * ns-bigint `ts` contract as [[events]]. File streaming needs an
-    * explicit schema; we take it from a batch footer read of the SAME
-    * directory so whichever physical timestamp layout is on disk, the
-    * stream normalizes identically to the batch path.
-    */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    configureNanos(spark)
-    val raw = spark.read.parquet(dir).schema
-    normalizeEventTs(spark.readStream.schema(raw).parquet(dir))
-  }
-
   /** Exact row count from Parquet footer metadata — a driver-side
     * metadata read, NO Spark job (vs `df.count()`, which scans). Used
     * by operators that size tuning knobs (LSH plane counts, IVF

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Versioned-snapshot table on a plain filesystem — the read surface
   * of the Delta/Iceberg-class capability a 100 TB warehouse user hits
   * first: time travel (`readVersion`), audit (`history`), and
-  * small-file `compact`ion, over the MVCC commit layout the streaming
-  * upsert (streaming/EventStream.upsertUserSummary) writes.
+  * small-file `compact`ion, over the MVCC commit layout [[commit]]
+  * writes.
   *
   * Layout: `<path>/v<k>/` immutable parquet snapshot directories. A
   * version EXISTS iff its directory carries the parquet job's
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * touching callers.
   *
   * Scale posture: snapshots are immutable and full — right for
-  * key-bounded dims (the streaming-merge target). Fact-scale tables
+  * key-bounded dims (a merge-upsert target). Fact-scale tables
   * version DELTAS plus periodic compaction instead; [[compact]] is
   * that operation's dim-sized form (rewrite latest into fewer files
   * as a NEW version — never in place, readers of v<k> are undisturbed).

@@ -34,19 +34,6 @@ object PlanBridge {
   /** Catalyst expression behind a Column. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Re-tag a BATCH DataFrame as a STREAMING one — the contract a V1
-    * streaming `Source.getBatch` must meet (MicroBatchExecution
-    * splices the returned plan in place of the source relation and
-    * requires `isStreaming = true`, which only the package-private
-    * `internalCreateDataFrame` can set; FileStreamSource does exactly
-    * this). Used by graft.streaming.ManifestSource.
-    */
-  def asStreaming(df: DataFrame): DataFrame = {
-    val classic = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
-    classic.sparkSession.internalCreateDataFrame(
-      classic.queryExecution.toRdd, classic.schema, isStreaming = true)
-  }
-
   /** Blocks until the listener bus has delivered every event posted so
     * far (Spark's 10 s timeout applies). Used by graft.MetricsLedger.
     */

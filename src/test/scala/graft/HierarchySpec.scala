@@ -23,6 +23,31 @@ class HierarchySpec extends AnyFunSuite {
   private lazy val dim = Hierarchy.buildReportingDim(nodes, 3).localCheckpoint(true)
   private lazy val closure = Hierarchy.buildClosureDim(dim).localCheckpoint(true)
 
+  test("tutorial nodes are a local relation: no Spark job, fixed ids, resolved parents") {
+    import org.apache.spark.sql.types._
+    val ((df, first, second), counts) = scala.util.Using.resource(
+        new MetricsLedger(spark.sparkContext)) { ledger =>
+      ledger.measure {
+        val df = Tutorial.productNodes(spark)
+        (df, df.collect(), df.collect())
+      }
+    }
+    assert(df.schema == StructType(Seq(
+      StructField("node_id", StringType, nullable = false),
+      StructField("node_natural_key", IntegerType, nullable = false),
+      StructField("node_name", StringType),
+      StructField("level_name", StringType),
+      StructField("parent_node_id", StringType))))
+    assert(counts.jobs == 0, s"building and collecting the nodes ran ${counts.jobs} jobs")
+    val ids = first.map(_.getString(0)).toSet
+    assert(first.length == 7 && ids.size == 7)
+    val parentOf = first.map(r => r.getInt(1) -> Option(r.getString(4))).toMap
+    assert(parentOf(0).isEmpty, "the root's parent must be null")
+    assert((parentOf - 0).values.forall(_.exists(ids)),
+      s"every non-root parent must be a node id: $parentOf")
+    assert(second.toSeq == first.toSeq, "two collects of one DataFrame must agree")
+  }
+
   test("reporting dim: 7 rows, correct levels and flags") {
     val rows = dim.select("node_natural_key", "node_name", "level_number",
       "is_root", "is_leaf").collect()

@@ -158,68 +158,6 @@ class ManifestTableSpec extends AnyFunSuite {
     }
   }
 
-  test("commitAppendOnce: a retried transaction appends NOTHING; the dedup " +
-      "record rides the manifest's own atomic rename") {
-    val p = freshPath()
-    val v1 = ManifestTable.commitAppendOnce(df(0, 50), p, txnId = 7L)
-    assert(v1 == 1L)
-    // the txn id is INSIDE the committed manifest — no second file
-    assert(ManifestTable.readManifest(spark, p, 1L)._2 == Some(7L))
-    assert(ManifestTable.versionOfTxn(spark, p, 7L) == Some(1L))
-    // retry of txn 7 (replayed micro-batch): same version back, no new
-    // version, no new rows
-    val vr = ManifestTable.commitAppendOnce(df(0, 50), p, txnId = 7L)
-    assert(vr == 1L)
-    assert(ManifestTable.committedVersions(spark, p) == Seq(1L))
-    assert(ManifestTable.latest(spark, p).count() == 50L)
-    // a DIFFERENT txn appends normally on top
-    val v2 = ManifestTable.commitAppendOnce(df(50, 80), p, txnId = 8L)
-    assert(v2 == 2L)
-    assert(ManifestTable.latest(spark, p).count() == 80L)
-    // interop: plain commits carry no txn and never satisfy a dedup probe
-    val v3 = ManifestTable.commitAppend(df(80, 90), p)
-    assert(ManifestTable.readManifest(spark, p, v3)._2.isEmpty)
-    assert(ManifestTable.versionOfTxn(spark, p, 99L).isEmpty)
-  }
-
-  test("exactly-once streaming append sink: a replayed micro-batch is a no-op") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val p = freshPath()
-    val in = MemoryStream[Long]
-    in.addData(0L until 100L: _*)
-    val q1 = graft.streaming.EventStream
-      .appendEventFeed(in.toDF().withColumnRenamed("value", "k"), p)
-      .option("checkpointLocation",
-        Files.createTempDirectory("m_ck").toString)
-      .start()
-    q1.processAllAvailable(); q1.stop()
-    val after1 = ManifestTable.latest(spark, p).count()
-    assert(after1 == 100L)
-    val vAfter1 = ManifestTable.latestVersion(spark, p)
-    // a FRESH query with a FRESH checkpoint replays batch 0 with the
-    // same data — the foreachBatch at-least-once window, closed by the
-    // txn dedup: no new version, no duplicate rows
-    val in2 = MemoryStream[Long]
-    in2.addData(0L until 100L: _*)
-    val q2 = graft.streaming.EventStream
-      .appendEventFeed(in2.toDF().withColumnRenamed("value", "k"), p)
-      .option("checkpointLocation",
-        Files.createTempDirectory("m_ck2").toString)
-      .start()
-    q2.processAllAvailable(); q2.stop()
-    assert(ManifestTable.latestVersion(spark, p) == vAfter1,
-      "replayed batch published a duplicate version")
-    assert(ManifestTable.latest(spark, p).count() == 100L,
-      "replayed batch double-appended rows")
-    // the dedup early-returns BEFORE writing any parts, so the replay
-    // leaves no garbage either: vacuum finds nothing to reclaim
-    val (_, dead) = ManifestTable.vacuum(spark, p, keep = 1)
-    assert(ManifestTable.latest(spark, p).count() == 100L)
-    assert(dead.isEmpty, s"replayed no-op left pool garbage: $dead")
-  }
-
   test("mergeInto rewrites ONLY files actually holding matched keys; " +
       "inserts land as new files; the rest are referenced byte-identical") {
     import spark.implicits._
@@ -329,6 +267,19 @@ class ManifestTableSpec extends AnyFunSuite {
     }
     // but tailing FROM the rewrite forward is sound again
     assert(ManifestTable.tailSince(spark, p, v4, v4 + 1).count() == 20L)
+  }
+
+  test("a manifest carrying a field the layout does not write is refused, not misread") {
+    val p = freshPath()
+    ManifestTable.commitAppend(df(0, 10), p)
+    val names = ManifestTable.files(spark, p, 1L)
+    // the retired idempotent-commit form, {"txn":N,"files":[...]}
+    val body = names.map(n => "\"" + n + "\"")
+      .mkString("{\"txn\":7,\"files\":[", ",", "]}")
+    val out = fs(p).create(new Path(p, "_manifest_v1.json"), true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    val e = intercept[IllegalArgumentException](ManifestTable.files(spark, p, 1L))
+    assert(e.getMessage.contains("round-trip mismatch"), e.getMessage)
   }
 
   test("renameColumn is metadata-only: byte-identical file references, " +

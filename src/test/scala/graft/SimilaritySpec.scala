@@ -548,6 +548,40 @@ class SimilaritySpec extends AnyFunSuite {
     assert(shuf == got, "shuffle-hash form must agree with broadcast form")
   }
 
+  test("cellTopKNeighbors edges are probe-intersect pairs of ivfProbeAssignments with the same cos_bp") {
+    // Candidate completeness from the probe side: two vectors can only
+    // be neighbors if they share a probe cell, and the edge's score is
+    // the exact quantized cosine of that pair.
+    val n = 600
+    val corpus = clusteredVecs(n, 64, 4242L, 4).toDF("vec_id", "embedding", "label")
+      .select("vec_id", "embedding").localCheckpoint(true)
+    val cents = (0L until 8L).map(_ * (n / 8))
+    val minCos = 2000
+    graft.functions.QuantizedDot.register(spark)
+    val probes = Similarity.ivfProbeAssignments(corpus, cents, 4)
+      .select(col("vec_id"), col("cell_id"))
+    val withNorm = corpus.withColumn("n2", expr("qdot(embedding, embedding)"))
+    def side(p: String) = probes.join(withNorm, Seq("vec_id"))
+      .select(col("cell_id"), col("vec_id").as(s"${p}_id"),
+        col("embedding").as(s"${p}_vec"), col("n2").as(s"${p}_n2"))
+    val probePairs = side("a").join(side("b"), Seq("cell_id"))
+      .where(col("a_id") =!= col("b_id"))
+      .withColumn("dot", expr("qdot(a_vec, b_vec)"))
+      .withColumn("cos_bp", expr(
+        "CAST(floor(10000.0 * CAST(dot AS DOUBLE) / " +
+          "(sqrt(CAST(a_n2 AS DOUBLE)) * sqrt(CAST(b_n2 AS DOUBLE)))) AS BIGINT)"))
+      .where(col("cos_bp") >= minCos)
+      .select("a_id", "b_id", "cos_bp").distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(probePairs.nonEmpty, "fixture produced no candidate pairs")
+    val topk = Similarity.cellTopKNeighbors(corpus, k = 3,
+        minCosBp = minCos, centroidIds = cents, nprobe = 4)
+      .select("a_id", "b_id", "cos_bp").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(topk.nonEmpty && topk.subsetOf(probePairs),
+      s"edges outside the probe-intersect set: ${(topk -- probePairs).take(3)}")
+  }
+
   test("cellTopKNeighbors refuses a degenerate giant cell") {
     // all-identical vectors collapse into one cell — the quadratic
     // regime the bounded-cell contract exists to prevent

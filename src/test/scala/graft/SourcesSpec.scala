@@ -18,6 +18,18 @@ class SourcesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown table: nope"))
   }
 
+  test("normalizeEventTs maps a TIMESTAMP ts to the nanosecond-bigint contract") {
+    import spark.implicits._
+    // the native-timestamp layout: `ts` arrives as a real TIMESTAMP and
+    // leaves as epoch nanoseconds, so every events operator sees one type
+    val ns = Seq(600L * 1000000000L, 3600L * 1000000000L + 1000000L)
+    val raw = ns.map(t => (1L, new java.sql.Timestamp(t / 1000000L)))
+      .toDF("event_id", "ts")
+    val norm = Tables.normalizeEventTs(raw)
+    assert(norm.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(norm.select("ts").as[Long].collect().toSeq.sorted == ns)
+  }
+
   test("constraint checks pass on the star schema and catch seeded violations") {
     import spark.implicits._
     assert(Constraints.primaryKeyViolations(Tables.customer(spark, dir), "c_custkey") == 0)
