@@ -79,6 +79,42 @@ object Dedup {
       .select(col(idCol), col("sig"), col("bands"))
   }
 
+  /** One point of the LSH S-curve: the probability that a pair with
+    * Jaccard `s` collides in at least one of `b` bands of `r` rows,
+    * 1 − (1 − s^r)^b (Mining of Massive Datasets §3.4).
+    */
+  def lshCollisionProb(s: Double, bands: Int, rows: Int): Double =
+    1.0 - math.pow(1.0 - math.pow(s, rows), bands)
+
+  /** The (bands, rows) factorization of a `perms`-hash signature for a
+    * target Jaccard `threshold` — the band-sizing note of
+    * [[minhashSignatures]] as an algorithm instead of a hand
+    * calculation. Enumerates every b·r = perms and picks the plan
+    * minimizing the integrated S-curve error against the ideal step at
+    * `threshold`: the false-positive area ∫₀ᵗ p(s)ds (random pairs that
+    * collide — the "accidental all-pairs" failure mode) plus the
+    * false-negative area ∫ₜ¹ (1 − p(s))ds (near-dups missed), FP side
+    * scaled by `fpWeight`. For perms = 64 at threshold 0.7 this
+    * recovers the measured-good r = 8, b = 8 split (S-curve midpoint
+    * (1/8)^(1/8) ≈ 0.77).
+    */
+  def lshPlan(perms: Int, threshold: Double,
+      fpWeight: Double = 1.0): (Int, Int) = {
+    require(perms > 0 && threshold > 0 && threshold < 1)
+    val plans = (1 to perms).filter(perms % _ == 0)
+      .map(r => (perms / r, r)) // (bands, rows)
+    def err(b: Int, r: Int): Double = {
+      val n = 1000
+      val h = 1.0 / n
+      (0 until n).map { i =>
+        val s = (i + 0.5) * h
+        val p = lshCollisionProb(s, b, r)
+        if (s < threshold) fpWeight * p * h else (1.0 - p) * h
+      }.sum
+    }
+    plans.minBy { case (b, r) => err(b, r) }
+  }
+
   /** MinHash/LSH near-dup candidate pairs with estimated Jaccard ≥
     * `minEst`. Candidates come ONLY from band-bucket self-joins (docs
     * sharing at least one band hash); the estimated similarity is then

@@ -194,6 +194,28 @@ class DedupSpec extends AnyFunSuite {
       s"prefix filtering must be lossless: missing=${brute -- got} extra=${got -- brute}")
   }
 
+  test("lshPlan: recovers the measured-good split and tracks the threshold") {
+    // the hand calculation in the band-sizing note, as an assertion:
+    // 64 hashes at threshold 0.7 pick the deployed r=8 split (curve
+    // midpoint 0.77 — random s≈0.4 pairs ~never collide, s≥0.9 pairs
+    // almost surely do)
+    val (b, r) = Dedup.lshPlan(perms = 64, threshold = 0.7)
+    assert((b, r) == (8, 8), s"got ($b, $r)")
+    // monotonicity: a lower threshold needs fewer rows per band (the
+    // curve midpoint (1/b)^(1/r) must move left), a higher one more
+    val rows = Seq(0.3, 0.5, 0.7, 0.9).map(t => Dedup.lshPlan(64, t)._2)
+    assert(rows == rows.sorted, s"rows must grow with threshold: $rows")
+    // the S-curve midpoint of the chosen plan sits near the threshold
+    Seq(0.5, 0.7, 0.9).foreach { t =>
+      val (bb, rr) = Dedup.lshPlan(64, t)
+      val mid = math.pow(1.0 / bb, 1.0 / rr)
+      assert(math.abs(mid - t) < 0.25, s"t=$t plan=($bb,$rr) midpoint=$mid")
+    }
+    // collision-prob sanity at the chosen 0.85 plan
+    assert(Dedup.lshCollisionProb(0.4, b, r) < 0.01)
+    assert(Dedup.lshCollisionProb(0.95, b, r) > 0.95)
+  }
+
   test("requireBlockPairBudget: exact pair count, loud contract error past the budget") {
     // 2 blocks of 50 rows each -> 2 * (50*49/2) = 2450 candidate pairs
     val blocked = Seq.tabulate(100)(i => ("en", i % 2)).toDF("lang", "bkt")
