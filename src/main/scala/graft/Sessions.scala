@@ -47,9 +47,8 @@ object Sessions {
       // improving, zero result change — OPTIMIZATION_r17.md). The
       // same applies to any long-running production driver serving a
       // query mix. Cost is bounded: generated classes are tens of KB
-      // of metaspace each. Env hook kept for A/B re-measurement.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_CODEGEN_CACHE_ENTRIES", "4096"))
+      // of metaspace each.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Workaround for a Catalyst constraint-rewrite NoSuchElementException
       // (UnionBase.rewriteConstraints) when unioning localCheckpoint'ed
       // levels whose projections alias one source attribute twice (the

@@ -186,6 +186,7 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the iteration after RewriteCorrelatedScalarSubquery produces the
     // sibling-aggregate join chain it fuses.
     ext.injectOptimizerRule(new MergeScalarAggJoins(_))
+    ext.injectOptimizerRule(_ => FoldLocalJoins)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }
 }

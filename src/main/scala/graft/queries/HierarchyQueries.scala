@@ -222,7 +222,11 @@ object HierarchyQueries {
     // (aggregation_example.sql:351-425: anchor EVERY node as its own
     // root, recurse down the parent edges). Oracle = h2's oracle text,
     // so the DataFrame loop (h2), the native recursion (h8) and
-    // DuckDB's recursive CTE must all agree row-for-row.
+    // DuckDB's recursive CTE must all agree row-for-row. The dim is
+    // collected to a LocalRelation under the fixed-dims contract, and
+    // plans/FoldLocalJoins folds every level's join on the driver: the
+    // recursion runs no job per level, only the dim collect and the
+    // ordered output do.
     QueryDef("h8_closure_dim_sql",
       nodesSql + closureSql +
         """
@@ -232,7 +236,12 @@ object HierarchyQueries {
           |       descendant_is_root, descendant_is_leaf, descendant_node_sort_order,
           |       descendant_level_number - ancestor_level_number AS net_level
           |FROM closure ORDER BY ancestor_node_sort_order, descendant_node_sort_order""".stripMargin) { (s, dir) =>
-      reportingDim(s, dir).createOrReplaceTempView("h8_dim")
+      SqlQueries.collectFixedDims(
+          reportingDim(s, dir).select(col("node_natural_key"), col("node_name"),
+            col("level_name"), col("level_number"), col("is_root"), col("is_leaf"),
+            col("node_sort_order"), col("parent_node_id")),
+          "h8 fixed-dims contract: the reporting dim (ROOT + regions + nations)")
+        .createOrReplaceTempView("h8_dim")
       s.sql(
         """WITH RECURSIVE closure AS (
           |  SELECT node_natural_key AS ancestor_node_natural_key, node_name AS ancestor_node_name, level_name AS ancestor_level_name,

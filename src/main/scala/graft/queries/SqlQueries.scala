@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -81,24 +81,24 @@ object SqlQueries {
       |       (n.node_natural_key NOT IN (SELECT parent_natural_key FROM nodes WHERE parent_natural_key IS NOT NULL)) AS is_leaf
       |FROM nodes n""".stripMargin
 
-  /** h5's fixed-dims contract: the anchor is ROOT + regions + nations,
-    * and TPC-H fixes |region| = 5 and |nation| = 25 at every scale.
+  /** The fixed-dims contract of the control-plane hierarchy (h5's
+    * anchor, h8's dim): ROOT + regions + nations, and TPC-H fixes
+    * |region| = 5 and |nation| = 25 at every scale.
     */
-  private[graft] val AnchorMaxRows: Int = 1 + 5 + 25
+  private[graft] val FixedDimsMaxRows: Int = 1 + 5 + 25
 
-  /** Collect h5's anchor to the driver, reading at most one row past
-    * [[AnchorMaxRows]] and failing, naming the contract, if it is there.
-    * `coalesce(1)` keeps the limited collect one job: over several
-    * partitions Spark's take runs one job to try the first partition,
-    * then another for the rest.
+  /** `df` collected into a LocalRelation-backed DataFrame, reading at
+    * most one row past [[FixedDimsMaxRows]] and failing, naming
+    * `contract`, if it is there. `coalesce(1)` keeps the limited collect
+    * one job: over several partitions Spark's take runs one job to try
+    * the first partition, then another for the rest.
     */
-  private[graft] def collectAnchor(anchor: DataFrame): Array[Row] = {
-    val rows = anchor.coalesce(1).limit(AnchorMaxRows + 1).collect()
-    require(rows.length <= AnchorMaxRows,
-      s"h5 fixed-dims contract: the hierarchy anchor (ROOT + regions + " +
-        s"nations) must stay at most $AnchorMaxRows rows to be collected " +
-        "to the driver; got more")
-    rows
+  private[graft] def collectFixedDims(df: DataFrame, contract: String): DataFrame = {
+    val rows = df.coalesce(1).limit(FixedDimsMaxRows + 1).collect()
+    require(rows.length <= FixedDimsMaxRows,
+      s"$contract must stay at most $FixedDimsMaxRows rows to be " +
+        "collected to the driver; got more")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
   /** The recursive walk over the materialized anchor view
@@ -140,23 +140,20 @@ object SqlQueries {
     QueryDef("h5_reporting_dim_sql", duckDimSql) { (s, dir) =>
       Tables.region(s, dir).createOrReplaceTempView("region")
       Tables.nation(s, dir).createOrReplaceTempView("nation")
-      // Anchor materialization (measured in EXPLAIN.md): Spark's
-      // UnionLoop re-executes the recursion's child plan per level, so
-      // the nodes_temp sub-CTE (scans + a NOT IN anti-join) would
-      // otherwise be re-evaluated every round. r17 checkpointed it;
-      // r18 COLLECTS it to a LocalRelation instead (the PPR-seed
-      // discipline): the hierarchy dim is control-plane-sized BY
-      // CONTRACT (ROOT + regions + nations — fixed dims at any corpus
-      // scale), and a checkpointed LogicalRDD reports
-      // defaultSizeInBytes = Long.MaxValue, so every recursion level
-      // planned a full-width sort-merge join over ≤31 rows (measured:
-      // 23 jobs, jobWall 0.32 s, driver gap 0.83 s). A LocalRelation
-      // carries exact stats — each level is a broadcast hash join with
-      // no exchange. The walk stays NATIVE WITH RECURSIVE; the oracle
-      // stays the single self-contained recursive statement.
-      val anchor = s.sql(sparkNodesTempSql)
-      val rows = collectAnchor(anchor)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), anchor.schema)
+      // The anchor (the nodes_temp sub-CTE: scans + a NOT IN
+      // anti-join) is collected once to a LocalRelation: the hierarchy
+      // is control-plane-sized BY CONTRACT (ROOT + regions + nations,
+      // fixed dims at any corpus scale). Spark's UnionLoopExec takes a
+      // level's rows without running a job when the level's optimized
+      // plan is a LocalRelation, and plans/FoldLocalJoins folds each
+      // level's join of the local anchor with the previous local level
+      // into one, so every level of the walk folds on the driver
+      // instead of running a repartition + count + collect. Only the
+      // anchor collect and the ordered dim after the walk run jobs. The
+      // walk stays NATIVE WITH RECURSIVE; the oracle stays the single
+      // self-contained recursive statement.
+      collectFixedDims(s.sql(sparkNodesTempSql),
+        "h5 fixed-dims contract: the hierarchy anchor (ROOT + regions + nations)")
         .createOrReplaceTempView("nodes_temp_m")
       s.sql(sparkWalkSql)
     },

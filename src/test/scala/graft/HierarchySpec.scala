@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +23,7 @@ class HierarchySpec extends AnyFunSuite {
   private lazy val nodes = Tutorial.productNodes(spark)
   private lazy val dim = Hierarchy.buildReportingDim(nodes, 3).localCheckpoint(true)
   private lazy val closure = Hierarchy.buildClosureDim(dim).localCheckpoint(true)
+  private val small = "/root/testdata/sf0.001"
 
   test("tutorial nodes are a local relation: no Spark job, fixed ids, resolved parents") {
     import org.apache.spark.sql.types._
@@ -179,13 +181,43 @@ class HierarchySpec extends AnyFunSuite {
 
   test("h5 anchor collect is bounded by the fixed-dims contract") {
     import graft.queries.SqlQueries
-    val max = SqlQueries.AnchorMaxRows
+    val max = SqlQueries.FixedDimsMaxRows
     assert(max === 31)
-    assert(SqlQueries.collectAnchor(spark.range(max).toDF()).length === max)
+    val local = SqlQueries.collectFixedDims(spark.range(max).toDF(), "h5 fixed-dims contract")
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(local.collect().length === max)
     val e = intercept[IllegalArgumentException] {
-      SqlQueries.collectAnchor(spark.range(10L * max).toDF())
+      SqlQueries.collectFixedDims(spark.range(10L * max).toDF(), "h5 fixed-dims contract")
     }
     assert(e.getMessage.contains("h5 fixed-dims contract"))
+  }
+
+  test("h8 dim collect is bounded by the fixed-dims contract") {
+    // h8 reads the reporting dim from the session cache: a doubled
+    // (62-row) dim cached under a probe dir must stop h8 at the collect
+    val probe = s"$small#doubled-dim"
+    val real = HierarchyQueries.reportingDim(spark, small)
+    graft.sources.SessionCache.getOrElseUpdate(spark, s"h_reporting:$probe")(
+      real.unionAll(real))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("h8_closure_dim_sql")(spark, probe)
+    }
+    assert(e.getMessage.contains("h8 fixed-dims contract"))
+  }
+
+  test("warm h5 and h8 fold their recursion levels on the driver") {
+    def run(q: String) = SparkEntry.queries(q)(spark, small).collect()
+    val (h5, h8) = ("h5_reporting_dim_sql", "h8_closure_dim_sql")
+    assert(run(h5).length == 31 && run(h8).length == 86) // warm-up
+    val ((r5, r8), (c5, c8)) = scala.util.Using.resource(
+        new MetricsLedger(spark.sparkContext)) { ledger =>
+      val (r5, c5) = ledger.measure(run(h5))
+      val (r8, c8) = ledger.measure(run(h8))
+      ((r5, r8), (c5, c8))
+    }
+    assert(r5.length == 31 && r8.length == 86)
+    assert(c5.jobs <= 6 && c8.jobs <= 4,
+      s"warm h5 ran ${c5.jobs} jobs (at most 6), h8 ${c8.jobs} (at most 4)")
   }
 
   /** The per-order report measures that customer-grain facts replace:
@@ -201,7 +233,6 @@ class HierarchySpec extends AnyFunSuite {
   }
 
   test("customer-grain h3/h4/h12/h13/h14 equal row-grain references built from orders") {
-    val small = "/root/testdata/sf0.001"
     val rowFacts = Tables.orders(spark, small)
       .join(broadcast(Tables.customer(spark, small)), col("o_custkey") === col("c_custkey"))
       .select(concat(lit("N"), lpad(col("c_nationkey").cast("string"), 3, "0")).as("fact_key"),
