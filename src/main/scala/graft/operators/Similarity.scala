@@ -1134,11 +1134,14 @@ object Similarity {
     (row.getLong(1), row.getLong(2))
   }
 
+  /** Candidate pairs one cell-join task holds: a few hundred ms of
+    * qdot kernel work at d=64. */
+  val PairsPerTask = 2000000L
+
   /** Pair-volume-derived partition count for the cell join's stream
-    * side: one task holds ~`spark.graft.cell.pairsPerTask` candidate
-    * pairs (default 2M — a few hundred ms of qdot kernel work at
-    * d=64), FLOOR = the session width, cap 16× it. The floor matters
-    * as much as the escape above it (measured r18: the first wiring
+    * side: one task holds ~[[PairsPerTask]] candidate pairs, FLOOR =
+    * the session width, cap 16× it. The floor matters as much as the
+    * escape above it (measured r18: the first wiring
     * let a small corpus NARROW the join to 4 partitions and s17/s19/
     * d27 ran the 8M-pair kernel stage on 4 of 32 cores, +0.4–0.8 s —
     * the membership table is byte-tiny but its join output fans out
@@ -1151,10 +1154,8 @@ object Similarity {
     */
   def pairVolumePartitions(spark: org.apache.spark.sql.SparkSession,
       pairVolume: Long): Int = {
-    val perTask = spark.conf
-      .get("spark.graft.cell.pairsPerTask", "2000000").toLong
     val width = spark.sessionState.conf.numShufflePartitions
-    val want = (pairVolume.max(0L) + perTask - 1) / perTask
+    val want = (pairVolume.max(0L) + PairsPerTask - 1) / PairsPerTask
     math.max(width.toLong, math.min(width.toLong * 16, want)).toInt
   }
 

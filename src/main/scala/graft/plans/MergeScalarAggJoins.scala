@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -52,9 +51,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * from the FACT (not the sibling aggregate or the patch Project's
   * computed columns), deterministic expressions throughout. At 100 TB
   * this removes one full probe-side scan + shuffle per extra
-  * correlated aggregate — the plan DuckDB reaches natively.
+  * correlated aggregate — the plan DuckDB reaches natively. To plan
+  * without it, list it in `spark.sql.optimizer.excludedRules`.
   */
-class MergeScalarAggJoins(spark: SparkSession) extends Rule[LogicalPlan] {
+object MergeScalarAggJoins extends Rule[LogicalPlan] {
 
   /** An inner join possibly wrapped in one projection layer (the
     * decorrelator's COUNT-bug patch). Identity projection otherwise.
@@ -116,13 +116,7 @@ class MergeScalarAggJoins(spark: SparkSession) extends Rule[LogicalPlan] {
     if (pairs.forall(_.isDefined)) Some(pairs.flatten) else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get("spark.graft.mergeScalarAggJoins", "true").toBoolean)
-      plan
-    else applyMerge(plan)
-  }
-
-  private def applyMerge(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case Join(
         ProjectedJoin(plist,
           j1 @ Join(x, agg1: Aggregate, LeftOuter, Some(c1), _)),

@@ -185,7 +185,7 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Runs inside the operator-optimization fixpoint, so it fires in
     // the iteration after RewriteCorrelatedScalarSubquery produces the
     // sibling-aggregate join chain it fuses.
-    ext.injectOptimizerRule(new MergeScalarAggJoins(_))
+    ext.injectOptimizerRule(_ => MergeScalarAggJoins)
     ext.injectOptimizerRule(_ => FoldLocalJoins)
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
   }

@@ -825,35 +825,22 @@ object TextQueries {
     // for the container family where fixed offsets DON'T work: MP4
     // metadata lives behind a box-length walk (moov before or after
     // an arbitrary-size mdat, free padding, udta siblings — the
-    // fixture exercises every layout). The walk is a bounded unrolled
-    // chain of substr/hex/conv expressions — codegen'd scan-stage
-    // math, zero shuffles, zero codec CPU: at 100 TB this is what
-    // routes a mixed media corpus to per-type decode pools and prunes
+    // fixture exercises every layout). The walk is one expression per
+    // row over the payload bytes (operators/Bmff) — scan-stage work,
+    // zero shuffles, zero codec CPU: at 100 TB this is what routes a
+    // mixed media corpus to per-type decode pools and prunes
     // sub-second clips without reading past the header bytes. The
     // oracle replays expected facts from generation params alone;
     // agreement proves the engine recovered them from raw container
     // bytes. Non-BMFF payloads surface as is_bmff=false rows (spec'd
     // in MultimodalSpec), never as garbage dimensions.
-    // Handle MEMOIZED per session (r18, the Tables.load prepared-
-    // statement shape): the Bmff walk's named-column unroll is ~40
-    // stacked Projects, and rebuilding + re-analyzing that plan cost
-    // 0.38 s of pure driver time per invocation (OPTIMIZATION_r18.md
-    // item 6, ProfileMain "m11" in
-    // `git show 78c14b7:src/main/scala/graft/tools/ProfileMain.scala`:
-    // wall 1.40 s, jobs 0.11 s, gap 1.29 s) — 92% of the query's wall
-    // was planning the same constant fixture plan again. The cache
-    // holds the LAZY analyzed frame only; every run still encodes the
-    // payloads on executors and walks the bytes (noop sink forces full
-    // execution — no rows, no results are retained).
     QueryDef("m11_mp4_header_scan", graft.fixtures.Video.oracleSql) {
-      (s, dir) =>
-        graft.sources.SessionCache.getOrElseUpdate(s, s"m11:$dir") {
-          graft.operators.Bmff.triage(graft.fixtures.Video.mp4Payloads(s))
-            .where(col("is_bmff"))
-            .select("doc_id", "brand", "width", "height", "timescale",
-              "duration", "duration_ms")
-            .orderBy("doc_id")
-        }
+      (s, _) =>
+        graft.operators.Bmff.triage(graft.fixtures.Video.mp4Payloads(s))
+          .where(col("is_bmff"))
+          .select("doc_id", "brand", "width", "height", "timescale",
+            "duration", "duration_ms")
+          .orderBy("doc_id")
     },
 
     // ---- m12: JPEG header triage (SOF marker walk) ----
@@ -861,8 +848,8 @@ object TextQueries {
     // offsets (m10), ISO-BMFF is a length-prefixed box walk (m11),
     // JPEG is a MARKER walk — variable-length FF-prefixed segments
     // whose count before SOFn differs by encoder, so dimensions are
-    // only reachable by segment-length arithmetic. Same named-column
-    // unroll, codegen'd scan-stage math, zero shuffles, zero decode.
+    // only reachable by segment-length arithmetic. Same one-expression
+    // walk per row (operators/Jpeg), zero shuffles, zero decode.
     // JPEG is lossy so only the exact header facts are oracle
     // material: SOF dimensions must equal the generation specs,
     // precision 8, one component (grayscale). Non-JPEG payloads
@@ -875,15 +862,11 @@ object TextQueries {
          |  CAST(h AS BIGINT) AS height, CAST(w AS BIGINT) AS width,
          |  CAST(1 AS BIGINT) AS components
          |FROM imgs ORDER BY doc_id""".stripMargin
-    }) { (s, dir) =>
-      // same per-session handle memo as m11: the marker-walk unroll's
-      // plan is the cost at this row count, not the bytes
-      graft.sources.SessionCache.getOrElseUpdate(s, s"m12:$dir") {
-        graft.operators.Jpeg.triage(graft.fixtures.Images.jpegPayloads(s))
-          .where(col("is_jpeg"))
-          .select("doc_id", "precision", "height", "width", "components")
-          .orderBy("doc_id")
-      }
+    }) { (s, _) =>
+      graft.operators.Jpeg.triage(graft.fixtures.Images.jpegPayloads(s))
+        .where(col("is_jpeg"))
+        .select("doc_id", "precision", "height", "width", "components")
+        .orderBy("doc_id")
     },
 
     // ---- m13: REAL multi-frame decode through the video seam ----

@@ -119,26 +119,6 @@ object VersionedTable {
     v + 1
   }
 
-  /** Size-targeted compaction (the OPTIMIZE bin-packing form): rewrite
-    * the latest snapshot into `ceil(bytes / targetBytes)` files — the
-    * policy a maintenance job actually runs, since "small-file problem"
-    * is a byte threshold, not a file count. Data-identical new version;
-    * stats manifests carry over (recomputed on the new files).
-    */
-  def compactToSize(spark: SparkSession, path: String,
-      targetBytes: Long): Long = {
-    require(targetBytes > 0, "compactToSize: targetBytes must be positive")
-    val v = latestVersion(spark, path)
-    val fs = fsFor(spark, path)
-    val bytes = fs.listStatus(new Path(s"$path/v$v")).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    val files = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    commit(readVersion(spark, path, v).coalesce(files), path, v + 1)
-    carryStats(spark, path, v, v + 1)
-    v + 1
-  }
-
   /** Recompute `fromV`'s stats AND bloom manifests (if any) for `toV`'s
     * files, so no compaction path silently strips the data-skipping
     * metadata.
@@ -252,30 +232,6 @@ object VersionedTable {
   def readVersionPruned(spark: SparkSession, path: String, version: Long,
       colName: String, lo: Long, hi: Long): DataFrame =
     readVersionPrunedMulti(spark, path, version, Seq((colName, lo, hi)))
-
-  /** IN-list file pruning (dim-key lookups): keep a file iff ANY of
-    * `values` lands in its `[min, max]` range — a point probe per
-    * value against the manifest, so a 100 TB key lookup schedules
-    * only the files that can possibly hold the keys. min/max can
-    * over-keep (a file spanning [1, 9] survives a probe for 5 it
-    * doesn't contain); the residual IN filter stays exact.
-    */
-  def readVersionPrunedIn(spark: SparkSession, path: String, version: Long,
-      colName: String, values: Seq[Long]): DataFrame = {
-    require(values.nonEmpty, "readVersionPrunedIn: empty value list")
-    val stats = readStats(spark, path, version)
-      .where(col("column") === colName)
-    require(stats.count() > 0,
-      s"readVersionPrunedIn: no stats for column $colName")
-    val probes = values.map(v => col("min_v") <= v && col("max_v") >= v)
-      .reduce(_ || _)
-    val files = stats.where(probes)
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-    val full = readVersion(spark, path, version)
-    if (files.isEmpty) full.where(lit(false))
-    else spark.read.schema(full.schema).parquet(files: _*)
-      .where(col(colName).isin(values: _*))
-  }
 
   /** Publish per-file BLOOM sketches for `bloomCols` (long-typed
     * columns) of committed version `version` at `path/_bloom_v<k>` —

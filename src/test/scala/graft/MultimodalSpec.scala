@@ -475,4 +475,59 @@ class MultimodalSpec extends AnyFunSuite {
       assert(r.isNullAt(r.fieldIndex("duration_ms")), s"doc $id leaked duration")
     }
   }
+
+  /** Triages every prefix `bytes.take(n)`, n in 0..upTo, of each
+    * (id, bytes, upTo) file, plus the whole file, in ONE action, and
+    * returns the truncation contract's violations: the signature flag
+    * must be set exactly when the prefix holds the `sigLen` signature
+    * bytes, and every fact must be NULL or the whole file's fact.
+    */
+  private def truncationViolations(files: Seq[(Long, Array[Byte], Int)],
+      triage: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      flag: String, sigLen: Int): Seq[String] = {
+    val key = (id: Long, n: Int) => id * 1000000L + n
+    val corpus = for ((id, b, upTo) <- files;
+      n <- ((0 to upTo) :+ b.length).distinct) yield (key(id, n), b.take(n))
+    val out = triage(corpus.toDF("doc_id", "payload")).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val facts = out.head._2.schema.fieldNames.filterNot(Set("doc_id", flag))
+    for ((id, b, upTo) <- files; n <- 0 to upTo;
+      r = out(key(id, n)); whole = out(key(id, b.length));
+      bad <- (if (r.getAs[Boolean](flag) == (n >= sigLen)) None
+        else Some(s"$flag=${r.get(r.fieldIndex(flag))}")) ++
+        facts.filterNot(c => r.isNullAt(r.fieldIndex(c)) ||
+          r.get(r.fieldIndex(c)) == whole.get(whole.fieldIndex(c)))
+          .map(c => s"$c=${r.get(r.fieldIndex(c))} " +
+            s"(whole file: ${whole.get(whole.fieldIndex(c))})"))
+    yield s"file $id prefix $n: $bad"
+  }
+
+  test("Bmff.triage: every prefix of every fixture file reads NULL or the whole file's facts") {
+    // a file cut anywhere — inside a size, a type, a version byte or a
+    // u16 width — must surface as NULL facts, never a partial value
+    val files = graft.fixtures.Video.specs.map { sp =>
+      val b = graft.fixtures.Video.encodeMp4(sp)
+      (sp.doc_id, b, b.length)
+    }
+    // signature: the "ftyp" type at bytes 4..8
+    val bad = truncationViolations(files,
+      graft.operators.Bmff.triage(_), "is_bmff", sigLen = 8)
+    assert(bad.size == 0, s"violations, first: ${bad.take(5).mkString("; ")}")
+  }
+
+  test("Jpeg.triage: every prefix up to SOF's end reads NULL or the whole file's facts") {
+    val files = graft.fixtures.Images.specs.map { case (id, w, h, seed) =>
+      val b = graft.fixtures.Images.encodeJpeg(w, h, seed)
+      val u16 = (i: Int) => (b(i) & 0xFF) << 8 | (b(i + 1) & 0xFF)
+      // the encoder writes SOF0 and no fill bytes: step segment by
+      // segment from SOI to the end of SOF0
+      var i = 2
+      while ((b(i + 1) & 0xFF) != 0xC0) i += 2 + u16(i + 2)
+      (id, b, i + 2 + u16(i + 2))
+    }
+    // signature: the SOI marker FFD8 at bytes 0..2
+    val bad = truncationViolations(files,
+      graft.operators.Jpeg.triage(_), "is_jpeg", sigLen = 2)
+    assert(bad.size == 0, s"violations, first: ${bad.take(5).mkString("; ")}")
+  }
 }

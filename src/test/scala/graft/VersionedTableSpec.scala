@@ -367,25 +367,6 @@ class VersionedTableSpec extends AnyFunSuite {
     }
   }
 
-  test("IN-list prune schedules only files that can hold the keys") {
-    val p = freshPath()
-    VersionedTable.commit(
-      df((1L to 400L).map(i => i -> i): _*).repartitionByRange(8, col("k")),
-      p, 1L)
-    VersionedTable.writeStats(spark, p, 1L, Seq("k"))
-    // three scattered point keys -> at most three files survive
-    val got = VersionedTable.readVersionPrunedIn(spark, p, 1L,
-      "k", Seq(7L, 203L, 399L))
-      .orderBy("k").collect().map(_.getLong(0)).toSeq
-    assert(got == Seq(7L, 203L, 399L))
-    val stats = VersionedTable.readStats(spark, p, 1L)
-    val survivors = stats.where(
-      (col("min_v") <= 7L && col("max_v") >= 7L) ||
-        (col("min_v") <= 203L && col("max_v") >= 203L) ||
-        (col("min_v") <= 399L && col("max_v") >= 399L)).count()
-    assert(survivors <= 3L && survivors < stats.count())
-  }
-
   test("vacuum keeps the newest versions; survivors stay readable") {
     val p = freshPath()
     VersionedTable.commit(df(1L -> 10L), p, 1L)
@@ -405,22 +386,14 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.vacuum(spark, p, keep = 5).isEmpty)
   }
 
-  test("compactToSize bin-packs by bytes and carries the stats manifest") {
+  test("compact carries the stats manifest across the compaction boundary") {
     val p = freshPath()
     val data = df((1L to 4000L).map(i => i -> i * 7): _*)
       .repartitionByRange(16, col("k"))
     VersionedTable.commit(data, p, 1L)
     VersionedTable.writeStats(spark, p, 1L, Seq("k"))
-    val fs = new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.listStatus(new Path(s"$p/v1")).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).sum
-    // target = half the table -> expect 2 files
-    val v2 = VersionedTable.compactToSize(spark, p, bytes / 2 + 1)
+    val v2 = VersionedTable.compact(spark, p, targetFiles = 2)
     assert(v2 == 2L)
-    val files2 = fs.listStatus(new Path(s"$p/v2")).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    assert(files2.size == 2, s"expected 2 bin-packed files, got ${files2.size}")
     val v1d = VersionedTable.readVersion(spark, p, 1L)
     val v2d = VersionedTable.readVersion(spark, p, 2L)
     assert(v2d.exceptAll(v1d).isEmpty && v1d.exceptAll(v2d).isEmpty)
