@@ -68,9 +68,8 @@ object Audio {
     */
   def wavPayloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    specs.map(t => SpecRow(t._1, t._2, t._3, t._4))
-      .toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(
+        specs.map(t => SpecRow(t._1, t._2, t._3, t._4)), 4))
       .map(r => PayloadRow(r.doc_id, encodeWav(r.n, r.rate, r.seed)))
       .toDF()
   }

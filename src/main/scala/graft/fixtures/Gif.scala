@@ -91,8 +91,7 @@ object Gif {
     */
   def gifPayloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    specs.toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(specs, 4))
       .map(sp => PayloadRow(sp.doc_id, encodeGif(sp)))
       .toDF()
   }

@@ -60,9 +60,8 @@ object Images {
     */
   def pngPayloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    specs.map(t => SpecRow(t._1, t._2, t._3, t._4))
-      .toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(
+        specs.map(t => SpecRow(t._1, t._2, t._3, t._4)), 4))
       .map(r => PayloadRow(r.doc_id, encodePng(r.w, r.h, r.seed)))
       .toDF()
   }
@@ -125,9 +124,8 @@ object Images {
     */
   def jpegPayloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    specs.map(t => SpecRow(t._1, t._2, t._3, t._4))
-      .toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(
+        specs.map(t => SpecRow(t._1, t._2, t._3, t._4)), 4))
       .map(r => PayloadRow(r.doc_id, encodeJpeg(r.w, r.h, r.seed)))
       .toDF()
   }
@@ -192,9 +190,8 @@ object Images {
   /** The neardup fixture as an executor-encoded PNG payload table. */
   def neardupPayloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    neardupSpecs.map(t => SpecRow(t._1, t._2, t._3, t._4))
-      .toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(
+        neardupSpecs.map(t => SpecRow(t._1, t._2, t._3, t._4)), 4))
       .map(r => PayloadRow(r.doc_id, encodePng(r.w, r.h, r.seed)))
       .toDF()
   }

@@ -158,8 +158,7 @@ object Video {
     */
   def mp4Payloads(s: SparkSession): DataFrame = {
     import s.implicits._
-    specs.toDS()
-      .repartition(4)
+    s.createDataset(s.sparkContext.parallelize(specs, 4))
       .map(sp => PayloadRow(sp.doc_id, encodeMp4(sp)))
       .toDF()
   }

@@ -90,7 +90,7 @@ object SourceQueries {
     },
 
     // ---- c6: time travel + compaction over the versioned table ----
-    // The Delta/Iceberg-class read surface (sources/VersionedTable):
+    // The Delta/Iceberg-class read surface (sources/ManifestTable):
     // the fixture commits v1 (partial aggregate), v2 (merged upsert),
     // v3 (compaction of v2 — data-identical, fewer files), and the
     // query diffs LATEST against readVersion(1): per changed user, the
@@ -117,8 +117,8 @@ object SourceQueries {
         |WHERE d.nd IS NOT NULL
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       val latest = Warehouse.userSummaryVersioned(s, dir)
-      val v1 = graft.sources.VersionedTable.readVersion(
-          s, Warehouse.userSummaryVersionedPath(dir), 1L)
+      val v1 = graft.sources.ManifestTable.readVersion(
+          s, Warehouse.tablePath("user_summary_versioned", dir), 1L)
         .select(col("user_id").as("p_uid"), col("n_events").as("n_before"),
           col("total_cents").as("c_before"))
       latest.join(v1, col("p_uid") === col("user_id"), "full_outer")
@@ -133,7 +133,7 @@ object SourceQueries {
     },
 
     // ---- c7: row-level change data feed between versions ----
-    // The CDC read on the versioned table (VersionedTable.changeFeed):
+    // The CDC read on the versioned table (ManifestTable.changeFeed):
     // v1 → latest as typed change rows — `insert` for keys born after
     // v1, `update_preimage`/`update_postimage` pairs for keys whose
     // summary changed, nothing for untouched keys (delta-sized
@@ -170,10 +170,10 @@ object SourceQueries {
         |WHERE v1.n_events <> v2.n_events OR v1.total_cents <> v2.total_cents
         |ORDER BY user_id, change_type""".stripMargin) { (s, dir) =>
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
-      val path = Warehouse.userSummaryVersionedPath(dir)
-      graft.sources.VersionedTable
+      val path = Warehouse.tablePath("user_summary_versioned", dir)
+      graft.sources.ManifestTable
         .changeFeed(s, path, 1L,
-          graft.sources.VersionedTable.latestVersion(s, path),
+          graft.sources.ManifestTable.latestVersion(s, path),
           Seq("user_id"))
         .withColumnRenamed("_change_type", "change_type")
         .orderBy("user_id", "change_type")
@@ -183,7 +183,7 @@ object SourceQueries {
     // The capstone of the versioned-table surface: a bucket-level
     // rollup of user_summary maintained INCREMENTALLY — aggregate v1,
     // apply the v1→latest change feed through the signed-delta algebra
-    // (VersionedTable.incrementalAgg), never re-reading the base — and
+    // (ManifestTable.incrementalAgg), never re-reading the base — and
     // the result rows ARE the maintained values, flagged in-query
     // against a direct re-aggregation of the latest snapshot. The
     // oracle recomputes the rollup independently from raw events, so a
@@ -208,24 +208,24 @@ object SourceQueries {
         |FROM v2
         |GROUP BY user_id % 16
         |ORDER BY bucket""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
-      val path = Warehouse.userSummaryVersionedPath(dir)
-      val latestV = VersionedTable.latestVersion(s, path)
+      val path = Warehouse.tablePath("user_summary_versioned", dir)
+      val latestV = ManifestTable.latestVersion(s, path)
       def rollup(df: org.apache.spark.sql.DataFrame) = df
         .withColumn("bucket", pmod(col("user_id"), lit(16L)))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_users"),
           sum("n_events").as("sum_events"),
           sum("total_cents").as("sum_cents"))
-      val feed = VersionedTable.changeFeed(s, path, 1L, latestV,
+      val feed = ManifestTable.changeFeed(s, path, 1L, latestV,
         Seq("user_id"))
         .withColumn("bucket", pmod(col("user_id"), lit(16L)))
-      val maintained = VersionedTable.incrementalAgg(
-        rollup(VersionedTable.readVersion(s, path, 1L)), feed,
+      val maintained = ManifestTable.incrementalAgg(
+        rollup(ManifestTable.readVersion(s, path, 1L)), feed,
         Seq("bucket"), "n_users",
         Seq("n_events" -> "sum_events", "total_cents" -> "sum_cents"))
-      val direct = rollup(VersionedTable.readVersion(s, path, latestV))
+      val direct = rollup(ManifestTable.readVersion(s, path, latestV))
         .select(col("bucket"), col("n_users").as("d_nu"),
           col("sum_events").as("d_se"), col("sum_cents").as("d_sc"))
       maintained.join(direct, Seq("bucket"), "full_outer")
@@ -256,10 +256,10 @@ object SourceQueries {
         |WHERE user_id BETWEEN 3 AND 7
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryClustered(s, dir) // commit v1 + stats
-      VersionedTable.readVersionPruned(s,
-        Warehouse.userSummaryClusteredPath(dir), 1L, "user_id", 3L, 7L)
+      ManifestTable.readVersionPruned(s,
+        Warehouse.tablePath("user_summary_clustered", dir), 1L, "user_id", 3L, 7L)
         .select(col("user_id"), col("n_events"), col("total_cents"))
         .orderBy("user_id")
     },
@@ -282,10 +282,10 @@ object SourceQueries {
         |WHERE user_id BETWEEN 3 AND 7 AND cents BETWEEN 2000 AND 4000
         |GROUP BY user_id
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.eventsZClustered(s, dir) // commit v1 + 2-col stats
-      VersionedTable.readVersionPrunedMulti(s,
-        Warehouse.eventsZClusteredPath(dir), 1L,
+      ManifestTable.readVersionPrunedMulti(s,
+        Warehouse.tablePath("events_zclustered", dir), 1L,
         Seq(("user_id", 3L, 7L), ("cents", 2000L, 4000L)))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"))
@@ -334,10 +334,10 @@ object SourceQueries {
       """SELECT doc_id, lang, source, n_chars
         |FROM documents WHERE doc_id IN (7, 123, 321)
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsHashed(s, dir) // commit v1 + stats + blooms
-      VersionedTable.readVersionPrunedBloom(s,
-        Warehouse.documentsHashedPath(dir), 1L, "doc_id",
+      ManifestTable.readVersionPrunedBloom(s,
+        Warehouse.tablePath("documents_hashed", dir), 1L, "doc_id",
         Seq(7L, 123L, 321L))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
@@ -361,10 +361,10 @@ object SourceQueries {
         |WHERE list_contains(regexp_extract_all(lower(text), '[a-z0-9]+'), 'dup')
         |  AND list_contains(regexp_extract_all(lower(text), '[a-z0-9]+'), 'vector')
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsText(s, dir) // commit v1 + token blooms
-      VersionedTable.readVersionSearch(s,
-        Warehouse.documentsTextPath(dir), 1L, "text", Seq("dup", "vector"))
+      ManifestTable.readVersionSearch(s,
+        Warehouse.tablePath("documents_text", dir), 1L, "text", Seq("dup", "vector"))
         .select(col("doc_id"), col("source"),
           expr("CAST(size(regexp_extract_all(text, '[A-Za-z0-9]+', 0)) AS BIGINT)")
             .as("n_tokens"))
@@ -381,10 +381,10 @@ object SourceQueries {
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  MIN(doc_id) AS min_v, MAX(doc_id) AS max_v
         |FROM documents""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.documentsHashed(s, dir) // commit v1 + stats + blooms
-      VersionedTable.statsAgg(s,
-        Warehouse.documentsHashedPath(dir), 1L, "doc_id")
+      ManifestTable.statsAgg(s,
+        Warehouse.tablePath("documents_hashed", dir), 1L, "doc_id")
     },
 
     // ---- c15: shared-file manifest table (O(delta) appends). The
@@ -473,7 +473,7 @@ object SourceQueries {
     // diff. The table was committed as THREE appends; the tail since
     // v1 must be EXACTLY the rows of appends 2 and 3, scheduled from
     // the file-list difference with zero data compared (the
-    // VersionedTable change feed diff-joins two snapshots — O(table);
+    // changeFeed diff-joins two snapshots — O(table);
     // here the delta falls out of the metadata). The oracle is the
     // honest filter over the raw table: a v1 row leaking into the
     // tail, a dropped append-2 row, or a file double-referenced
@@ -580,7 +580,7 @@ object SourceQueries {
         |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, dir) =>
       import graft.sources.ManifestTable
       Warehouse.documentsManifestDfp(s, dir) // build fact once
-      val path = Warehouse.documentsManifestDfpPath(dir)
+      val path = Warehouse.tablePath("documents_mdfp", dir)
       val dim = Tables.documents(s, dir)
         .where(col("doc_id").between(100, 149)
           || col("doc_id").between(480, 499))
@@ -612,7 +612,7 @@ object SourceQueries {
       import graft.sources.ManifestTable
       Warehouse.documentsManifestZorder(s, dir) // scattered → z-ordered v2
       ManifestTable.readVersionPrunedMulti(s,
-        Warehouse.documentsManifestZorderPath(dir), 2L,
+        Warehouse.tablePath("documents_mzord", dir), 2L,
         Seq(("doc_id", 100L, 180L), ("n_chars", 200L, 900L)))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
@@ -637,7 +637,7 @@ object SourceQueries {
       import graft.sources.ManifestTable
       Warehouse.eventsPartEvolved(s, dir) // v1 scattered + v2 clustered
       ManifestTable.readVersionPrunedMulti(s,
-        Warehouse.eventsPartEvolvedPath(dir), 2L,
+        Warehouse.tablePath("events_pevo", dir), 2L,
         Seq(("user_id", 3L, 7L)))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"))
@@ -664,8 +664,7 @@ object SourceQueries {
         |  CAST(SUM(CASE WHEN doc_id % 17 != 0 THEN doc_id END) AS BIGINT) AS sum_id,
         |  CAST(SUM(CASE WHEN doc_id % 17 != 0 THEN n_chars END) AS BIGINT) AS sum_n
         |FROM documents""".stripMargin) { (s, dir) =>
-      val path = "spark-warehouse/bad_records" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+      val path = Warehouse.tablePath("bad_records", dir)
       val line = expr(
         """concat('{"id": ', doc_id, ', "n": ', n_chars,
           |', "source": "', source, '"}')""".stripMargin.replace("\n", ""))
@@ -727,10 +726,10 @@ object SourceQueries {
         |  CAST(SUM(bal_cents) AS BIGINT) AS sum_bal_cents,
         |  TRUE AS match_direct
         |FROM j GROUP BY c_mktsegment ORDER BY segment""".stripMargin) { (s, dir) =>
-      import graft.sources.VersionedTable
+      import graft.sources.ManifestTable
       Warehouse.userSummaryVersioned(s, dir) // build v1/v2/v3
-      val path = Warehouse.userSummaryVersionedPath(dir)
-      val latestV = VersionedTable.latestVersion(s, path)
+      val path = Warehouse.tablePath("user_summary_versioned", dir)
+      val latestV = ManifestTable.latestVersion(s, path)
       val dim = Tables.customer(s, dir).select(
         col("c_custkey"), col("c_mktsegment"),
         expr("CAST(floor(c_acctbal * 100) AS BIGINT)").as("bal_cents"))
@@ -738,12 +737,12 @@ object SourceQueries {
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("user_id"), col("n_events"), col("total_cents"),
           col("c_mktsegment"), col("bal_cents"))
-      val feed = VersionedTable.changeFeed(s, path, 1L, latestV,
+      val feed = ManifestTable.changeFeed(s, path, 1L, latestV,
         Seq("user_id"))
-      val maintained = VersionedTable.incrementalView(
-        enrich(VersionedTable.readVersion(s, path, 1L)), feed,
+      val maintained = ManifestTable.incrementalView(
+        enrich(ManifestTable.readVersion(s, path, 1L)), feed,
         Seq("user_id"), enrich)
-      val direct = enrich(VersionedTable.readVersion(s, path, latestV))
+      val direct = enrich(ManifestTable.readVersion(s, path, latestV))
         .select(col("user_id"), col("n_events").as("d_ne"),
           col("total_cents").as("d_tc"), col("c_mktsegment").as("d_seg"),
           col("bal_cents").as("d_bc"))

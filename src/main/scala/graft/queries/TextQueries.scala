@@ -735,7 +735,7 @@ object TextQueries {
     // breaks the hash.
     QueryDef("m8_binary_ingest", graft.fixtures.Images.oracleSql) { (s, dir) =>
       val pngDir = graft.fixtures.Images.writePngDir(
-        "spark-warehouse/png_files" + dir.replaceAll("[^A-Za-z0-9]", "_"))
+        graft.sources.Warehouse.tablePath("png_files", dir))
       val files = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .load(pngDir)

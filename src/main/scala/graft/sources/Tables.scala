@@ -80,7 +80,7 @@ object Tables {
     // SessionCache.clear(). That matches this engine's sources — the
     // driver's test dirs are generated once and never mutated in
     // place; every mutable-source pattern goes through the
-    // version-addressed readers (VersionedTable/ManifestTable), which
+    // version-addressed readers of ManifestTable, which
     // stay unmemoized. A deploy over in-place-mutable directories
     // must clear the session cache at its refresh boundaries.
     SessionCache.getOrElseUpdate(spark, s"table:$dir/$name") {

@@ -17,6 +17,25 @@ import org.apache.spark.sql.functions._
   */
 object Warehouse {
 
+  /** Where table `name` built from sf dir `dir` lives:
+    * `spark-warehouse/<name><dir with every non-alphanumeric as _>`. */
+  def tablePath(name: String, dir: String): String =
+    s"spark-warehouse/$name${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  /** Table `name` built from sf dir `dir` once per session: `build`
+    * writes it at [[tablePath]], emptied first (a prior run may have
+    * left more versions or files than the build's contract), and
+    * returns the frame to memoize.
+    */
+  private def table(s: SparkSession, name: String, dir: String)(
+      build: String => DataFrame): DataFrame =
+    SessionCache.getOrElseUpdate(s, s"$name:$dir") {
+      val path = tablePath(name, dir)
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      build(path)
+    }
+
   /** Orders partitioned by order month (`o_month` = 'yyyy-MM'), written
     * under the session's spark-warehouse dir and read back as a
     * partitioned table. The partition column is a STRING directory key
@@ -24,9 +43,7 @@ object Warehouse {
     * re-inferred and can shift across engines).
     */
   def ordersByMonth(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"orders_by_month:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/orders_by_month$safe"
+    table(s, "orders_by_month", dir) { path =>
       Tables.orders(s, dir)
         .withColumn("o_month",
           date_format(to_date(col("o_orderdate")), "yyyy-MM"))
@@ -42,9 +59,7 @@ object Warehouse {
     * rectangular metadata, documents travel in parquet.
     */
   def documentsCsv(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_csv:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/documents_csv$safe"
+    table(s, "documents_csv", dir) { path =>
       Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.option("header", "true").mode("overwrite").csv(path)
@@ -89,11 +104,6 @@ object Warehouse {
       s.read.parquet(simhashExportPath)
     }
 
-  /** Orders exported to JSON-lines and read back with an explicit
-    * schema (same rationale as [[documentsCsv]]; Spark's JSON writer
-    * emits shortest-round-trip doubles, so numeric values survive the
-    * text round-trip bit-exact).
-    */
   /** Schema-EVOLVED parquet table: batch 1 writes (doc_id, lang),
     * batch 2 widens to (doc_id, lang, source) — the canonical
     * append-only warehouse evolution — read back through
@@ -103,9 +113,7 @@ object Warehouse {
     * column breaks the hash.
     */
   def documentsEvolved(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_evolved:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/documents_evolved$safe"
+    table(s, "documents_evolved", dir) { path =>
       val docs = Tables.documents(s, dir)
       docs.where(col("doc_id") % 2 === 0).select("doc_id", "lang")
         .write.mode("overwrite").parquet(s"$path/batch=1")
@@ -114,10 +122,13 @@ object Warehouse {
       s.read.option("mergeSchema", "true").parquet(path)
     }
 
+  /** Orders exported to JSON-lines and read back with an explicit
+    * schema (same rationale as [[documentsCsv]]; Spark's JSON writer
+    * emits shortest-round-trip doubles, so numeric values survive the
+    * text round-trip bit-exact).
+    */
   def ordersJson(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"orders_json:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/orders_json$safe"
+    table(s, "orders_json", dir) { path =>
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderpriority"))
@@ -133,9 +144,7 @@ object Warehouse {
     * oracle's job, which aggregates the raw parquet instead).
     */
   def lineitemOrc(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"lineitem_orc:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/lineitem_orc$safe"
+    table(s, "lineitem_orc", dir) { path =>
       Tables.lineitem(s, dir)
         .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
           col("l_extendedprice"))
@@ -151,9 +160,7 @@ object Warehouse {
     * parser with an explicit schema (inference would widen types).
     */
   def documentsXml(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_xml:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/documents_xml$safe"
+    table(s, "documents_xml", dir) { path =>
       val src = Tables.documents(s, dir)
         .select("doc_id", "lang", "source", "text", "n_chars")
       src.write.mode("overwrite")
@@ -186,8 +193,9 @@ object Warehouse {
       s.read.parquet(ivfCentroidsPath)
     }
 
-  /** Versioned per-user summary built from the events table through
-    * [[VersionedTable]] — the c6 time-travel fixture. Three commits:
+  /** Versioned per-user summary built from the events table as
+    * [[ManifestTable.commit]] snapshots — the c6 time-travel fixture.
+    * Three commits:
     * v1 aggregates the `event_id % 3 <> 0` batch, v2 merges in the
     * rest with the q43/streaming full-outer upsert shape, v3 is
     * `compact(v2)` (data-identical, fewer files). Returns the LATEST
@@ -197,29 +205,18 @@ object Warehouse {
     * the raw events and any compaction/versioning corruption breaks
     * the hash. Memoized per (session, sf dir) like every CTAS.
     */
-  def userSummaryVersionedPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/user_summary_versioned$safe"
-  }
-
   def userSummaryVersioned(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"user_summary_versioned:$dir") {
-      val path = userSummaryVersionedPath(dir)
-      // rebuild from scratch: a prior run's directory may hold more
-      // versions than this fixture's contract (exactly v1, v2, v3)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "user_summary_versioned", dir) { path =>
       val events = Tables.events(s, dir)
         .withColumn("cents", expr("CAST(floor(value * 100) AS BIGINT)"))
       def agg(df: DataFrame): DataFrame = df.groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
-      VersionedTable.commit(
+      ManifestTable.commit(
         agg(events.where(col("event_id") % 3 =!= 0)), path, 1L)
       val delta = agg(events.where(col("event_id") % 3 === 0))
         .select(col("user_id").as("d_uid"), col("n_events").as("d_n"),
           col("total_cents").as("d_c"))
-      val merged = VersionedTable.readVersion(s, path, 1L)
+      val merged = ManifestTable.readVersion(s, path, 1L)
         .join(delta, col("d_uid") === col("user_id"), "full_outer")
         .select(
           coalesce(col("user_id"), col("d_uid")).as("user_id"),
@@ -227,37 +224,28 @@ object Warehouse {
             + coalesce(col("d_n"), lit(0L))).as("n_events"),
           (coalesce(col("total_cents"), lit(0L))
             + coalesce(col("d_c"), lit(0L))).as("total_cents"))
-      VersionedTable.commit(merged, path, 2L)
-      VersionedTable.compact(s, path)
-      VersionedTable.latest(s, path)
+      ManifestTable.commit(merged, path, 2L)
+      ManifestTable.compact(s, path)
+      ManifestTable.latest(s, path)
     }
 
   /** A range-CLUSTERED committed snapshot of the user summary for the
     * data-skipping surface: one version, `repartitionByRange(8)` on
-    * user_id so each file covers a disjoint user band, with a
-    * [[VersionedTable.writeStats]] manifest on user_id. The layout is
+    * user_id so each file covers a disjoint user band, with
+    * [[ManifestTable.extendStats]] stats on user_id. The layout is
     * the thing under test — c9 reads it through the manifest prune and
     * must still be value-exact against the raw events.
     */
-  def userSummaryClusteredPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/user_summary_clustered$safe"
-  }
-
   def userSummaryClustered(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"user_summary_clustered:$dir") {
-      val path = userSummaryClusteredPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "user_summary_clustered", dir) { path =>
       val summary = Tables.events(s, dir)
         .withColumn("cents", expr("CAST(floor(value * 100) AS BIGINT)"))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
         .repartitionByRange(8, col("user_id"))
-      VersionedTable.commit(summary, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("user_id"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(summary, path, 1L)
+      ManifestTable.extendStats(s, path, 1L, Seq("user_id"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 
   /** Events z-clustered on (user_id, cents) as a committed version
@@ -267,17 +255,8 @@ object Warehouse {
     * manifests at once (a single-key clustering would give tight
     * stats on one dimension only).
     */
-  def eventsZClusteredPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/events_zclustered$safe"
-  }
-
   def eventsZClustered(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"events_zclustered:$dir") {
-      val path = eventsZClusteredPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "events_zclustered", dir) { path =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("CAST(floor(value * 100) AS BIGINT)").as("cents"))
@@ -287,9 +266,9 @@ object Warehouse {
         .repartitionByRange(16, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
-      VersionedTable.commit(clustered, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("user_id", "cents"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(clustered, path, 1L)
+      ManifestTable.extendStats(s, path, 1L, Seq("user_id", "cents"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 
   /** Deterministic content-hash shard id in [0, nShards): first hex
@@ -310,9 +289,7 @@ object Warehouse {
     * files per partition value within each task).
     */
   def documentsByShard(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_by_shard:$dir") {
-      val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val path = s"spark-warehouse/documents_by_shard$safe"
+    table(s, "documents_by_shard", dir) { path =>
       Tables.documents(s, dir)
         .withColumn("shard", shardId(col("doc_id")))
         .write.partitionBy("shard").mode("overwrite").parquet(path)
@@ -326,52 +303,23 @@ object Warehouse {
     * contrasting the two data-skipping paths (VersionedTableSpec
     * asserts the file counts; c12 reads through the bloom path).
     */
-  def documentsHashedPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_hashed$safe"
-  }
-
   def documentsHashed(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_hashed:$dir") {
-      val path = documentsHashedPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_hashed", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "lang", "source", "n_chars")
         .repartition(8, col("doc_id"))
-      VersionedTable.commit(docs, path, 1L)
-      VersionedTable.writeStats(s, path, 1L, Seq("doc_id"))
-      VersionedTable.writeBloom(s, path, 1L, Seq("doc_id"))
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(docs, path, 1L)
+      ManifestTable.extendStats(s, path, 1L, Seq("doc_id"), blooms = Seq("doc_id"))
+      ManifestTable.readVersion(s, path, 1L)
     }
-
-  /** Documents WITH the text column as a hash-distributed versioned
-    * table carrying a token-bloom manifest (c13's full-text skip
-    * index). Hash layout on doc_id — the worst case for range stats,
-    * the case token blooms are for.
-    */
-  def documentsTextPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_text$safe"
-  }
 
   /** Documents as a SHARED-FILE manifest table built by two O(delta)
     * appends (doc_id < 250, then the rest) with per-file stats
     * extended incrementally — c15 reads the latest version through
     * the manifest; the v2 commit wrote only the second half's files.
     */
-  def documentsManifestPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_manifest$safe"
-  }
-
   def documentsManifest(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_manifest:$dir") {
-      val path = documentsManifestPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_manifest", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
       ManifestTable.commitAppend(
@@ -394,17 +342,8 @@ object Warehouse {
     * matching post-evolution files; results are layout-independent.
     * Returns the table path (the query does the pruned read).
     */
-  def eventsPartEvolvedPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/events_pevo$safe"
-  }
-
   def eventsPartEvolved(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"events_pevo:$dir") {
-      val path = eventsPartEvolvedPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "events_pevo", dir) { path =>
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), expr("CAST(floor(value * 100) AS BIGINT)").as("cents"))
       ManifestTable.commitAppend(
@@ -422,17 +361,8 @@ object Warehouse {
     * predicate-pruned DELETE of doc_id ∈ [100, 199] — returns the
     * post-delete latest version.
     */
-  def documentsManifestDelPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mdel$safe"
-  }
-
   def documentsManifestDel(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mdel:$dir") {
-      val path = documentsManifestDelPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mdel", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
         .repartitionByRange(8, col("doc_id"))
@@ -450,17 +380,8 @@ object Warehouse {
     * the inserts land as one new file; everything else is referenced
     * byte-identical (file accounting spec-audited).
     */
-  def documentsManifestMergePath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mmerge$safe"
-  }
-
   def documentsManifestMerge(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mmerge:$dir") {
-      val path = documentsManifestMergePath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mmerge", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
         .repartitionByRange(8, col("doc_id"))
@@ -482,17 +403,8 @@ object Warehouse {
     * the rows of appends 2 and 3, scheduled as a manifest diff with
     * zero data compared.
     */
-  def documentsManifestTailPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mtail$safe"
-  }
-
   def documentsManifestTail(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mtail:$dir") {
-      val path = documentsManifestTailPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mtail", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
       ManifestTable.commitAppend(
@@ -510,17 +422,8 @@ object Warehouse {
     * then append the other half in the NEW logical schema; the read
     * of the latest version unifies both halves under the new name.
     */
-  def documentsManifestRenamePath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mren$safe"
-  }
-
   def documentsManifestRename(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mren:$dir") {
-      val path = documentsManifestRenamePath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mren", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
       ManifestTable.commitAppend(
@@ -541,7 +444,7 @@ object Warehouse {
   def documentsManifestLineage(s: SparkSession, dir: String): DataFrame =
     SessionCache.getOrElseUpdate(s, s"documents_mlin:$dir") {
       documentsManifestTail(s, dir) // builds the 3-append table
-      val path = documentsManifestTailPath(dir)
+      val path = tablePath("documents_mtail", dir)
       ManifestTable.readVersionLineage(s, path,
         ManifestTable.latestVersion(s, path))
     }
@@ -551,17 +454,8 @@ object Warehouse {
     * then a second valid append lands; reads must see exactly the two
     * valid appends.
     */
-  def documentsManifestCheckedPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mchk$safe"
-  }
-
   def documentsManifestChecked(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mchk:$dir") {
-      val path = documentsManifestCheckedPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mchk", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
       val check = "doc_id >= 0 AND n_chars >= 0"
@@ -587,17 +481,8 @@ object Warehouse {
     * pruning — built once, read through [[ManifestTable
     * .readVersionPrunedByKeys]] with the dim's key set.
     */
-  def documentsManifestDfpPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mdfp$safe"
-  }
-
   def documentsManifestDfp(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mdfp:$dir") {
-      val path = documentsManifestDfpPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mdfp", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
         .repartitionByRange(8, col("doc_id"))
@@ -611,17 +496,8 @@ object Warehouse {
     * n_chars) into 8 rectangle files; the returned path serves the
     * 2-d box read. The spec quantifies the prune delta pre/post.
     */
-  def documentsManifestZorderPath(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"spark-warehouse/documents_mzord$safe"
-  }
-
   def documentsManifestZorder(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_mzord:$dir") {
-      val path = documentsManifestZorderPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_mzord", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "n_chars")
         .repartition(8, col("source")) // scattered on the box dims
@@ -631,17 +507,18 @@ object Warehouse {
       s.emptyDataFrame
     }
 
+  /** Documents WITH the text column as a hash-distributed versioned
+    * table carrying a token blooms (c13's full-text skip
+    * index). Hash layout on doc_id — the worst case for range stats,
+    * the case token blooms are for.
+    */
   def documentsText(s: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrElseUpdate(s, s"documents_text:$dir") {
-      val path = documentsTextPath(dir)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    table(s, "documents_text", dir) { path =>
       val docs = Tables.documents(s, dir)
         .select("doc_id", "source", "text")
         .repartition(8, col("doc_id"))
-      VersionedTable.commit(docs, path, 1L)
-      VersionedTable.writeTokenBloom(s, path, 1L, "text")
-      VersionedTable.readVersion(s, path, 1L)
+      ManifestTable.commit(docs, path, 1L)
+      ManifestTable.extendStats(s, path, 1L, Nil, tokens = Seq("text"))
+      ManifestTable.readVersion(s, path, 1L)
     }
 }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ManifestTable
 
 /** The shared-file manifest layout: O(delta) appends, per-file
-  * metadata outliving versions, refcounting vacuum, CAS commits.
+  * metadata outliving versions and read on the driver, refcounting
+  * vacuum, CAS commits.
   */
 class ManifestTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -49,12 +50,9 @@ class ManifestTableSpec extends AnyFunSuite {
   test("concurrent version publish is CAS: loser retries to the next version") {
     val p = freshPath()
     ManifestTable.commitAppend(df(0, 10), p)
-    // simulate a racing writer that already took v2
-    val winner = new Path(p, "_manifest_v2.json")
-    val out = fs(p).create(winner, false)
-    out.write(ManifestTable.files(spark, p, 1L)
-      .map(n => "\"" + n + "\"").mkString("[", ",", "]").getBytes("UTF-8"))
-    out.close()
+    // simulate a racing writer that already took v2 (with v1's list)
+    org.apache.hadoop.fs.FileUtil.copy(fs(p), new Path(p, "_manifest_v1.json"),
+      fs(p), new Path(p, "_manifest_v2.json"), false, fs(p).getConf)
     // our append must land at v3, on top of the winner's list
     val got = ManifestTable.commitAppend(df(10, 20), p)
     assert(got == 3L)
@@ -65,19 +63,27 @@ class ManifestTableSpec extends AnyFunSuite {
     val p = freshPath()
     ManifestTable.commitAppend(df(0, 100), p)
     ManifestTable.extendStats(spark, p, 1L, Seq("k"))
-    val rowsAfterV1 = ManifestTable.readFileStats(spark, p).count()
-    ManifestTable.commitAppend(df(100, 150), p)
-    ManifestTable.extendStats(spark, p, 2L, Seq("k"))
-    val all = ManifestTable.readFileStats(spark, p)
-    // v1's files were NOT re-sketched: their rows are byte-stable
-    assert(all.count() > rowsAfterV1)
+    val m1 = ManifestTable.fileMeta(spark, p, 1L)
     val v1Names = ManifestTable.files(spark, p, 1L)
-    assert(all.where(col("file").isin(v1Names: _*)).count() == rowsAfterV1)
-    // extendStats on an already-covered version is a no-op
+    ManifestTable.commitAppend(df(100, 150), p)
+    // v1's files are moved out of the pool while v2 is sketched: the
+    // sketch can only succeed if it never scans them
+    val pool = new Path(p, "_pool")
+    val aside = new Path(p, "_aside")
+    fs(p).mkdirs(aside)
+    v1Names.foreach(n => assert(fs(p).rename(new Path(pool, n), new Path(aside, n))))
     ManifestTable.extendStats(spark, p, 2L, Seq("k"))
-    assert(ManifestTable.readFileStats(spark, p).count() == all.count())
-    // and the versioned stats views disagree exactly by the delta files
-    assert(ManifestTable.statsFor(spark, p, 1L).count() == rowsAfterV1)
+    v1Names.foreach(n => assert(fs(p).rename(new Path(aside, n), new Path(pool, n))))
+    // v1's entries were reused unchanged; the delta files gained theirs
+    val m2 = ManifestTable.fileMeta(spark, p, 2L)
+    assert(m2.keySet == ManifestTable.files(spark, p, 2L).toSet && m2.size > m1.size)
+    assert(v1Names.forall(n => m2(n) == m1(n)))
+    // extendStats on an already-covered version runs no job
+    val (_, again) = scala.util.Using.resource(new MetricsLedger(spark.sparkContext))(
+      _.measure(ManifestTable.extendStats(spark, p, 2L, Seq("k"))))
+    assert(again.jobs == 0 && ManifestTable.fileMeta(spark, p, 2L) == m2)
+    // and each version's sketches cover exactly its own files
+    assert(ManifestTable.fileMeta(spark, p, 1L).keySet == v1Names.toSet)
   }
 
   test("pruned read through per-file stats; missing stats fail loudly") {
@@ -109,14 +115,14 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(d1 == Seq(1L) && dead1.isEmpty)
     assert(ManifestTable.readVersion(spark, p, 2L).count() == 150L)
     // keep only v3: every v1/v2 file is now unreachable and reclaimed,
-    // and their stats rows go with them
+    // and their sketches go with them
     val (d2, dead2) = ManifestTable.vacuum(spark, p, keep = 1)
     assert(d2 == Seq(2L) && dead2.nonEmpty)
     assert(ManifestTable.readVersion(spark, p, 3L).count() == 150L)
-    val statFiles = ManifestTable.readFileStats(spark, p)
-      .select("file").distinct().collect().map(_.getString(0)).toSet
-    assert(statFiles.intersect(dead2.toSet).isEmpty,
-      "vacuum left stats rows for deleted files")
+    val statFiles = ManifestTable.committedVersions(spark, p)
+      .flatMap(ManifestTable.fileMeta(spark, p, _).keys).toSet
+    assert(statFiles.nonEmpty && statFiles.intersect(dead2.toSet).isEmpty,
+      "vacuum left sketches of deleted files")
     // compaction's fresh files still read the full data
     assert(ManifestTable.latest(spark, p)
       .agg(sum("k")).head.getLong(0) == (0L until 150L).sum)
@@ -156,6 +162,14 @@ class ManifestTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       ManifestTable.deleteWhere(spark, p, "k", 0L, 10L)
     }
+    // a NULL key is outside every band: its row survives the rewrite
+    val q = freshPath()
+    ManifestTable.commitAppend(Seq((Option(120L), 1L), (None, 2L), (Option(5L), 3L))
+      .toDF("k", "v").coalesce(1), q)
+    ManifestTable.extendStats(spark, q, 1L, Seq("k"))
+    val vq = ManifestTable.deleteWhere(spark, q, "k", 100L, 200L)
+    assert(ManifestTable.readVersion(spark, q, vq).select("v").as[Long]
+      .collect().sorted.toSeq == Seq(2L, 3L))
   }
 
   test("mergeInto rewrites ONLY files actually holding matched keys; " +
@@ -279,7 +293,16 @@ class ManifestTableSpec extends AnyFunSuite {
     val out = fs(p).create(new Path(p, "_manifest_v1.json"), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     val e = intercept[IllegalArgumentException](ManifestTable.files(spark, p, 1L))
-    assert(e.getMessage.contains("round-trip mismatch"), e.getMessage)
+    assert(e.getMessage.contains("unknown field txn"), e.getMessage)
+    // the same holds for the per-file sketches
+    val q = freshPath()
+    ManifestTable.commitAppend(df(0, 10), q)
+    val meta = new Path(q, "_meta_v1.json")
+    val out2 = fs(q).create(meta, true)
+    try out2.write(names.take(1).map(n => "{\"files\":{\"" + n + "\":{\"zones\":{}}}}")
+      .head.getBytes("UTF-8")) finally out2.close()
+    val e2 = intercept[IllegalArgumentException](ManifestTable.fileMeta(spark, q, 1L))
+    assert(e2.getMessage.contains("unknown field zones"), e2.getMessage)
   }
 
   test("renameColumn is metadata-only: byte-identical file references, " +
@@ -483,5 +506,34 @@ class ManifestTableSpec extends AnyFunSuite {
     assert(ManifestTable.readVersion(spark, p, 1L).count() == 50L)
     val (_, dead) = ManifestTable.vacuum(spark, p, keep = 1)
     assert(dead.contains("v9_orphan.parquet"))
+  }
+
+  test("driver-side pruning: every file selection and statsAgg run zero Spark jobs") {
+    import spark.implicits._
+    val p = freshPath()
+    val data = (0L until 400L).map(i => (i, i % 50, s"common word${i / 100}"))
+      .toDF("k", "y", "text").repartitionByRange(8, col("k"))
+    ManifestTable.commitAppend(data, p)
+    ManifestTable.extendStats(spark, p, 1L, Seq("k", "y"), blooms = Seq("k"),
+      tokens = Seq("text"))
+    val ((range, multi, bloom, token, keys, agg), counts) =
+      scala.util.Using.resource(new MetricsLedger(spark.sparkContext)) { ledger =>
+        ledger.measure {
+          (ManifestTable.prunedFiles(spark, p, 1L, "k", 10L, 40L)._1,
+            ManifestTable.prunedFilesMulti(spark, p, 1L,
+              Seq(("k", 10L, 40L), ("y", 0L, 5L))),
+            ManifestTable.prunedFilesBloom(spark, p, 1L, "k", Seq(7L, 390L))._1,
+            ManifestTable.prunedFilesToken(spark, p, 1L, "text", Seq("word2"))._1,
+            ManifestTable.prunedFilesByKeys(spark, p, 1L, "k", Seq(5L, 395L)),
+            ManifestTable.statsAgg(spark, p, 1L, "k").collect().head)
+        }
+      }
+    assert(counts.jobs == 0, s"file selection ran ${counts.jobs} Spark jobs")
+    // the selections are real skips, and the answers exact
+    assert(range.size == 1 && multi.size == 1 && bloom.size <= 2 &&
+      token.size <= 2 && keys.size == 2, (range, multi, bloom, token, keys))
+    assert(agg == org.apache.spark.sql.Row(400L, 0L, 399L))
+    assert(ManifestTable.readVersionSearch(spark, p, 1L, "text", Seq("word2"))
+      .count() == 100L)
   }
 }

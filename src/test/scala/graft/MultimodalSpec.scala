@@ -530,4 +530,30 @@ class MultimodalSpec extends AnyFunSuite {
       graft.operators.Jpeg.triage(_), "is_jpeg", sigLen = 2)
     assert(bad.size == 0, s"violations, first: ${bad.take(5).mkString("; ")}")
   }
+
+  test("payload fixtures encode on executors with no Exchange and the driver encoders' bytes") {
+    import graft.fixtures.{Audio, Gif, Images, Video}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Plans extends AdaptiveSparkPlanHelper
+    def png(specs: Seq[(Long, Int, Int, Int)]) =
+      specs.map(t => t._1 -> Images.encodePng(t._2, t._3, t._4))
+    val cases = Seq(
+      "mp4" -> (Video.mp4Payloads(spark), Video.specs.map(sp => sp.doc_id -> Video.encodeMp4(sp))),
+      "png" -> (Images.pngPayloads(spark), png(Images.specs)),
+      "jpeg" -> (Images.jpegPayloads(spark),
+        Images.specs.map(t => t._1 -> Images.encodeJpeg(t._2, t._3, t._4))),
+      "neardup" -> (Images.neardupPayloads(spark), png(Images.neardupSpecs)),
+      "wav" -> (Audio.wavPayloads(spark),
+        Audio.specs.map(t => t._1 -> Audio.encodeWav(t._2, t._3, t._4))),
+      "gif" -> (Gif.gifPayloads(spark), Gif.specs.map(sp => sp.doc_id -> Gif.encodeGif(sp))))
+    for ((name, (df, expected)) <- cases) {
+      val rows = df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq)
+      assert(rows.toMap == expected.map { case (id, b) => id -> b.toSeq }.toMap &&
+        rows.length == expected.size, name)
+      val plan = df.queryExecution.executedPlan
+      assert(Plans.collect(plan) { case e: Exchange => e }.isEmpty,
+        s"$name payloads plan an Exchange:\n$plan")
+    }
+  }
 }

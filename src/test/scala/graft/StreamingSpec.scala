@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{KmvSketch, MisraGries, QuantileSketch}
-import graft.sources.{Tables, VersionedTable}
+import graft.sources.{ManifestTable, Tables}
 
 /** Micro-batch use of the batch building blocks. The engine runs no
   * Structured Streaming query, but its sketches, its change-feed
@@ -106,15 +106,15 @@ class StreamingSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n_events"),
           sum(expr("CAST(floor(value * 100) AS BIGINT)")).as("total_cents"))
     def upsert(rows: Seq[(Long, Long, Long, String, Double)], batchId: Long): Unit = {
-      val merged = VersionedTable.committedVersions(spark, dir)
+      val merged = ManifestTable.committedVersions(spark, dir)
         .filter(_ < batchId).sorted.lastOption match {
         case None => delta(rows)
         case Some(pv) =>
-          VersionedTable.readVersion(spark, dir, pv).unionByName(delta(rows))
+          ManifestTable.readVersion(spark, dir, pv).unionByName(delta(rows))
             .groupBy("user_id")
             .agg(sum("n_events").as("n_events"), sum("total_cents").as("total_cents"))
       }
-      VersionedTable.commit(merged, dir, batchId)
+      ManifestTable.commit(merged, dir, batchId)
     }
     def rowsOf(df: DataFrame): Set[(Long, Long, Long)] =
       df.select("user_id", "n_events", "total_cents").collect()
@@ -125,25 +125,25 @@ class StreamingSpec extends AnyFunSuite {
     val b1 = Seq((3L, 3L, 2L, "view", 0.75), (4L, 4L, 3L, "view", 4.00))
     upsert(b0, 0L)
     upsert(b1, 1L)
-    val got = rowsOf(VersionedTable.latest(spark, dir))
+    val got = rowsOf(ManifestTable.latest(spark, dir))
     // batch-side truth: groupBy over ALL rows (150+225=375 etc.)
     assert(got == rowsOf(delta(b0 ++ b1)))
     assert(got == Set((1L, 1L, 150L), (2L, 2L, 300L), (3L, 1L, 400L)), s"got $got")
     // MVCC history: the intermediate version holds only batch-0 state
-    val v0 = rowsOf(VersionedTable.readVersion(spark, dir, 0L))
+    val v0 = rowsOf(ManifestTable.readVersion(spark, dir, 0L))
     assert(v0 == Set((1L, 1L, 150L), (2L, 1L, 225L)), s"v0: $v0")
     // a retried micro-batch re-derives its version from the same
     // predecessor: no double count
     upsert(b1, 1L)
-    assert(VersionedTable.committedVersions(spark, dir).sorted == Seq(0L, 1L))
-    assert(rowsOf(VersionedTable.latest(spark, dir)) == got)
-    // a crash-interrupted write (a version directory without _SUCCESS,
-    // or an unrenamed _staging_*) never becomes "latest"
-    new java.io.File(dir, "v99").mkdirs()
-    Files.writeString(java.nio.file.Paths.get(dir, "v99", "part-00000.parquet"), "torn")
-    new java.io.File(dir, "_staging_v98").mkdirs()
-    val still = rowsOf(VersionedTable.latest(spark, dir))
-    assert(still == got, s"uncommitted v99/_staging must be invisible: $still")
+    assert(ManifestTable.committedVersions(spark, dir).sorted == Seq(0L, 1L))
+    assert(rowsOf(ManifestTable.latest(spark, dir)) == got)
+    // a crash-interrupted write (an unrenamed manifest temp file plus
+    // a pool file no manifest names) never becomes "latest"
+    Files.writeString(java.nio.file.Paths.get(dir, "_tmp_torn__manifest_v99.json"), "torn")
+    Files.writeString(java.nio.file.Paths.get(dir, "_pool", "v99_part-torn.parquet"), "torn")
+    assert(ManifestTable.committedVersions(spark, dir).sorted == Seq(0L, 1L))
+    val still = rowsOf(ManifestTable.latest(spark, dir))
+    assert(still == got, s"the torn v99 must be invisible: $still")
   }
 
   test("streaming Misra-Gries state equals the same-order batch fold across batches") {
@@ -224,7 +224,7 @@ class StreamingSpec extends AnyFunSuite {
     // the one before by the signed-delta algebra
     def rollups(splits: Seq[Seq[(Long, Long, Long, String)]]): Seq[Map[Long, (Long, Long, Long)]] =
       splits.scanLeft(empty) { (agg, b) =>
-        VersionedTable.incrementalAgg(agg,
+        ManifestTable.incrementalAgg(agg,
           b.toDF("user_id", "n_events", "total_cents", "_change_type")
             .withColumn("bucket", pmod(col("user_id"), lit(4L))),
           Seq("bucket"), "n_users",
