@@ -189,12 +189,6 @@ object Explain {
         |aggregate; both are partial-aggregated before their exchanges) — at
         |production scale the hourly aggregate is the thing to materialize
         |once, exactly like the memoized pair sets in TextQueries.""".stripMargin,
-    "d13_editdist_pairs" ->
-      """Candidate generation is a shuffled equi-join on (lang, length
-        |bucket) — no CartesianProduct / BroadcastNestedLoopJoin; the
-        |Levenshtein DP runs codegen'd inside the join's output filter on
-        |120-char prefixes, so per-pair cost is bounded regardless of
-        |document length.""".stripMargin,
     "p9_heavy_hitters" ->
       """Misra-Gries: the sketch side is a two-phase ObjectHashAggregate —
         |partial MG buffers (≤64 counters) built map-side, ONE merged buffer

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.Loops
 
 /** Byte-pair encoding as a RELATIONAL iterative operator — subword
   * tokenization with engine-portable semantics (no opaque UDF doing
@@ -42,18 +43,13 @@ import org.apache.spark.sql.functions._
   *     artifact broadcasts, the corpus scan never shuffles).
   *
   * Loop discipline mirrors Graph/Dedup: vocab-sized state is
-  * localCheckpointed per round (Loops.checkpointPartitioned keeps the
+  * localCheckpointed per round (`Loops.checkpoint` keeps the
   * word-hash partitioning, so no round re-exchanges), superseded
   * generations are freed eagerly, and the per-round argmax is the
   * only driver-side scalar (a 1-row collect — control plane, same as
   * PageRank's convergence delta).
   */
 object Bpe {
-
-  private def ckpt(df: DataFrame): DataFrame =
-    graft.plans.Loops.checkpointPartitioned(df)
-  private def release(df: DataFrame): Unit =
-    graft.plans.Loops.releaseCheckpoint(df)
 
   /** Trained result: the merge table in application order, and the
     * final vocabulary segmentation (w, c, n_sub).
@@ -105,7 +101,7 @@ object Bpe {
     */
   def train(vocab: DataFrame, rounds: Int): Trained = {
     val byPos = Window.partitionBy("w").orderBy("pos")
-    var state = ckpt(charState(vocab))
+    var state = Loops.checkpoint(charState(vocab))
     var merges = Vector.empty[(String, String)]
     var done = false
     var round = 0
@@ -121,8 +117,8 @@ object Bpe {
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges :+= ((a, b))
-        val next = ckpt(applyMerge(state, a, b))
-        release(state)
+        val next = Loops.checkpoint(applyMerge(state, a, b))
+        Loops.releaseCheckpoint(state)
         state = next
       }
       round += 1

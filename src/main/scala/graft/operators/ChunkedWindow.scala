@@ -78,8 +78,8 @@ object ChunkedWindow {
     // group count below is the action that materializes it — one job
     // where the eager form paid the window job plus the count job.
     // (The count's distinct consumes every partition, satisfying the
-    // Loops fusion contract; the level knob now applies here too.)
-    val part = graft.plans.Loops.checkpointLazy(df
+    // Loops.checkpoint fusion contract; the level knob applies here too.)
+    val part = graft.plans.Loops.checkpoint(df
       .withColumn("gw_bucket", expr(s"$ordCol div ${bucketWidth}L"))
       .withColumn("gw_idx", row_number().over(wB))
       .withColumn("gw_cnt", count(lit(1)).over(
@@ -89,7 +89,8 @@ object ChunkedWindow {
         coalesce(sum(col(vCol).cast("long")).over(trail), lit(0L)))
       .withColumn("gw_s2w",
         coalesce(sum(col(vCol).cast("long") * col(vCol).cast("long"))
-          .over(trail), lit(0L))))
+          .over(trail), lit(0L))),
+      eager = false, keepPartitioning = false)
     // Last <=frame rows of each bucket, as an ord-ordered value array.
     val tails = part.where(col("gw_idx") > col("gw_cnt") - frame)
       .groupBy(col(seriesCol), col("gw_bucket"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.plans.Loops
 
 /** Deduplication operators for LLM training-data pipelines. Every
   * near-dup variant is bucketed (band-hash or inverted-index joins),
@@ -426,7 +427,7 @@ object Dedup {
     * data.
     *
     * One-partition finish: when the measured edge count fits ONE
-    * partition by the loop width rule (`Loops.adaptedPartitions` is 1,
+    * partition by the loop width rule (`Loops.fitsOneTask`,
     * ≤ 2,097,152 edge rows at the 64 MB default) and the ids are
     * integral, no round runs — one Spark task (`coalesce(1)` +
     * `mapPartitions`) runs an exact union-find. Task memory is ≤ 40 B per
@@ -455,10 +456,11 @@ object Dedup {
     // replaces was a full extra exchange+aggregate of the edge table
     // per invocation (the round-7 p6/d10 regression).
     val spark = pairs.sparkSession
-    val edges0 = graft.plans.Loops.checkpointPartitionedLazy(
+    val edges0 = Loops.checkpoint(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .repartition(col("dst")))
+        .repartition(col("dst")),
+      eager = false)
     // The count materializes the prep checkpoint (same one job the old
     // eager form paid) AND sizes the loop: rounds run at a width
     // derived from the measured edge cardinality instead of the
@@ -475,16 +477,14 @@ object Dedup {
     // edge-join output regardless of how few labels changed — the
     // state that flows does not contract with `changed`, so a width
     // sized from the invariant edge table is right for every round.
-    val nParts = graft.plans.Loops.adaptedPartitions(spark, nE)
+    val nParts = Loops.adaptedPartitions(spark, nE)
     val edges =
       if (nParts < spark.sessionState.conf.numShufflePartitions) {
-        val e = graft.plans.Loops.checkpointPartitioned(
-          edges0.repartition(nParts, col("dst")))
-        graft.plans.Loops.releaseCheckpoint(edges0)
+        val e = Loops.checkpoint(edges0.repartition(nParts, col("dst")))
+        Loops.releaseCheckpoint(edges0)
         e
       } else edges0
-    graft.plans.Loops.withShufflePartitions(spark, nParts) {
-    graft.plans.Loops.withStablePartitioning(pairs.sparkSession) {
+    Loops.scope(spark, nE) { sc =>
       // Node set = distinct dst of the ALREADY dst-partitioned edge
       // table: exchange-free, and left LAZY — round 1 fuses the init
       // into its own job instead of paying a separate
@@ -505,23 +505,23 @@ object Dedup {
         // changed-row count is the action that materializes the round's
         // checkpoint — one job per round where the eager form paid a
         // materialization job plus the count job (count touches every
-        // partition, so the fusion contract in Loops holds).
-        val next = graft.plans.Loops.checkpointPartitionedLazy(
+        // partition, so the Loops.checkpoint fusion contract holds).
+        val next = sc.checkpoint(
           labels.withColumn("own", lit(true))
             .unionByName(neighborMin)
             .groupBy("id").agg(min("label").as("label"),
-              max(when(col("own"), col("label"))).as("prev")))
+              max(when(col("own"), col("label"))).as("prev")),
+          eager = false)
         changed = next.where(col("label") =!= col("prev")).count()
         // `next` is materialized and the count has run — the previous
         // round's checkpoint has no readers left; free it so loop
         // memory stays O(state), not O(state × rounds)
-        if (lastCut != null) graft.plans.Loops.releaseCheckpoint(lastCut)
+        if (lastCut != null) sc.release(lastCut)
         lastCut = next
         labels = next.select("id", "label")
       }
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
     }
-    } // withShufflePartitions
   }
 
   /** O(log n)-round connected components via alternating
@@ -568,34 +568,22 @@ object Dedup {
     // materializes the checkpoint and replaces the separate isEmpty
     // job; the running edge-set cardinality then powers the per-round
     // convergence short-circuit below.
-    var edges = graft.plans.Loops.checkpointLazy(pairs
+    var edges = Loops.checkpoint(pairs
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .where(col("a") =!= col("b"))
-      .distinct())
+      .distinct(), eager = false, keepPartitioning = false)
     var nEdges = edges.count()
     var rounds = 0
     var converged = nEdges == 0L
     var oneTask = fitsOneTask(edges, nEdges)
-    // same loop discipline as the fixpoint variant: keep round-to-round
-    // partition counts stable so the contraction passes stay aligned —
-    // at a width derived from the measured edge cardinality (r17
-    // optimization round, guide §2): contraction only shrinks the edge
-    // set, so the initial count bounds every round, and a small
-    // problem stops paying session-width per-task overhead for each of
-    // its ~log(n) rounds' shuffles. Clamped to the session width for
-    // big inputs — and RE-narrowed as the contraction proceeds (r18,
-    // r17 verdict item 4): the per-round count is free (it rides the
-    // checkpoint-materializing job), so when the live edge set drops a
-    // decade below what sized the current width, the remaining rounds
-    // narrow with it instead of running ~log(n) tail rounds at a width
-    // sized for the peak. Width only ever shrinks; no realignment pass
-    // is needed because every round's contraction re-exchanges the
-    // live set through its own groupBy anyway.
-    var sizedFrom = nEdges
-    graft.plans.Loops.withShufflePartitions(pairs.sparkSession,
-      graft.plans.Loops.adaptedPartitions(pairs.sparkSession, nEdges)) {
-    graft.plans.Loops.withStablePartitioning(pairs.sparkSession) {
+    // One loop scope sized from the measured edge count: contraction
+    // only shrinks the edge set, so the initial count bounds every
+    // round, and each round's count (free: it rides the checkpoint-
+    // materializing job) narrows the scope as the live set contracts.
+    // No realignment pass is needed because every round's contraction
+    // re-exchanges the live set through its own groupBy anyway.
+    Loops.scope(pairs.sparkSession, nEdges) { sc =>
     while (!converged && !oneTask && rounds < maxRounds) {
       // LARGE-STAR: around each node u, connect every LARGER neighbor
       // to m(u) = min(N(u) ∪ {u}). Each canonical edge is emitted
@@ -616,12 +604,13 @@ object Dedup {
       // connect u and all (smaller) neighbors to their minimum.
       val dirMins = large.groupBy(col("b").as("u"))
         .agg(min(col("a")).as("m"))
-      val small = graft.plans.Loops.checkpointLazy(
+      val small = sc.checkpoint(
         large.join(dirMins, large("b") === dirMins("u"))
           .select(col("m").as("a"), large("a").as("b"))
           .union(dirMins.select(col("m").as("a"), col("u").as("b")))
           .where(col("a") =!= col("b"))
-          .distinct())
+          .distinct(),
+        eager = false, keepPartitioning = false)
       // Materialize the round's checkpoint through its count — the
       // count doubles as the convergence SHORT-CIRCUIT: both edge sets
       // are distinct, so different cardinalities prove the pass was
@@ -641,19 +630,14 @@ object Dedup {
       // this round's jobs were the old edge checkpoint's last readers
       // — free its generation (the contraction sequence would
       // otherwise hold every round's edge set simultaneously)
-      graft.plans.Loops.releaseCheckpoint(edges)
+      sc.release(edges)
       edges = small
       nEdges = nSmall
       rounds += 1
       oneTask = !converged && fitsOneTask(edges, nEdges)
-      if (!converged && !oneTask &&
-        nEdges <= sizedFrom / graft.plans.Loops.RenarrowFactor) {
-        graft.plans.Loops.renarrow(pairs.sparkSession, nEdges)
-        sizedFrom = nEdges
-      }
+      if (!converged && !oneTask) sc.narrow(nEdges)
     }
-    } // withStablePartitioning
-    } // withShufflePartitions
+    }
     if (oneTask) return (componentsInOneTask(edges, nEdges), rounds)
     // At the fixpoint every component is a star rooted at its min:
     // each edge (root, v) labels v; roots label themselves.
@@ -669,7 +653,7 @@ object Dedup {
     * `long` and back losslessly. Other id types keep the rounds.
     */
   private def fitsOneTask(edges: DataFrame, rows: Long): Boolean =
-    graft.plans.Loops.adaptedPartitions(edges.sparkSession, rows) == 1 &&
+    Loops.fitsOneTask(edges.sparkSession, rows) &&
       edges.schema.fields.forall(_.dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
@@ -783,8 +767,8 @@ object Dedup {
     // query's first consuming stage computes the blocks (the three
     // readers then hit the block-manager cache; concurrent stages
     // serialize on the per-partition compute lock, never duplicate).
-    val kept = graft.plans.Loops.checkpointPartitionedLazy(
-      sh.join(dfMap, Seq("g"), "left_semi"))
+    val kept = Loops.checkpoint(sh.join(dfMap, Seq("g"), "left_semi"),
+      eager = false)
     val sizes = kept.groupBy(idCol).agg(count(lit(1)).as("sz"))
     val near = kept.where(col("is_new")).select(col(idCol).as("a_id"), col("g"))
       .join(kept.where(!col("is_new")).select(col(idCol).as("b_id"), col("g")),
@@ -934,7 +918,7 @@ object Dedup {
     // the next action over `arrs` and consumes every partition (a full
     // explode → groupBy), so it materializes these blocks en route —
     // one job instead of an arrs-materialization job plus the hsorted
-    // build (the Loops fusion contract). Phase 2's broadcasts then
+    // build (the Loops.checkpoint fusion contract). Phase 2's broadcasts then
     // read the already-persisted blocks.
     val arrs = docs
       .where(size(Curation.tokens(col(textCol))) >= gramN)

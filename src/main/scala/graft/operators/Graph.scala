@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Loops
 
-/** Iterative graph analytics on plain DataFrames — the same
-  * loop-with-lineage-cut discipline as plans/Recursion (localCheckpoint
-  * per round, no RDD API, no GraphX dependency).
+/** Iterative graph analytics on plain DataFrames — each loop runs in
+  * one `plans.Loops.scope` at the session width, cutting lineage with
+  * the scope's partition-keeping checkpoints (no RDD API, no GraphX
+  * dependency).
   *
   * Scale shape per iteration: ONE shuffle — the contribution sum keyed
   * by destination (map-side combined). The rank-onto-edge join is
@@ -33,24 +35,6 @@ import org.apache.spark.sql.functions._
   * before the aggregate (exact, order-free) and back to DOUBLE after.
   */
 object Graph {
-
-  // loop discipline shared with the CC loops: AQE coalescing of the
-  // tiny per-round rank exchange would break the static co-partitioning
-  // with the edge table and force an edge reshuffle per round — see
-  // plans/Loops.withStablePartitioning
-  private def withStablePartitioning[T](
-      spark: org.apache.spark.sql.SparkSession)(f: => T): T =
-    graft.plans.Loops.withStablePartitioning(spark)(f)
-
-  // loop-invariant / loop-state materialization that KEEPS its hash
-  // partitioning across the lineage cut — see Loops.checkpointPartitioned
-  private def ckpt(df: DataFrame): DataFrame =
-    graft.plans.Loops.checkpointPartitioned(df)
-
-  // free a superseded in-loop checkpoint's blocks (NEVER prepared
-  // state or the returned result) — see Loops.releaseCheckpoint
-  private def release(df: DataFrame): Unit =
-    graft.plans.Loops.releaseCheckpoint(df)
 
   /** Materialized loop state shared by the fixed-iteration and
     * convergence drivers: edges-with-degree (src, dst, outdeg)
@@ -101,7 +85,7 @@ object Graph {
             "Feed both edge directions or call prepare(symmetric=false).")
       }
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val ewd = ckpt(e.join(deg, Seq("src")))
+      val ewd = Loops.checkpoint(e.join(deg, Seq("src")))
       // lazy: consumed once by the r0 init (partitioned by src already)
       val nodes = ewd.select(col("src").as("node")).distinct()
       return Prepared(ewd, nodes, nodes.count(), symmetric = true)
@@ -113,18 +97,18 @@ object Graph {
     // recompute. This is the artifact to persist BUCKETED by src on a
     // real cluster. The equi-join on src already leaves the output
     // hash-partitioned by src (no explicit repartition needed — that
-    // was a whole redundant exchange of the edge table), and
-    // checkpointPartitioned carries that partitioning across the
-    // lineage cut (a plain adaptive localCheckpoint LOSES it — see
-    // Loops.checkpointPartitioned), so every iteration's rank join is
+    // was a whole redundant exchange of the edge table), and the
+    // partition-keeping checkpoint carries that partitioning across
+    // the lineage cut (a plain adaptive localCheckpoint LOSES it — see
+    // Loops.LoopScope), so every iteration's rank join is
     // exchange-free on BOTH sides (see class doc) and the edge table
     // never reshuffles — asserted by GraphSpec's loop-plan test.
-    val ewd = ckpt(e.join(deg, Seq("src")))
+    val ewd = Loops.checkpoint(e.join(deg, Seq("src")))
     // derive the node set from the ALREADY-MATERIALIZED edge table
     // (inner join with deg drops no rows — every src has a degree), so
     // the upstream edge derivation runs exactly once, not once per
     // consumer. distinct() leaves it hash-partitioned by node.
-    val nodes = ckpt(ewd.select(col("src").as("node"))
+    val nodes = Loops.checkpoint(ewd.select(col("src").as("node"))
       .union(ewd.select(col("dst").as("node"))).distinct())
     Prepared(ewd, nodes, nodes.count())
   }
@@ -202,7 +186,7 @@ object Graph {
     // plan test pins the reuse). Long runs cut lineage periodically
     // below, and the 100 TB path remains prepare()/pageRankPrepared
     // over a bucketed edge table.
-    withStablePartitioning(e.sparkSession) {
+    Loops.scope(e.sparkSession) { sc =>
       // ONE eager materialization: the whole loop (edge build included)
       // executes as a single fused job inside the conf scope, and the
       // caller's post-processing reads an O(nodes) checkpoint.
@@ -217,7 +201,8 @@ object Graph {
       // previously paid (measured ~0.6 s of g1's official time under
       // a busy bench session).
       val nRow = deg.agg(count(lit(1)).cast("double").as("n"))
-      ckpt(symmetricScaledLoop(e, deg, iters, damping, checkpointEvery)
+      sc.checkpoint(symmetricScaledLoop(e, deg, iters, damping,
+          checkpointEvery, Some(sc))
         .crossJoin(broadcast(nRow))
         .select(col("node"), (col("s") / col("n")).as("r")))
     }
@@ -229,15 +214,20 @@ object Graph {
     * a bare RDD scan).
     */
   private[graft] def symmetricScaledLoop(e: DataFrame, deg: DataFrame,
-      iters: Int, damping: Double, checkpointEvery: Int = 5): DataFrame =
-    ewdScaledLoop(e.join(deg, Seq("src")), iters, damping, checkpointEvery)
+      iters: Int, damping: Double, checkpointEvery: Int = 5,
+      scope: Option[Loops.LoopScope] = None): DataFrame =
+    ewdScaledLoop(e.join(deg, Seq("src")), iters, damping, checkpointEvery,
+      scope)
 
   /** The same scale-free loop over a PRE-BUILT (src, dst, outdeg)
     * table — the body both the lazy fused path and the prepared/CTAS
     * path share. Round 1 comes straight off the edge table (s⁰ ≡ 1).
+    * Periodic cuts go through `scope` (plan tests run the lazy loop
+    * with no scope and no cut).
     */
   private[graft] def ewdScaledLoop(ewd: DataFrame,
-      iters: Int, damping: Double, checkpointEvery: Int = 5): DataFrame = {
+      iters: Int, damping: Double, checkpointEvery: Int = 5,
+      scope: Option[Loops.LoopScope] = None): DataFrame = {
     var s = ewd
       .select(col("dst").as("node"),
         (lit(1.0) / col("outdeg")).cast("decimal(30,15)").as("c"))
@@ -252,10 +242,10 @@ object Graph {
         .groupBy("node").agg(sum("c").as("csum"))
         .select(col("node"), scaledAffine(damping).as("s"))
       if (i % checkpointEvery == 0 && i < iters) {
-        s = ckpt(s)
+        s = scope.get.checkpoint(s)
         // the new cut read the old one while materializing — its
         // generation is now dead weight
-        if (lastCut != null) release(lastCut)
+        if (lastCut != null) scope.get.release(lastCut)
         lastCut = s
       }
     }
@@ -277,8 +267,9 @@ object Graph {
     require(p.symmetric,
       "pageRankSymmetricPrepared needs prepare(symmetric = true)")
     require(iters >= 1, "pageRankSymmetricPrepared needs at least one round")
-    withStablePartitioning(p.ewd.sparkSession) {
-      ckpt(ewdScaledLoop(p.ewd, iters, damping, checkpointEvery)
+    Loops.scope(p.ewd.sparkSession) { sc =>
+      sc.checkpoint(ewdScaledLoop(p.ewd, iters, damping, checkpointEvery,
+          Some(sc))
         .select(col("node"), (col("s") / lit(p.n.toDouble)).as("r")))
     }
   }
@@ -316,29 +307,30 @@ object Graph {
     */
   def pageRankPrepared(p: Prepared, iters: Int = 3,
       damping: Double = 0.85, checkpointEvery: Int = 5): DataFrame =
-    withStablePartitioning(p.ewd.sparkSession) {
+    Loops.scope(p.ewd.sparkSession) { sc =>
       // eager final materialization so the whole loop EXECUTES inside
-      // the stable-partitioning scope (a lazily-returned plan would run
-      // at the caller's collect time, after the conf is restored); the
+      // the loop scope (a lazily-returned plan would run at the
+      // caller's collect time, after the conf is restored); the
       // caller's post-processing then reads one checkpointed O(nodes)
       // table
-      ckpt(pageRankLoop(p, iters, damping, checkpointEvery))
+      sc.checkpoint(pageRankLoop(p, iters, damping, checkpointEvery, Some(sc)))
     }
 
   /** The lazy loop plan behind [[pageRankPrepared]] — internal so the
     * plan tests can inspect the per-round join/aggregate structure
     * (the public entry returns the checkpointed RESULT, whose plan is
-    * just an RDD scan).
+    * just an RDD scan). Periodic cuts go through `scope`.
     */
   private[graft] def pageRankLoop(p: Prepared, iters: Int,
-      damping: Double, checkpointEvery: Int = 5): DataFrame = {
+      damping: Double, checkpointEvery: Int = 5,
+      scope: Option[Loops.LoopScope] = None): DataFrame = {
     var ranks = p.nodes.withColumn("r", lit(1.0 / p.n))
     var lastCut: DataFrame = null
     for (i <- 1 to iters) {
       ranks = step(p, ranks, damping)
       if (i % checkpointEvery == 0 && i < iters) {
-        ranks = ckpt(ranks) // periodic lineage cut
-        if (lastCut != null) release(lastCut) // superseded generation
+        ranks = scope.get.checkpoint(ranks) // periodic lineage cut
+        if (lastCut != null) scope.get.release(lastCut) // superseded generation
         lastCut = ranks
       }
     }
@@ -363,8 +355,8 @@ object Graph {
     if (symmetric)
       return pageRankConvergedSymmetric(edges, tol, maxIters, damping, checkEvery)
     val p = prepare(edges, symmetric)
-    withStablePartitioning(p.ewd.sparkSession) {
-      var ranks = ckpt(p.nodes.withColumn("r", lit(1.0 / p.n)))
+    Loops.scope(p.ewd.sparkSession) { sc =>
+      var ranks = sc.checkpoint(p.nodes.withColumn("r", lit(1.0 / p.n)))
       var done = 0
       var converged = false
       while (!converged && done < maxIters) {
@@ -374,7 +366,7 @@ object Graph {
         // LAZY block cut (r17 optimization round): the delta job both
         // materializes the block's checkpoint and returns the scalar —
         // one job per block instead of checkpoint + delta
-        next = graft.plans.Loops.checkpointPartitionedLazy(next)
+        next = sc.checkpoint(next, eager = false)
         done += block
         // one scalar control job per block: the max absolute movement
         val delta = next.withColumnRenamed("r", "r2")
@@ -383,7 +375,7 @@ object Graph {
         // the delta job was the old block's last reader — free its
         // generation so a long convergence run holds TWO rank
         // checkpoints at any moment, not O(rounds)
-        release(ranks)
+        sc.release(ranks)
         ranks = next
         if (delta < tol) converged = true
       }
@@ -418,10 +410,10 @@ object Graph {
   private def pageRankConvergedSymmetric(edges: DataFrame, tol: Double,
       maxIters: Int, damping: Double, checkEvery: Int): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    withStablePartitioning(e.sparkSession) {
+    Loops.scope(e.sparkSession) { sc =>
       val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val ewd = ckpt(e.join(deg, Seq("src")))
-      convergedScaledLoop(ewd, -1L, tol, maxIters, damping, checkEvery)
+      val ewd = sc.checkpoint(e.join(deg, Seq("src")))
+      convergedScaledLoop(sc, ewd, -1L, tol, maxIters, damping, checkEvery)
     }
   }
 
@@ -439,8 +431,8 @@ object Graph {
     require(p.symmetric,
       "pageRankConvergedPrepared needs prepare(symmetric = true)")
     require(tol > 0, "tol must be positive — use pageRank for fixed rounds")
-    withStablePartitioning(p.ewd.sparkSession) {
-      convergedScaledLoop(p.ewd, p.n, tol, maxIters, damping, checkEvery)
+    Loops.scope(p.ewd.sparkSession) { sc =>
+      convergedScaledLoop(sc, p.ewd, p.n, tol, maxIters, damping, checkEvery)
     }
   }
 
@@ -450,7 +442,8 @@ object Graph {
     * first block's delta aggregate (the rank table has one row per
     * node on a symmetric graph).
     */
-  private def convergedScaledLoop(ewd: DataFrame, nKnown: Long,
+  private def convergedScaledLoop(sc: Loops.LoopScope, ewd: DataFrame,
+      nKnown: Long,
       tol: Double, maxIters: Int, damping: Double,
       checkEvery: Int): DataFrame = {
     var sCut: DataFrame = null // previous block's checkpoint (scaled)
@@ -480,7 +473,7 @@ object Graph {
       }
       // LAZY block cut (r17 optimization round): the delta aggregate
       // below materializes the checkpoint — one job per block
-      val next = graft.plans.Loops.checkpointPartitionedLazy(cur)
+      val next = sc.checkpoint(cur, eager = false)
       done += block
       if (sCut == null) {
         // block 1: delta against the constant s⁰ ≡ 1, and (when not
@@ -496,7 +489,7 @@ object Graph {
           .agg(max(abs(col("s2") - col("s")))).head().getDouble(0)
         // the delta job was the old block's last reader — free its
         // generation (two rank checkpoints alive at any moment)
-        release(sCut)
+        sc.release(sCut)
         if (delta < tol * n) converged = true
       }
       sCut = next
@@ -581,8 +574,8 @@ object Graph {
     * Plan shape (r13, the g1 bucketed-edge discipline doubled): HITS
     * alternates join-key sides every half-round, so the loop-invariant
     * edge table is materialized TWICE — once hash-partitioned by dst
-    * (auth→hub) and once by src (hub→auth), via checkpointPartitioned
-    * so the partitioning survives the lineage cut. Each half-round's
+    * (auth→hub) and once by src (hub→auth), via partition-keeping
+    * checkpoints so the partitioning survives the lineage cut. Each half-round's
     * rank side emerges from its aggregate already partitioned on the
     * matching key (alias-aware output partitioning), so the edge join
     * is exchange-free on BOTH sides, and the only per-round wire
@@ -595,19 +588,17 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    withStablePartitioning(e.sparkSession) {
+    Loops.scope(e.sparkSession) { sc =>
       // BOTH copies LAZY (r18; r17 kept the src copy eager): the
       // caller's single action over the returned plan materializes
       // them — the dst copy's blocks persist when the src shuffle (or
       // round 1's auth aggregate) first consumes them, the src copy's
       // when round 2's join does; every consumer is a full-relation
-      // join/aggregate, so the Loops fusion contract holds and the
+      // join/aggregate, so the Loops.checkpoint fusion contract holds and the
       // standalone 0.5 s prep job (measured, g4 jobs decomposition)
       // disappears into the query.
-      val eByDst = graft.plans.Loops.checkpointPartitionedLazy(
-        e.repartition(col("dst")))
-      val eBySrc = graft.plans.Loops.checkpointPartitionedLazy(
-        eByDst.repartition(col("src")))
+      val eByDst = sc.checkpoint(e.repartition(col("dst")), eager = false)
+      val eBySrc = sc.checkpoint(eByDst.repartition(col("src")), eager = false)
       var auth = eByDst.groupBy("dst").agg(count(lit(1)).cast("long").as("s"))
       var round = 1
       while (round < iters) {
@@ -674,7 +665,7 @@ object Graph {
       ids.toSeq.toDF("node")
     }
     val seedFlag = sd.withColumn("is_seed", lit(1))
-    withStablePartitioning(p.ewd.sparkSession) {
+    Loops.scope(p.ewd.sparkSession) { sc =>
       var r = sd.select(col("node"), (lit(1.0) / lit(nS)).as("r"))
       for (_ <- 1 to iters) {
         r = p.ewd
@@ -690,7 +681,7 @@ object Graph {
               .otherwise(lit(0.0))
               + lit(damping) * col("csum").cast("double")).as("r"))
       }
-      ckpt(r)
+      sc.checkpoint(r)
     }
   }
 
@@ -733,10 +724,10 @@ object Graph {
     */
   def bfsHops(p: Prepared, seeds: DataFrame, maxHops: Int = 3): DataFrame = {
     require(maxHops >= 0, "bfsHops needs maxHops >= 0")
-    var frontier = ckpt(seeds.select(col("node").cast("long")).distinct())
+    var frontier = Loops.checkpoint(seeds.select(col("node").cast("long")).distinct())
     // independent materialization: visited must own its blocks so the
     // frontier checkpoint can be released without tearing it down
-    var visited = ckpt(frontier.withColumn("hop", lit(0)))
+    var visited = Loops.checkpoint(frontier.withColumn("hop", lit(0)))
     var hop = 1
     while (hop <= maxHops) {
       // LAZY frontier + eager visited checkpoint (r17 optimization
@@ -745,18 +736,19 @@ object Graph {
       // union), so each round pays one job instead of two. The old
       // frontier stays referenced until that job has run — release
       // moves below the eager checkpoint.
-      val next = graft.plans.Loops.checkpointPartitionedLazy(
+      val next = Loops.checkpoint(
         p.ewd.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
-          .join(visited.select("node"), Seq("node"), "left_anti"))
-      val grown = ckpt(visited.union(next.withColumn("hop", lit(hop))))
-      release(frontier) // `next` and `grown` are materialized — safe
+          .join(visited.select("node"), Seq("node"), "left_anti"),
+        eager = false)
+      val grown = Loops.checkpoint(visited.union(next.withColumn("hop", lit(hop))))
+      Loops.releaseCheckpoint(frontier) // `next` and `grown` are materialized — safe
       frontier = next
-      release(visited) // `grown` holds its own copy now
+      Loops.releaseCheckpoint(visited) // `grown` holds its own copy now
       visited = grown
       hop += 1
     }
-    release(frontier) // final frontier's rows live inside `visited`
+    Loops.releaseCheckpoint(frontier) // final frontier's rows live inside `visited`
     visited
   }
 
@@ -798,12 +790,12 @@ object Graph {
     // materialize the (possibly expensive) edge derivation ONCE — a
     // lazy input would otherwise re-run its whole upstream plan in
     // every relaxation round (measured 4× the edge build at hops=4).
-    // src-partitioned by the ckpt, so each round's join is
+    // src-partitioned by the checkpoint, so each round's join is
     // exchange-free on the edge side; released before returning (the
     // returned dist owns its own blocks).
     val e =
       if (edgesPrepared) edges
-      else ckpt(edges
+      else Loops.checkpoint(edges
         .select(col("src").cast("long"), col("dst").cast("long"),
           col("cost").cast("long"))
         .repartition(col("src")))
@@ -818,9 +810,10 @@ object Graph {
     // isEmpty job — one action per round instead of two, same rounds
     // executed (count == 0 exactly when the frontier filter was
     // empty).
-    var dist = graft.plans.Loops.checkpointPartitionedLazy(
+    var dist = Loops.checkpoint(
       seeds.select(col("node").cast("long")).distinct()
-        .withColumn("dist", lit(0L)).withColumn("imp", lit(true)))
+        .withColumn("dist", lit(0L)).withColumn("imp", lit(true)),
+      eager = false)
     var nImp = dist.where(col("imp")).count()
     var hop = 1
     var done = maxHops == 0
@@ -840,7 +833,7 @@ object Graph {
           .select(col("dst").as("node"),
             (col("dist") + col("cost")).as("nd"))
           .groupBy("node").agg(min("nd").as("nd"))
-        val next = graft.plans.Loops.checkpointPartitionedLazy(
+        val next = Loops.checkpoint(
           dist.select(col("node"), col("dist"))
             .join(cand, Seq("node"), "full_outer")
             .select(col("node"),
@@ -848,15 +841,16 @@ object Graph {
                 coalesce(col("nd"), col("dist"))).as("d2"),
               (col("dist").isNull ||
                 (col("nd").isNotNull && col("nd") < col("dist"))).as("imp"))
-            .withColumnRenamed("d2", "dist"))
+            .withColumnRenamed("d2", "dist"),
+          eager = false)
         nImp = next.where(col("imp")).count() // materializes `next` too
-        release(dist)
+        Loops.releaseCheckpoint(dist)
         dist = next
         hop += 1
         if (hop > maxHops) done = true
       }
     }
-    if (!edgesPrepared) release(e)
+    if (!edgesPrepared) Loops.releaseCheckpoint(e)
     dist.select(col("node"), col("dist"))
   }
 

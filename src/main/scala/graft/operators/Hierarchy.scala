@@ -95,7 +95,7 @@ object Hierarchy {
     *
     * Two walks emit the same rows, names and types:
     *  - One task, when the node count fits one partition by the loop
-    *    width rule (`Loops.adaptedPartitions` is 1 at a row width of
+    *    width rule (`Loops.fitsOneTask` at a row width of
     *    the node schema × (2·levels + 2), ≤ 83,886 nodes of five
     *    strings at 3 levels and the 64 MB default) and both id columns
     *    are strings or integral, whose JVM equality is Spark's join
@@ -179,7 +179,7 @@ object Hierarchy {
     val bytesPerRow = math.min(Int.MaxValue.toLong,
       nodes.schema.defaultSize.toLong * (2L * levels + 2)).toInt
     keyType.filter(_ =>
-      Loops.adaptedPartitions(nodes.sparkSession, nodes.count(), bytesPerRow) == 1)
+      Loops.fitsOneTask(nodes.sparkSession, nodes.count(), bytesPerRow))
   }
 
   /** The walk's rows in one lazy task: `coalesce(1)` + `mapPartitions`

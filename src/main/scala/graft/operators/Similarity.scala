@@ -1114,7 +1114,7 @@ object Similarity {
     * bounded slice of the quadratic-in-cell work at any corpus size).
     * Doubles as the probes checkpoint's materializing action when the
     * caller passes a LAZY checkpoint (the aggregate consumes every
-    * partition — the Loops fusion contract).
+    * partition — the Loops.checkpoint fusion contract).
     */
   def requireBoundedCellsStats(prim: DataFrame,
       maxCellRows: Long): (Long, Long) = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * (anchor → step → union until the frontier is empty), while every
   * join/projection executes distributed on the cluster.
   *
-  * Scale posture (100 TB): lineage is truncated with `localCheckpoint`
+  * Scale posture (100 TB): lineage is truncated with `Loops.checkpoint`
   * every `checkpointInterval` levels, so plan size is bounded by the
   * interval instead of growing O(depth) (the classic iterative-join
   * pitfall). Within an interval the per-level `isEmpty` check and the
@@ -50,7 +50,8 @@ object Recursion {
       // on the common shallow (≤8-deep) hierarchy.
       val stepped = step(frontier)
       val next =
-        if (depth % checkpointInterval == 0) Loops.checkpoint(stepped)
+        if (depth % checkpointInterval == 0)
+          Loops.checkpoint(stepped, keepPartitioning = false)
         else stepped
       if (next.isEmpty) done = true
       else {

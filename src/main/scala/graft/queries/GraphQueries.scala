@@ -40,7 +40,7 @@ object GraphQueries {
         .select((col("o_custkey") * 2).as("src"),
           (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-        .transform(graft.plans.Loops.checkpoint))
+        .transform(graft.plans.Loops.checkpoint(_, keepPartitioning = false)))
 
   private def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val e0 = tradeEdgesDirected(s, dir)
@@ -512,7 +512,7 @@ object GraphQueries {
             expr("CAST(1000000 AS BIGINT) div cnt").as("cost"))
         val sym = w0.union(
           w0.select(col("dst").as("src"), col("src").as("dst"), col("cost")))
-        graft.plans.Loops.checkpointPartitioned(
+        graft.plans.Loops.checkpoint(
           sym.repartition(col("src")))
       }
       val seeds = e.where(col("src") % 2 === 0 && col("src") <= 10)

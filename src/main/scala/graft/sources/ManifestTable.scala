@@ -375,16 +375,15 @@ object ManifestTable {
     if (names.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
     else spark.read.schema(schema).parquet(names.map(n => s"$path/_pool/$n"): _*)
 
-  /** `names` of version `v`, under `v`'s LOGICAL column names. */
-  private def readFiles(spark: SparkSession, path: String, v: Long,
-      names: Seq[String]): DataFrame = {
-    val m = manifest(spark, path, v)
+  /** `names` of the version whose manifest is `m`, under its LOGICAL
+    * column names. */
+  private def readFiles(spark: SparkSession, path: String, m: Commit,
+      names: Seq[String]): DataFrame =
     toLogical(scan(spark, path, m.schema, names), m.renames)
-  }
 
   /** Time travel: version `v`, exactly its manifest's files. */
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame =
-    readFiles(spark, path, v, files(spark, path, v))
+    readPruned(spark, path, v)(_.m.files)
 
   def latest(spark: SparkSession, path: String): DataFrame =
     readVersion(spark, path, latestVersion(spark, path))
@@ -465,7 +464,7 @@ object ManifestTable {
           "— rows-added-equals-file-diff does not hold past a rewrite")
       prev = cur
     }
-    readFiles(spark, path, toV, prev.filterNot(base.toSet).sorted)
+    readFiles(spark, path, manifest(spark, path, toV), prev.filterNot(base.toSet).sorted)
   }
 
   // ---- rewrites and retention
@@ -509,7 +508,7 @@ object ManifestTable {
         c -> (bits.length * 64, k)
       }.toMap
     if (parent.nonEmpty)
-      sketch(spark, path, nv, parent.flatMap(_.stats.keys).toSet,
+      sketch(spark, path, nv, m.copy(files = names), parent.flatMap(_.stats.keys).toSet,
         sizes(_.blooms), sizes(_.tokens))
     nv
   }
@@ -561,19 +560,24 @@ object ManifestTable {
   def extendStats(spark: SparkSession, path: String, v: Long,
       stats: Seq[String], blooms: Seq[String] = Nil, tokens: Seq[String] = Nil,
       numBits: Int = 1 << 17, k: Int = 7): Unit = {
-    val renames = renamesOf(spark, path, v)
-    def phys(cs: Seq[String]) = cs.map(physicalFor(renames, _))
-    sketch(spark, path, v, phys(stats).toSet,
+    val m = manifest(spark, path, v)
+    def phys(cs: Seq[String]) = cs.map(physicalFor(m.renames, _))
+    sketch(spark, path, v, m, phys(stats).toSet,
       phys(blooms).map(_ -> (numBits, k)).toMap,
       phys(tokens).map(_ -> (numBits, k)).toMap)
   }
 
-  private def sketch(spark: SparkSession, path: String, v: Long,
+  private def sketch(spark: SparkSession, path: String, v: Long, m: Commit,
       stats: Set[String], blooms: Map[String, (Int, Int)],
       tokens: Map[String, (Int, Int)]): Unit = {
-    val m = manifest(spark, path, v)
-    val known = committedVersions(spark, path).filter(_ <= v).sorted
-      .flatMap(fileMeta(spark, path, _)).groupMapReduce(_._1)(_._2)(_ ++ _)
+    // Only the newest metadata file at or before `v` is read: every
+    // sketch rewrites the entries of all its version's files, so it
+    // already carries the earlier files' sketches, and a file of `v`
+    // missing from it was written after it.
+    val fs = fsFor(spark, path)
+    val known = committedVersions(spark, path).filter(_ <= v).sorted.reverseIterator
+      .map(metaPath(path, _)).find(fs.exists)
+      .fold(Map.empty[String, FileMeta])(mp => parseMeta(readJson(spark, mp), mp.toString))
     val have = m.files.map(f => f -> known.getOrElse(f, FileMeta())).toMap
     def lacking(cs: Iterable[String], of: FileMeta => Map[String, _]) =
       m.files.filterNot(f => cs.forall(of(have(f)).contains))
@@ -627,30 +631,39 @@ object ManifestTable {
   }
 
   // ---- driver-side pruning: every pruner reads the manifest and the
-  // metadata file and runs no Spark job. A pruned file provably holds
-  // no matching row; every pruned read still applies the exact filter.
+  // metadata file once per public call and runs no Spark job. A pruned
+  // file provably holds no matching row; every pruned read still
+  // applies the exact filter.
 
-  /** Every file of `v` with its `kind` sketch of logical column `c`. A
+  /** Version `v`'s manifest, and its metadata file on first use: each
+    * parsed at most once per public call. */
+  private final class Parsed(spark: SparkSession, val path: String, val v: Long) {
+    val m: Commit = manifest(spark, path, v)
+    lazy val meta: Map[String, FileMeta] = fileMeta(spark, path, v)
+  }
+
+  /** Every file of `p` with its `kind` sketch of logical column `c`. A
     * file without one fails loudly: it could not be skipped safely,
     * and scanning it anyway would hide the metadata gap.
     */
-  private def sketched[A](spark: SparkSession, path: String, v: Long,
-      c: String, kind: String)(of: FileMeta => Map[String, A]): Seq[(String, A)] = {
-    val m = manifest(spark, path, v)
-    val phys = physicalFor(m.renames, c)
-    val meta = fileMeta(spark, path, v)
-    val got = m.files.map(f => f -> meta.get(f).flatMap(of(_).get(phys)))
+  private def sketched[A](p: Parsed, c: String, kind: String)(
+      of: FileMeta => Map[String, A]): Seq[(String, A)] = {
+    val phys = physicalFor(p.m.renames, c)
+    val got = p.m.files.map(f => f -> p.meta.get(f).flatMap(of(_).get(phys)))
     val lacking = got.collect { case (f, None) => f }
     require(lacking.isEmpty,
-      s"files of v$v under $path lack $kind for $c: ${lacking.mkString(", ")}")
+      s"files of v${p.v} under ${p.path} lack $kind for $c: ${lacking.mkString(", ")}")
     got.map { case (f, a) => f -> a.get }
   }
 
   /** The files of `v` whose [min, max] band on `c` overlaps [lo, hi],
     * plus the version's file count. */
   def prunedFiles(spark: SparkSession, path: String, v: Long,
-      c: String, lo: Long, hi: Long): (Seq[String], Long) = {
-    val st = sketched(spark, path, v, c, "stats")(_.stats)
+      c: String, lo: Long, hi: Long): (Seq[String], Long) =
+    inBand(new Parsed(spark, path, v), c, lo, hi)
+
+  private def inBand(p: Parsed, c: String, lo: Long, hi: Long): (Seq[String], Long) = {
+    val st = sketched(p, c, "stats")(_.stats)
     (st.collect { case (f, Stat(_, Some((mn, mx)))) if mx >= lo && mn <= hi => f }.sorted,
       st.size.toLong)
   }
@@ -660,18 +673,21 @@ object ManifestTable {
     * z-ordered layout pays ([[compactZorder]]).
     */
   def prunedFilesMulti(spark: SparkSession, path: String, v: Long,
-      bands: Seq[(String, Long, Long)]): Seq[String] = {
+      bands: Seq[(String, Long, Long)]): Seq[String] =
+    inAllBands(new Parsed(spark, path, v), bands)
+
+  private def inAllBands(p: Parsed, bands: Seq[(String, Long, Long)]): Seq[String] = {
     require(bands.nonEmpty, "prunedFilesMulti: no bands given")
-    bands.map { case (c, lo, hi) => prunedFiles(spark, path, v, c, lo, hi)._1.toSet }
+    bands.map { case (c, lo, hi) => inBand(p, c, lo, hi)._1.toSet }
       .reduce(_ intersect _).toSeq.sorted
   }
 
   /** The files whose `kind` bloom on `c` admits `keep`, plus the file
     * count. False positives over-keep; false negatives are impossible. */
-  private def admitted(spark: SparkSession, path: String, v: Long, c: String,
-      kind: String, of: FileMeta => Map[String, Array[Byte]])(
+  private def admitted(p: Parsed, c: String, kind: String,
+      of: FileMeta => Map[String, Array[Byte]])(
       keep: (Array[Long], Int) => Boolean): (Seq[String], Long) = {
-    val blobs = sketched(spark, path, v, c, kind)(of)
+    val blobs = sketched(p, c, kind)(of)
     (blobs.filter { case (_, b) => val (bits, k) = Bloom.decode(b); keep(bits, k) }
       .map(_._1).sorted, blobs.size.toLong)
   }
@@ -680,9 +696,12 @@ object ManifestTable {
     * the layout-independent point lookup (on a hash layout every file
     * spans the key domain and min/max keeps all of them). */
   def prunedFilesBloom(spark: SparkSession, path: String, v: Long,
-      c: String, values: Seq[Long]): (Seq[String], Long) = {
+      c: String, values: Seq[Long]): (Seq[String], Long) =
+    bloomAdmits(new Parsed(spark, path, v), c, values)
+
+  private def bloomAdmits(p: Parsed, c: String, values: Seq[Long]): (Seq[String], Long) = {
     require(values.nonEmpty, "prunedFilesBloom: empty value list")
-    admitted(spark, path, v, c, "key blooms", _.blooms)((bits, k) =>
+    admitted(p, c, "key blooms", _.blooms)((bits, k) =>
       values.exists(Bloom.mightContain(bits, k, _)))
   }
 
@@ -691,12 +710,16 @@ object ManifestTable {
     * the engine's own xxhash64, evaluated on the driver, so build and
     * probe cannot drift. */
   def prunedFilesToken(spark: SparkSession, path: String, v: Long,
-      textCol: String, terms: Seq[String]): (Seq[String], Long) = {
+      textCol: String, terms: Seq[String]): (Seq[String], Long) =
+    tokensAdmit(new Parsed(spark, path, v), textCol, terms)
+
+  private def tokensAdmit(p: Parsed, textCol: String,
+      terms: Seq[String]): (Seq[String], Long) = {
     require(terms.nonEmpty, "token search: empty term list")
     terms.foreach(t => require(t.matches("[a-z0-9]+"),
       s"search term must be a lowercase alnum token, got '$t'"))
     val hashes = terms.map(t => new XxHash64(Seq(Literal(t))).eval().asInstanceOf[Long])
-    admitted(spark, path, v, textCol, "token blooms", _.tokens)((bits, k) =>
+    admitted(p, textCol, "token blooms", _.tokens)((bits, k) =>
       hashes.forall(Bloom.mightContain(bits, k, _)))
   }
 
@@ -704,14 +727,17 @@ object ManifestTable {
     * of `keys`: a sorted-array binary search per file, O(files · log
     * keys). */
   def prunedFilesByKeys(spark: SparkSession, path: String, v: Long,
-      c: String, keys: Seq[Long]): Seq[String] = {
+      c: String, keys: Seq[Long]): Seq[String] =
+    holdingKeys(new Parsed(spark, path, v), c, keys)
+
+  private def holdingKeys(p: Parsed, c: String, keys: Seq[Long]): Seq[String] = {
     val sorted = keys.distinct.sorted.toArray
     def hasKey(lo: Long, hi: Long): Boolean = {
       val i = java.util.Arrays.binarySearch(sorted, lo)
       val at = if (i >= 0) i else -i - 1 // first key >= lo
       at < sorted.length && sorted(at) <= hi
     }
-    sketched(spark, path, v, c, "stats")(_.stats)
+    sketched(p, c, "stats")(_.stats)
       .collect { case (f, Stat(_, Some((lo, hi)))) if hasKey(lo, hi) => f }.sorted
   }
 
@@ -724,13 +750,20 @@ object ManifestTable {
 
   def readVersionPrunedMulti(spark: SparkSession, path: String, v: Long,
       bands: Seq[(String, Long, Long)]): DataFrame =
-    readFiles(spark, path, v, prunedFilesMulti(spark, path, v, bands))
+    readPruned(spark, path, v)(inAllBands(_, bands))
       .where(bands.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _))
+
+  /** The files `pick` selects from version `v`, parsed once. */
+  private def readPruned(spark: SparkSession, path: String, v: Long)(
+      pick: Parsed => Seq[String]): DataFrame = {
+    val p = new Parsed(spark, path, v)
+    readFiles(spark, path, p.m, pick(p))
+  }
 
   /** IN-list point lookup through the key blooms, then the exact IN. */
   def readVersionPrunedBloom(spark: SparkSession, path: String, v: Long,
       c: String, values: Seq[Long]): DataFrame =
-    readFiles(spark, path, v, prunedFilesBloom(spark, path, v, c, values)._1)
+    readPruned(spark, path, v)(bloomAdmits(_, c, values)._1)
       .where(col(c).isin(values: _*))
 
   /** Keyword search through the token blooms, then the exact row-level
@@ -738,7 +771,7 @@ object ManifestTable {
     * the search never misses a document. */
   def readVersionSearch(spark: SparkSession, path: String, v: Long,
       textCol: String, terms: Seq[String]): DataFrame =
-    readFiles(spark, path, v, prunedFilesToken(spark, path, v, textCol, terms)._1)
+    readPruned(spark, path, v)(tokensAdmit(_, textCol, terms)._1)
       .where(terms.map(t => array_contains(expr(tokensExpr(textCol)), t)).reduce(_ && _))
 
   /** JOIN-TIME dynamic file pruning (Delta's DFP): only the files whose
@@ -747,7 +780,7 @@ object ManifestTable {
     * exact join afterwards keeps correctness independent of pruning. */
   def readVersionPrunedByKeys(spark: SparkSession, path: String, v: Long,
       c: String, keys: Seq[Long]): DataFrame =
-    readFiles(spark, path, v, prunedFilesByKeys(spark, path, v, c, keys))
+    readPruned(spark, path, v)(holdingKeys(_, c, keys))
 
   /** Metadata-only aggregation: COUNT(*), MIN and MAX of `c` from the
     * per-file stats alone, with ZERO data files read, as a one-row local
@@ -755,7 +788,7 @@ object ManifestTable {
     * `max_v` ignore NULLs. Sound because files are immutable.
     */
   def statsAgg(spark: SparkSession, path: String, v: Long, c: String): DataFrame = {
-    val st = sketched(spark, path, v, c, "stats")(_.stats).map(_._2)
+    val st = sketched(new Parsed(spark, path, v), c, "stats")(_.stats).map(_._2)
     val bands = st.flatMap(_.band)
     def boxed(x: Option[Long]) = x.map(Long.box).orNull
     spark.createDataFrame(
@@ -776,8 +809,9 @@ object ManifestTable {
   def deleteWhere(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long): Long = {
     val v = latestVersion(spark, path)
-    val m = manifest(spark, path, v)
-    val (touched, _) = prunedFiles(spark, path, v, c, lo, hi)
+    val p = new Parsed(spark, path, v)
+    val m = p.m
+    val (touched, _) = inBand(p, c, lo, hi)
     if (touched.isEmpty) return v
     val phys = col(physicalFor(m.renames, c))
     val survivors = scan(spark, path, m.schema, touched)
@@ -798,7 +832,10 @@ object ManifestTable {
     *      `keyCol` admits one of them;
     *   2. '''exact probe''': the candidates' key column is scanned once
     *      and semi-joined to the source keys, so a candidate whose band
-    *      brackets a key it does not hold stays untouched.
+    *      brackets a key it does not hold stays untouched. The probe
+    *      collects the matched keys with their files, so whether any
+    *      source row inserts is decided on the driver (a NULL key never
+    *      matches), and the insert anti-join runs only when it writes.
     *
     * Touched files are rewritten with matched rows taking the source
     * row's non-key columns (N target rows with one key all update);
@@ -810,23 +847,27 @@ object ManifestTable {
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
       keyCol: String): Long = {
     val v = latestVersion(spark, path)
-    val m = manifest(spark, path, v)
+    val p = new Parsed(spark, path, v)
+    val m = p.m
     val physKey = physicalFor(m.renames, keyCol)
     val src = toPhysical(source, m.renames).cache()
     try {
-      val keys = src.select(col(physKey).cast("long")).collect()
-        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      val srcKeys = src.select(col(physKey), col(physKey).cast("long")).collect()
+      val keys = srcKeys.map(r => if (r.isNullAt(1)) None else Some(r.getLong(1)))
       val dup = keys.groupBy(identity).count(_._2.length > 1)
       require(dup == 0, s"mergeInto: $dup duplicate $keyCol values in source — " +
         "a target row would match more than one update")
-      val candidates = prunedFilesByKeys(spark, path, v, keyCol, keys.flatten.toSeq)
+      val candidates = holdingKeys(p, keyCol, keys.flatten.toSeq)
       if (keys.isEmpty) return v
-      val touched: Seq[String] =
+      // (matched key, file holding it) pairs: delta-sized, like the keys
+      val probed: Seq[(Any, String)] =
         if (candidates.isEmpty) Seq.empty
         else scan(spark, path, m.schema, candidates)
           .select(col(physKey), col("_metadata.file_name").as("_file"))
           .join(src.select(col(physKey)), Seq(physKey), "left_semi")
-          .select("_file").distinct().collect().map(_.getString(0)).toSeq.sorted
+          .distinct().collect().map(r => r.get(0) -> r.getString(1)).toSeq
+      val touched = probed.map(_._2).distinct.sorted
+      val matched = probed.map(_._1).toSet
       val fields = m.schema.fieldNames.toSeq
       val nv = v + 1
       // rewrite: matched rows take the source row's non-key columns
@@ -847,12 +888,13 @@ object ManifestTable {
       // every band cannot match, keys inside one matched only if the
       // probe found them, so the anti-join against the touched files'
       // keys is exact.
-      val inserts = src
-        .join(scan(spark, path, m.schema, touched).select(col(physKey)).distinct(),
-          Seq(physKey), "left_anti")
-        .select(fields.map(col): _*)
       val inserted =
-        if (inserts.isEmpty) Seq.empty else writeParts(inserts.coalesce(1), path, nv)
+        if (srcKeys.forall(r => !r.isNullAt(0) && matched(r.get(0)))) Seq.empty
+        else writeParts(src
+          .join(scan(spark, path, m.schema, touched).select(col(physKey)).distinct(),
+            Seq(physKey), "left_anti")
+          .select(fields.map(col): _*)
+          .coalesce(1), path, nv)
       publishNext(spark, path, v, m.copy(files =
         m.files.filterNot(touched.toSet) ++ rewritten ++ inserted), "mergeInto")
     } finally src.unpersist()

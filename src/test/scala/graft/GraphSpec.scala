@@ -98,7 +98,7 @@ class GraphSpec extends AnyFunSuite {
     // vacuous (exactly how the adaptive-checkpoint partitioning loss
     // slipped through review: the checkpointed LogicalRDD used to come
     // out unpartitioned and every round silently re-exchanged the edge
-    // table; Loops.checkpointPartitioned is the fix under test).
+    // table; the partition-keeping Loops.checkpoint is the fix under test).
     val p = Graph.prepare(edges)
     val loop = Graph.pageRankLoop(p, iters = 3, damping = 0.85)
     loop.write.format("noop").mode("overwrite").save()
@@ -136,7 +136,7 @@ class GraphSpec extends AnyFunSuite {
     // the fused (checkpoint-free) loop must compute the edge subtree's
     // shuffle ONCE and reuse it in every round — that reuse is what
     // lets pageRankSymmetric skip the eager edge materialization job.
-    // Execute under the same conf the real ckpt job runs with (AQE
+    // Execute under the same conf the real checkpoint job runs with (AQE
     // off) so the static ReuseExchange rule is what's under test.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r17 optimization-round loop machinery: scale-adaptive round
-  * width, the scoped-conf helpers, and lazy-checkpoint fusion — the
-  * internals every CC/graph loop now rides on.
+/** The loop machinery every CC/graph loop rides on: scale-adaptive
+  * round width, the loop scope (its conf changes, narrowing, private
+  * checkpoints and one-thread-per-session contract), and lazy-checkpoint
+  * fusion.
   */
 class LoopsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -36,11 +37,13 @@ class LoopsSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
-  test("withShufflePartitions: scopes width (and AQE when narrow), restores both") {
+  test("scope: scopes width (and AQE when narrow), restores both") {
     val width = spark.sessionState.conf.numShufflePartitions
     assume(width > 1, "needs a multi-partition session to test narrowing")
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    Loops.withShufflePartitions(spark, 1) {
+    // a 1-row loop state sizes the scope at width 1
+    Loops.scope(spark, 1L) { s =>
+      assert(s.width === 1)
       assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
       // narrow scope = static execution for the rounds
       assert(spark.conf.get("spark.sql.adaptive.enabled") === "false")
@@ -49,21 +52,22 @@ class LoopsSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqeBefore)
     // full-width scope keeps AQE as-is (the skew net stays on for
     // big-state loops)
-    Loops.withShufflePartitions(spark, width) {
+    Loops.scope(spark) { s =>
+      assert(s.width === width)
       assert(spark.conf.get("spark.sql.adaptive.enabled") === aqeBefore)
     }
     // restore still runs when the body throws
     intercept[RuntimeException] {
-      Loops.withShufflePartitions(spark, 1) { throw new RuntimeException("x") }
+      Loops.scope(spark, 1L) { _ => throw new RuntimeException("x") }
     }
     assert(spark.sessionState.conf.numShufflePartitions === width)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqeBefore)
   }
 
-  test("checkpointLazy: a full action materializes; the frame then survives release of its source") {
+  test("lazy checkpoint: a full action materializes; the frame outlives its source") {
     import spark.implicits._
     val src = (1L to 1000L).toDF("x")
-    val cp = Loops.checkpointLazy(src.withColumn("y", col("x") * 2))
+    val cp = Loops.checkpoint(src.withColumn("y", col("x") * 2), eager = false)
     // the count IS the materializing job (fusion contract)
     assert(cp.count() === 1000L)
     // after materialization the plan is a LogicalRDD and re-reads blocks
@@ -80,20 +84,26 @@ class LoopsSpec extends AnyFunSuite {
     assert(Loops.adaptedPartitions(spark, Long.MaxValue / 16) === width)
   }
 
-  test("renarrow: narrows width + disables AQE mid-scope, never widens; scope restores") {
+  test("scope.narrow: narrows width + disables AQE mid-scope, never widens; restores") {
     val width = spark.sessionState.conf.numShufflePartitions
     assume(width > 1, "needs a multi-partition session to test narrowing")
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val key = "spark.graft.loop.targetPartitionBytes"
     spark.conf.set(key, "32") // 1 row per partition: width == min(rows, session)
     try {
-      Loops.withShufflePartitions(spark, width) {
+      Loops.scope(spark, 10L * width) { s =>
+        assert(s.width === width)
+        // a drop of less than RenarrowFactor keeps the width
+        s.narrow(2L * width)
+        assert(s.width === width)
         // state "contracts" to 1 row -> narrow to 1, AQE off
-        assert(Loops.renarrow(spark, 1L) === 1)
+        s.narrow(1L)
+        assert(s.width === 1)
         assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
         assert(spark.conf.get("spark.sql.adaptive.enabled") === "false")
         // a larger count never widens back
-        assert(Loops.renarrow(spark, Long.MaxValue / 2) === 1)
+        s.narrow(Long.MaxValue / 2)
+        assert(s.width === 1)
         assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
       }
     } finally spark.conf.unset(key)
@@ -105,7 +115,7 @@ class LoopsSpec extends AnyFunSuite {
 
   test("logN CC re-narrows as the edge set contracts and stays exact (large-then-contracting fixture)") {
     import graft.operators.Dedup
-    // a fixture that CONTRACTS hard ENOUGH to trigger the ≥10× renarrow
+    // a fixture that CONTRACTS hard ENOUGH to trigger the ≥10× narrow
     // (Loops.RenarrowFactor): 64 dense cliques of 24 nodes — each
     // clique is 276 edges collapsing to a 23-edge star after round 1,
     // a 12× drop (a 12-clique's 6× would NOT fire the trigger; the
@@ -122,7 +132,7 @@ class LoopsSpec extends AnyFunSuite {
     try {
       // observe the width each round actually ran at via a listener on
       // the conf is racy; instead assert the OUTPUT is exact and that
-      // renarrow() itself narrowed (unit above) — plus: rounds
+      // scope.narrow itself narrowed (unit above) — plus: rounds
       // executed stays the logN bound
       val (labels, rounds) = Dedup.duplicateClustersLogNWithRounds(pairs)
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -234,5 +244,91 @@ class LoopsSpec extends AnyFunSuite {
     }
     assert(Dedup.duplicateClustersLogNWithRounds(strs)._2 > 0,
       "string ids do not widen to long: the rounds run")
+  }
+
+  test("scope fault: a throwing body restores the confs and releases its checkpoints") {
+    import spark.implicits._
+    val width = spark.sessionState.conf.numShufflePartitions
+    assume(width > 1, "needs a multi-partition session to test narrowing")
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val key = "spark.graft.loop.targetPartitionBytes"
+    val prevCoalesce = spark.conf.getOption(coalesce)
+    // one of the three keys unset at entry: the restore must unset it
+    spark.conf.unset(coalesce)
+    spark.conf.set(key, "32")
+    val before = TestSpark.loopConfs()
+    assert(!spark.sessionState.conf.contains(coalesce))
+    var made = Seq.empty[org.apache.spark.rdd.RDD[_]]
+    try {
+      val e = intercept[RuntimeException] {
+        Loops.scope(spark, 10L * width) { s =>
+          val a = s.checkpoint((1L to 100L).toDF("x"))
+          val b = s.checkpoint(a.withColumn("y", col("x") + 1), eager = false)
+          made = Seq(a, b).map(_.queryExecution.analyzed
+            .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd)
+          assert(made.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id)))
+          s.narrow(1L)
+          assert(spark.conf.get("spark.sql.shuffle.partitions") === "1")
+          throw new RuntimeException("injected loop failure")
+        }
+      }
+      assert(e.getMessage === "injected loop failure")
+      assert(TestSpark.loopConfs() === before)
+      assert(!spark.sessionState.conf.contains(coalesce), "an unset key is restored unset")
+      assert(made.size === 2)
+      val persisted = spark.sparkContext.getPersistentRDDs
+      assert(made.forall(r => !persisted.contains(r.id)),
+        "a failed loop must release every checkpoint it made")
+    } finally {
+      spark.conf.unset(key)
+      prevCoalesce.foreach(spark.conf.set(coalesce, _))
+    }
+  }
+
+  test("loops on two sessions run in parallel, as serially; a shared one fails fast") {
+    import graft.operators.Dedup
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val before = TestSpark.loopConfs()
+    val key = "spark.graft.loop.targetPartitionBytes"
+    // each session forces rounds through its OWN byte target
+    val sessions = Seq("600000", "1024").map { target =>
+      val s = spark.newSession()
+      s.conf.set(key, target)
+      s
+    }
+    def clusters(s: org.apache.spark.sql.SparkSession, logN: Boolean) = {
+      val pairs = s.createDataFrame(cliqueChain().collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1)))).toDF("a_id", "b_id")
+      val out = if (logN) Dedup.duplicateClustersLogN(pairs)
+        else Dedup.duplicateClusters(pairs)
+      out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val jobs = sessions.zip(Seq(false, true))
+    val serial = jobs.map { case (s, logN) => clusters(s, logN) }
+    assert(serial.forall(m => m.size == 64 * 24 && m.values.forall(_ == 0L)))
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val parallel = Await.result(Future.sequence(jobs.map { case (s, logN) =>
+      Future(clusters(s, logN)) }), 5.minutes)
+    assert(parallel === serial)
+    // a second thread may not open a scope on a session whose scope is
+    // still open
+    val shared = sessions.head
+    val opened = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val holder = Future(Loops.scope(shared) { _ =>
+      opened.countDown()
+      done.await(1, TimeUnit.MINUTES)
+    })
+    try {
+      assert(opened.await(1, TimeUnit.MINUTES))
+      val e = intercept[IllegalStateException](Loops.scope(shared)(_ => ()))
+      assert(e.getMessage.contains("spark.newSession()"), e.getMessage)
+    } finally done.countDown()
+    Await.result(holder, 1.minute)
+    // once the holder's scope closed, the session is free again
+    Loops.scope(shared)(s => assert(s.width > 0))
+    assert(TestSpark.loopConfs() === before)
   }
 }

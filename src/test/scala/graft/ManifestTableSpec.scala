@@ -207,6 +207,33 @@ class ManifestTableSpec extends AnyFunSuite {
     }
   }
 
+  test("an all-matched mergeInto decides on the driver and runs no insert job") {
+    import spark.implicits._
+    def table() = {
+      val p = freshPath()
+      ManifestTable.commitAppend((0L until 400L).map(i => (i, i)).toDF("k", "v")
+        .repartitionByRange(8, col("k")), p)
+      ManifestTable.extendStats(spark, p, 1L, Seq("k"))
+      p
+    }
+    def merge(rows: Seq[(java.lang.Long, Long)]) = {
+      val p = table()
+      val (v, counts) = scala.util.Using.resource(new MetricsLedger(spark.sparkContext))(
+        _.measure(ManifestTable.mergeInto(spark, p, rows.toDF("k", "v"), "k")))
+      (ManifestTable.readVersion(spark, p, v).collect().toSet, counts.jobs)
+    }
+    val (allMatched, jobs) = merge(Seq((110L, -1L), (130L, -2L)))
+    // the source collect, the probe and the rewrite of the one touched
+    // file, with their adaptive stage jobs; an insert anti-join run only
+    // to find no rows would add 3 more (9)
+    assert(jobs == 6, s"all-matched merge ran $jobs jobs")
+    assert(allMatched == (0L until 400L).map(i =>
+      org.apache.spark.sql.Row(i, if (i == 110L) -1L else if (i == 130L) -2L else i)).toSet)
+    // a NULL source key never matches: it inserts, next to the updates
+    val (withNull, _) = merge(Seq((110L, -1L), (null, 7L)))
+    assert(withNull.size == 401 && withNull.contains(org.apache.spark.sql.Row(null, 7L)))
+  }
+
   test("mergeInto exact probe: a candidate whose band brackets an absent " +
       "key is NOT rewritten (band-only pruning would copy it)") {
     import spark.implicits._
