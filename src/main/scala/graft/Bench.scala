@@ -2,6 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+
 /** Benchmark main: runs every declared query against
   * `SPARK_GRAFT_SF_DIR`, forcing full materialization through the
   * `noop` sink (a bare `.count()` lets Spark prune to zero columns /
@@ -40,7 +45,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
 
   /** One timed run of one query and the ledger counts it caused. */
-  private final case class Run(sec: Double, counts: MetricsLedger.Counts)
+  private[graft] final case class Run(sec: Double, counts: MetricsLedger.Counts)
 
   /** Fixed 40-query comparison core (r14 verdict item 9): the stdout
     * query map ROTATES — it carries the slowest queries that fit a
@@ -169,49 +174,8 @@ object Bench {
       (n, runs, medianOf(runs.map(_.sec)))
     }
 
-    def fmt(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    def obj(kvs: Seq[(String, String)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = obj(results.map { case (k, _, m) => k -> fmt(m.getOrElse(-1.0)) })
-    val allRuns = obj(results.map { case (k, rs, _) => k -> rs.map(r => fmt(r.sec)).mkString("[", ",", "]") })
-    val warmupJson = obj(names.map(n => n -> fmt(warmup(n).fold(-1.0)(_.sec))))
-    val errors = results.collect { case (k, _, None) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.flatMap(_._3).sum
-    // The driver keeps only a bounded stdout tail (~2000 chars), and the
-    // full per-query map can NEVER fit it: the query NAMES alone exceed
-    // the buffer at this board size. So the stdout line carries the
-    // slowest queries that fit a strict budget (the informative ones for
-    // perf review), an explicit omission count, and a pointer to the
-    // full committed record; bench_out.json always holds everything.
-    val lineBudget = 1700
-    val byCost = results.sortBy { case (_, _, m) => -m.getOrElse(-1.0) }
-    // core40 is a FIXED-denominator headline: if any member is
-    // missing from the board or errored (median None), a partial sum
-    // would silently shrink and read as a round-over-round speedup —
-    // the exact artifact the metric exists to prevent. Emit null plus
-    // the missing names instead of a wrong number.
-    val core40Missing = Core40.toSeq.sorted.filterNot(n =>
-      results.exists { case (k, _, m) => k == n && m.isDefined })
-    val core40Json =
-      if (core40Missing.isEmpty)
-        fmt(results.collect { case (k, _, Some(m)) if Core40(k) => m }.sum)
-      else "null,\"core40_missing\":" +
-        core40Missing.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fixed =
-      s""""metric":"total","value":${fmt(total)},"unit":"sec","core40":$core40Json,"errors":$errors,"sf":"$sfDir","detail":"bench_out.json""""
-    val picked = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = fixed.length + 60 // slack for the queries/omitted wrapper
-    byCost.foreach { case (k, _, m) =>
-      val entry = "\"" + k + "\":" + fmt(m.getOrElse(-1.0))
-      if (used + entry.length + 1 <= lineBudget) { picked += entry; used += entry.length + 1 }
-    }
-    val omitted = results.size - picked.size
-    println(s"{$fixed,\"queries\":${picked.mkString("{", ",", "}")},\"queries_omitted\":$omitted}")
-    val ledgerJson = obj(results.map { case (k, rs, _) => k -> rs.map(_.counts.json).mkString("[", ",", "]") })
-    val stallJson = obj(suspects.map { case (n, by) => n -> ("\"" + by + "\"") })
-    val detailJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","core40":$core40Json,"queries":$qs,"errors":$errors,"sf":"$sfDir","runs":$allRuns,"warmup":$warmupJson,"ledger":$ledgerJson,"stall_min_from":$stallJson}"""
+    val (line, detailJson) = report(results, warmup, suspects, sfDir)
+    println(line)
     Files.writeString(Paths.get("bench_out.json"), detailJson)
     // Per-core-count copy (r17 verdict item 2): the driver's 8-core
     // scaling leg runs after the 32-core leg and overwrote the only
@@ -220,5 +184,74 @@ object Bench {
       Paths.get(s"bench_out_c${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}.json"),
       detailJson)
     spark.stop()
+  }
+
+  /** Bench's two documents from one board run: the compact stdout line
+    * and the detail JSON for `bench_out.json`. `results` holds each
+    * query's (name, measured runs, median; None when every run failed),
+    * `warmup` each query's warmup run, `suspects` each stall suspect and
+    * the min ("warmup" or "measured") that fired it. Seconds carry 4
+    * decimals; a failed query reports -1 and is listed in "errors".
+    */
+  private[graft] def report(results: Seq[(String, Seq[Run], Option[Double])],
+      warmup: Map[String, Option[Run]], suspects: Seq[(String, String)],
+      sf: String): (String, String) = {
+    val json = JsonNodeFactory.instance
+    def sec(d: Double): JsonNode =
+      json.numberNode(BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).bigDecimal)
+    def obj[V](kvs: Seq[(String, V)])(value: V => JsonNode): ObjectNode = {
+      val o = json.objectNode()
+      kvs.foreach { case (k, v) => o.set[JsonNode](k, value(v)) }
+      o
+    }
+    def arr(vs: Seq[JsonNode]): JsonNode = json.arrayNode().addAll(vs.asJava)
+    val medians = results.map { case (k, _, m) => k -> m.getOrElse(-1.0) }
+    val errors = arr(results.collect { case (k, _, None) => json.textNode(k) })
+    // core40 is a FIXED-denominator headline: if any member is
+    // missing from the board or errored (median None), a partial sum
+    // would silently shrink and read as a round-over-round speedup —
+    // the exact artifact the metric exists to prevent. Emit null plus
+    // the missing names instead of a wrong number.
+    val core40Missing = Core40.toSeq.sorted.filterNot(n =>
+      results.exists { case (k, _, m) => k == n && m.isDefined })
+    def head(): ObjectNode = {
+      val o = json.objectNode().put("metric", "total")
+      o.set[JsonNode]("value", sec(results.flatMap(_._3).sum))
+      o.put("unit", "sec")
+      if (core40Missing.isEmpty)
+        o.set[JsonNode]("core40", sec(results.collect { case (k, _, Some(m)) if Core40(k) => m }.sum))
+      else {
+        o.putNull("core40")
+        o.set[JsonNode]("core40_missing", arr(core40Missing.map(json.textNode)))
+      }
+      o
+    }
+    // The driver keeps only a bounded stdout tail (~2000 chars), and the
+    // full per-query map can NEVER fit it: the query NAMES alone exceed
+    // the buffer at this board size. So the stdout line carries the
+    // slowest queries that fit a strict budget (the informative ones for
+    // perf review), an explicit omission count, and a pointer to the
+    // full committed record; bench_out.json always holds everything.
+    val lineBudget = 1700
+    val line = head()
+    line.set[JsonNode]("errors", errors)
+    line.put("sf", sf).put("detail", "bench_out.json")
+    var used = line.toString.length - 2 + 60 // slack for the queries/omitted wrapper
+    val picked = json.objectNode()
+    medians.sortBy(-_._2).foreach { case (k, m) =>
+      val entry = obj(Seq(k -> m))(sec).toString.length - 2 // "k":m
+      if (used + entry + 1 <= lineBudget) { picked.set[JsonNode](k, sec(m)); used += entry + 1 }
+    }
+    line.set[JsonNode]("queries", picked)
+    line.put("queries_omitted", results.size - picked.size)
+    val detail = head()
+    detail.set[JsonNode]("queries", obj(medians)(sec))
+    detail.set[JsonNode]("errors", errors)
+    detail.put("sf", sf)
+    detail.set[JsonNode]("runs", obj(results.map(r => r._1 -> r._2))(rs => arr(rs.map(r => sec(r.sec)))))
+    detail.set[JsonNode]("warmup", obj(results.map(r => r._1 -> warmup(r._1)))(w => sec(w.fold(-1.0)(_.sec))))
+    detail.set[JsonNode]("ledger", obj(results.map(r => r._1 -> r._2))(rs => arr(rs.map(_.counts.json))))
+    detail.set[JsonNode]("stall_min_from", obj(suspects)(json.textNode))
+    (line.toString, detail.toString)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graftbridge.PlanBridge
@@ -74,8 +75,9 @@ private[graft] object MetricsLedger {
       shuffleWrite - o.shuffleWrite, memSpill - o.memSpill,
       diskSpill - o.diskSpill)
 
-    def json: String =
-      s"""{"jobs":$jobs,"job_wall_s":$jobWallS,"task_s":${taskMs / 1e3},""" +
-        s""""shuffle_write":$shuffleWrite,"mem_spill":$memSpill,"disk_spill":$diskSpill}"""
+    def json: ObjectNode = JsonNodeFactory.instance.objectNode()
+      .put("jobs", jobs).put("job_wall_s", jobWallS).put("task_s", taskMs / 1e3)
+      .put("shuffle_write", shuffleWrite).put("mem_spill", memSpill)
+      .put("disk_spill", diskSpill)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
@@ -29,21 +31,16 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
+  }
+
+  /** `oracle_sql.json`: query name → DuckDB oracle SQL, one JSON object.
+    * Jackson escapes every control char (a raw tab or CR would make the
+    * driver's json.load fail and zero the correctness check). */
+  private[graft] def oracleJson(sql: Iterable[(String, String)]): String = {
+    val o = JsonNodeFactory.instance.objectNode()
+    sql.foreach { case (k, v) => o.put(k, v) }
+    o.toString
   }
 }

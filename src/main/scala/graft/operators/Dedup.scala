@@ -470,7 +470,10 @@ object Dedup {
     // the edge table is re-partitioned once to keep the per-round
     // label join aligned — one extra pass over state that is small by
     // construction exactly when the branch fires.
-    val nE = edges0.count()
+    val nE = try edges0.count() catch {
+      case t: Throwable => Loops.releaseCheckpoint(edges0); throw t
+    }
+    // the one-task result is lazy and reads edges0: it stays
     if (fitsOneTask(edges0, nE)) return componentsInOneTask(edges0, nE)
     // No mid-loop re-narrowing here (unlike the logN contraction,
     // r18): every fixpoint round shuffles the FULL label set plus the
@@ -479,12 +482,13 @@ object Dedup {
     // sized from the invariant edge table is right for every round.
     val nParts = Loops.adaptedPartitions(spark, nE)
     val edges =
-      if (nParts < spark.sessionState.conf.numShufflePartitions) {
-        val e = Loops.checkpoint(edges0.repartition(nParts, col("dst")))
-        Loops.releaseCheckpoint(edges0)
-        e
-      } else edges0
-    Loops.scope(spark, nE) { sc =>
+      if (nParts < spark.sessionState.conf.numShufflePartitions)
+        try Loops.checkpoint(edges0.repartition(nParts, col("dst")))
+        finally Loops.releaseCheckpoint(edges0)
+      else edges0
+    // the result reads only the last label checkpoint: the edge table
+    // is released once the loop returns or throws
+    try Loops.scope(spark, nE) { sc =>
       // Node set = distinct dst of the ALREADY dst-partitioned edge
       // table: exchange-free, and left LAZY — round 1 fuses the init
       // into its own job instead of paying a separate
@@ -521,7 +525,7 @@ object Dedup {
         labels = next.select("id", "label")
       }
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-    }
+    } finally Loops.releaseCheckpoint(edges)
   }
 
   /** O(log n)-round connected components via alternating

@@ -643,6 +643,20 @@ object Graph {
     */
   def personalizedPageRank(p: Prepared, seeds: DataFrame, iters: Int = 3,
       damping: Double = 0.85): DataFrame = {
+    val rounds = personalizedPageRankRounds(p, seeds, iters, damping)
+    // eager final materialization: the rounds execute inside the loop
+    // scope, and the caller reads one checkpointed O(reached) table
+    Loops.scope(p.ewd.sparkSession)(_.checkpoint(rounds))
+  }
+
+  /** The lazy rounds behind [[personalizedPageRank]] — internal so the
+    * plan tests and `tools.PlanDump` can inspect the per-round
+    * join/aggregate/broadcast structure (the public entry returns the
+    * checkpointed RESULT, whose plan is just an RDD scan). Collects the
+    * seed set when called.
+    */
+  private[graft] def personalizedPageRankRounds(p: Prepared, seeds: DataFrame,
+      iters: Int, damping: Double): DataFrame = {
     require(p.symmetric,
       "personalizedPageRank needs prepare(symmetric = true) — a node " +
         "with no out-edges would silently leak teleport mass")
@@ -665,24 +679,22 @@ object Graph {
       ids.toSeq.toDF("node")
     }
     val seedFlag = sd.withColumn("is_seed", lit(1))
-    Loops.scope(p.ewd.sparkSession) { sc =>
-      var r = sd.select(col("node"), (lit(1.0) / lit(nS)).as("r"))
-      for (_ <- 1 to iters) {
-        r = p.ewd
-          .join(r.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst").as("node"),
-            (col("r") / col("outdeg")).cast("decimal(30,15)").as("c"))
-          // keep seeds present even when no mass flows back to them yet
-          .union(sd.select(col("node"), lit(0).cast("decimal(30,15)").as("c")))
-          .groupBy("node").agg(sum("c").as("csum"))
-          .join(broadcast(seedFlag), Seq("node"), "left")
-          .select(col("node"),
-            (when(col("is_seed").isNotNull, lit(1.0 - damping) / lit(nS))
-              .otherwise(lit(0.0))
-              + lit(damping) * col("csum").cast("double")).as("r"))
-      }
-      sc.checkpoint(r)
+    var r = sd.select(col("node"), (lit(1.0) / lit(nS)).as("r"))
+    for (_ <- 1 to iters) {
+      r = p.ewd
+        .join(r.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("dst").as("node"),
+          (col("r") / col("outdeg")).cast("decimal(30,15)").as("c"))
+        // keep seeds present even when no mass flows back to them yet
+        .union(sd.select(col("node"), lit(0).cast("decimal(30,15)").as("c")))
+        .groupBy("node").agg(sum("c").as("csum"))
+        .join(broadcast(seedFlag), Seq("node"), "left")
+        .select(col("node"),
+          (when(col("is_seed").isNotNull, lit(1.0 - damping) / lit(nS))
+            .otherwise(lit(0.0))
+            + lit(damping) * col("csum").cast("double")).as("r"))
     }
+    r
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.

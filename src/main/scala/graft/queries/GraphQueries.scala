@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -61,7 +62,7 @@ object GraphQueries {
     org.apache.spark.sql.SparkSession,
     scala.collection.concurrent.TrieMap[String, Graph.Prepared]]()
 
-  private def tradeGraph(s: org.apache.spark.sql.SparkSession,
+  private[graft] def tradeGraph(s: org.apache.spark.sql.SparkSession,
       dir: String): Graph.Prepared = {
     val perSession = graphCache.synchronized {
       val existing = graphCache.get(s)
@@ -74,6 +75,24 @@ object GraphQueries {
     }
     perSession.getOrElseUpdate(s"trade_graph:$dir",
       Graph.prepare(tradeEdges(s, dir), symmetric = true))
+  }
+
+  /** The trusted seed set of g5 and g7: even (customer-side) node ids
+    * up to 50, i.e. customers with custkey ≤ 25 that appear in the
+    * graph. */
+  private[graft] def tradeSeeds(p: Graph.Prepared): DataFrame =
+    p.nodes.filter(col("node") % 2 === 0 && col("node") <= 50)
+
+  /** g5's answer from a PPR of the trade graph: the board passes
+    * [[Graph.personalizedPageRank]], `tools.PlanDump` its lazy rounds. */
+  private[graft] def pprTop(s: org.apache.spark.sql.SparkSession, dir: String,
+      ppr: (Graph.Prepared, DataFrame, Int, Double) => DataFrame): DataFrame = {
+    val p = tradeGraph(s, dir)
+    ppr(p, tradeSeeds(p), 3, 0.85)
+      .select(col("node"),
+        floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
+      .orderBy(col("rank_bp").desc, col("node"))
+      .limit(50)
   }
 
   /** Edge list + degree + node count, shared by both oracles. */
@@ -316,15 +335,7 @@ object GraphQueries {
         """
           |SELECT node, CAST(floor(CAST(1000000000 AS DOUBLE) * r) AS BIGINT) AS rank_bp
           |FROM r3 ORDER BY rank_bp DESC, node LIMIT 50""".stripMargin
-    }) { (s, dir) =>
-      val p = tradeGraph(s, dir)
-      val seeds = p.nodes.filter(col("node") % 2 === 0 && col("node") <= 50)
-      Graph.personalizedPageRank(p, seeds, iters = 3, damping = 0.85)
-        .select(col("node"),
-          floor(lit(1000000000.0) * col("r")).cast("long").as("rank_bp"))
-        .orderBy(col("rank_bp").desc, col("node"))
-        .limit(50)
-    },
+    }) { (s, dir) => pprTop(s, dir, Graph.personalizedPageRank) },
 
     // ---- label-propagation communities (determinized LPA) ----
     // Synchronous mode-label voting with min-label tie-breaks — a
@@ -406,8 +417,7 @@ object GraphQueries {
           |FROM hops GROUP BY hop ORDER BY hop""".stripMargin
     }) { (s, dir) =>
       val p = tradeGraph(s, dir)
-      val seeds = p.nodes.filter(col("node") % 2 === 0 && col("node") <= 50)
-      Graph.bfsHops(p, seeds, maxHops = 3)
+      Graph.bfsHops(p, tradeSeeds(p), maxHops = 3)
         .groupBy(col("hop").cast("long").as("hop"))
         .agg(count(lit(1)).as("n_nodes"),
           min("node").as("min_node"), max("node").as("max_node"))

@@ -1,5 +1,10 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
+
 import graft.Sessions
 
 /** sf-scaling curve for selected queries (a perf tool, outside the
@@ -31,6 +36,9 @@ object ProfileMain {
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
             "/root/testdata/sf0.1"))
+        val json = JsonNodeFactory.instance
+        def sec(t: Double): JsonNode = // 3 decimals
+          json.numberNode(BigDecimal(t).setScale(3, BigDecimal.RoundingMode.HALF_UP).bigDecimal)
         val rows = for (q <- qnames; sf <- sfs) yield {
           // Per-(query, sf) cache reset + one untimed warmup: a frame
           // cached for another sf can point at part files a static-path
@@ -46,15 +54,18 @@ object ProfileMain {
               .write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
           }
-          val line = f"""{"q":"$q","sf":"${sf.split('/').last}","min":${ts.min}%.3f,"median":${ts.sorted.apply(ts.size / 2)}%.3f,"runs":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
-          println(s"[curve] $line")
-          line
+          val row = json.objectNode().put("q", q).put("sf", sf.split('/').last)
+          row.set[JsonNode]("min", sec(ts.min))
+          row.set[JsonNode]("median", sec(ts.sorted.apply(ts.size / 2)))
+          row.set[JsonNode]("runs", json.arrayNode().addAll(ts.map(sec).asJava))
+          println(s"[curve] $row")
+          row
         }
         // Fresh rows only; tools/merge_curve.py does the (q, sf)-keyed
         // merge into curve_out.json (hand merges corrupted it in r11).
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("curve_new.json"),
-          rows.mkString("[", ",\n", "]"))
+          json.arrayNode().addAll(rows.asJava).toString)
       case _ => sys.error(s"unknown profile target: $what")
     }
     spark.stop()

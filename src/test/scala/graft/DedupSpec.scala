@@ -87,6 +87,30 @@ class DedupSpec extends AnyFunSuite {
     assert(got === (0L to 9L).map(_ -> 0L).toMap)
   }
 
+  test("duplicateClusters rounds keep only their result persisted, also when the pairs throw") {
+    // 495 paths of 5 nodes: 1,980 pairs, 3,960 edge rows of 32 B; at
+    // 20,000 B per partition they cannot finish in one task
+    val pairs = (0L until 495L).flatMap(c => (0L until 4L).map(i =>
+      (c * 5 + i, c * 5 + i + 1))).toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val key = "spark.graft.loop.targetPartitionBytes"
+    spark.conf.set(key, "20000")
+    try {
+      val before = persisted
+      val got = Dedup.duplicateClusters(pairs)
+      val added = persisted -- before
+      assert(added.size === 1, s"the rounds keep only the result's label checkpoint: $added")
+      assert(got.count() === 495L * 5)
+      assert(got.where(col("cluster_id") =!= col("doc_id") - col("doc_id") % 5).isEmpty)
+      added.foreach(sc.getPersistentRDDs(_).unpersist(blocking = false))
+      val boom = udf((x: Long) => if (x >= 0) throw new IllegalStateException("bad pair") else x)
+      val before2 = persisted
+      intercept[Exception](Dedup.duplicateClusters(pairs.withColumn("a_id", boom(col("a_id")))))
+      assert((persisted -- before2).isEmpty, "a failed call leaves no persisted RDD")
+    } finally spark.conf.unset(key)
+  }
+
   test("incrementalAdmit rejects exact/near corpus dups, admits new-only dups") {
     // corpus: ids 1,3 (odd). new batch: ids 2,4,6,8 (even).
     //  2 = exact copy of 1 → exact_dup

@@ -341,28 +341,20 @@ class GraphSpec extends AnyFunSuite {
     // public entry returns a checkpointed O(nodes) table
     assert(r.queryExecution.analyzed.isInstanceOf[
       org.apache.spark.sql.execution.LogicalRDD])
-    // re-derive the lazy loop body the way the entry builds it, to
-    // count operators: seed-flag joins must all be broadcasts (the
-    // seed table is control-plane), never cartesian/BNL
-    val sd = Seq(0L, 4L).toDF("node")
-    val lazyLoop = {
-      var rr = sd.select(col("node"), lit(0.5).as("r"))
-      for (_ <- 1 to 3) {
-        rr = p.ewd.join(rr.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("dst").as("node"),
-            (col("r") / col("outdeg")).cast("decimal(30,15)").as("c"))
-          .union(sd.select(col("node"), lit(0).cast("decimal(30,15)").as("c")))
-          .groupBy("node").agg(sum("c").as("csum"))
-          .join(broadcast(sd.withColumn("is_seed", lit(1))), Seq("node"), "left")
-          .select(col("node"), (lit(0.15 / 2) + lit(0.85) *
-            col("csum").cast("double")).as("r"))
-      }
-      rr
-    }
+    // the lazy rounds the entry checkpoints, to count operators:
+    // seed-flag joins must all be broadcasts (the seed table is
+    // control-plane), never cartesian/BNL
+    val lazyLoop = Graph.personalizedPageRankRounds(p, Seq(0L, 4L).toDF("node"),
+      iters = 3, damping = 0.85)
     val plan = lazyLoop.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), s"quadratic join:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"restart join not broadcast:\n$plan")
+    // the entry returns exactly the rounds' rows (3 hops from {0, 4}: 0..7)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => x.getLong(0) -> x.getDouble(1)).toSet
+    assert(rows(lazyLoop).map(_._1) === (0L to 7L).toSet)
+    assert(rows(lazyLoop) === rows(r))
   }
 
   test("labelPropagation: two cliques joined by a bridge separate") {

@@ -7,7 +7,7 @@
 # Steps, in order, fail-fast:
 #   1. sbt test                    — full ScalaTest suite
 #   2. graft.Verify + oracle gate  — every declared query vs DuckDB at sf
-#   3. graft.PlanAudit             — plan-smell sweep; FAILS if the set of
+#   3. graft.tools.PlanDump audit  — plan-smell sweep; FAILS if the set of
 #      flagged queries differs from the dispositioned set in PLANAUDIT.md,
 #      so the audit document can never silently lag the query board
 #      (round-9 lesson: d18 landed without an audit row).
@@ -26,8 +26,8 @@ SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR/verify" \
   >"$OUT_DIR/verify.log" 2>&1 || { tail -20 "$OUT_DIR/verify.log"; echo "FAIL: Verify"; exit 1; }
 python3 tools/check_correctness.py "$SF_DIR" "$OUT_DIR/verify" | tail -3
 
-echo "== 3/3 PlanAudit vs PLANAUDIT.md =="
-sbt -batch "runMain graft.PlanAudit $SF_DIR" 2>&1 | grep '^\[audit\]' \
+echo "== 3/3 PlanDump audit vs PLANAUDIT.md =="
+sbt -batch "runMain graft.tools.PlanDump audit $SF_DIR" 2>&1 | grep '^\[audit\]' \
   >"$OUT_DIR/audit.log" || true
 grep -q 'ERROR' "$OUT_DIR/audit.log" && { grep ERROR "$OUT_DIR/audit.log"; echo "FAIL: audit errors"; exit 1; }
 # every flagged query must have a disposition row in PLANAUDIT.md, and
